@@ -74,8 +74,9 @@ class EngineConfig:
     stem_tokens: bool = True
     description_truncate: int = 200  # reference: server.py:389
     # manifests at or under this model count derive degrees/PK-FK/postings
-    # driver-side (pure Python over the already-parsed rows) and register
-    # them as local relations — zero Spark jobs on the build path. Larger
+    # driver-side (pure Python over the already-parsed rows) and ship them
+    # to the JVM as LocalRelations (session.local_frame) — zero Spark jobs
+    # on the build path. Larger
     # manifests route through the distributed DataFrame derivations
     # (identical semantics, parity-pinned in tests/test_indexer.py).
     local_build_max_models: int = 20_000

@@ -39,6 +39,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ariadne_dbt_spark.session import local_frame
+
 __all__ = ["delta_snapshot", "read_delta", "delta_history", "write_delta", "export_table_to_delta", "import_delta_as_table", "delta_tail", "delta_checkpoint", "delta_log_cleanup"]
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
@@ -216,7 +218,7 @@ def read_delta(
     snap = delta_snapshot(table_path, version=version)
     schema = StructType.fromJson(json.loads(snap["schema_json"]))
     if not snap["files"]:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     paths = [
         os.path.join(table_path, unquote(f["path"])) for f in snap["files"]
     ]
@@ -607,7 +609,7 @@ def delta_tail(
                 adds.append(a["add"]["path"])
     schema = StructType.fromJson(json.loads(snap["schema_json"]))
     if not adds:
-        return spark.createDataFrame([], schema), latest
+        return local_frame(spark, [], schema), latest
     from urllib.parse import unquote as _uq
 
     reader = spark.read.schema(schema)

@@ -27,6 +27,12 @@ from ariadne_dbt_spark.config import EngineConfig
 from ariadne_dbt_spark.ingest import manifest as mf
 from ariadne_dbt_spark.functions.text import truncate_sql
 from ariadne_dbt_spark.operators.search import build_postings
+from ariadne_dbt_spark.session import local_frame
+
+#: schemas of the two search tables (the parse tables' are in schemas.py)
+POSTINGS_DDL = "unique_id string, field string, term string, tf long"
+DOCSTATS_DDL = "unique_id string, field string, dl long"
+
 
 def _derive_degrees_local(model_rows: list[dict], edge_rows: list[dict]) -> None:
     """Python twin of ``_compute_degrees`` for metadata-scale manifests:
@@ -161,6 +167,9 @@ class AriadneIndex:
     postings: DataFrame
     docstats: DataFrame
     config: EngineConfig = field(default_factory=EngineConfig)
+    #: row count of ``models`` (BM25's corpus size): the parsed row count
+    #: at build/refresh, counted once on first use otherwise
+    n_models: int | None = None
 
     # -- construction ------------------------------------------------------
     @classmethod
@@ -177,7 +186,7 @@ class AriadneIndex:
         man = mf.load_manifest(manifest_path)
 
         def df(rows, schema):
-            return spark.createDataFrame(rows, schema)
+            return local_frame(spark, rows, schema)
 
         model_rows = mf.parse_models(man)
         column_rows = mf.parse_columns(man)
@@ -188,10 +197,10 @@ class AriadneIndex:
         if local_build:
             # metadata-scale manifest: derive degrees/PK-FK/postings in
             # pure Python over the parsed rows BEFORE creating any
-            # DataFrame — every index table becomes a local relation and
-            # the build runs zero Spark jobs. The distributed derivations
-            # below handle larger manifests with identical semantics
-            # (parity pinned in tests/test_indexer.py).
+            # DataFrame — every index table is a JVM LocalRelation
+            # (local_frame) and the build runs zero Spark jobs. The
+            # distributed derivations below handle larger manifests with
+            # identical semantics (parity pinned in tests/test_indexer.py).
             _derive_degrees_local(model_rows, edge_rows)
             _derive_pk_fk_local(column_rows, test_rows)
             posting_rows, docstat_rows = _build_postings_local(
@@ -220,15 +229,10 @@ class AriadneIndex:
             exposures=exposures,
             edges=edges,
             index_metadata=meta,
-            postings=spark.createDataFrame(
-                posting_rows if local_build else [],
-                "unique_id string, field string, term string, tf long",
-            ),
-            docstats=spark.createDataFrame(
-                docstat_rows if local_build else [],
-                "unique_id string, field string, dl long",
-            ),
+            postings=df(posting_rows if local_build else [], POSTINGS_DDL),
+            docstats=df(docstat_rows if local_build else [], DOCSTATS_DDL),
             config=config,
+            n_models=len(model_rows),
         )
         if local_build:
             if catalog_path:
@@ -251,7 +255,7 @@ class AriadneIndex:
             if run_results_path:
                 idx.enrich_from_run_results(run_results_path)
             # only the DERIVED tables carry deep plans worth truncating;
-            # the parse tables are already local relations — skipping
+            # the parse tables are LocalRelations — skipping
             # their checkpoint saves one Spark job each (postings is
             # checkpointed inside _build_postings; docstats is a shallow
             # agg over the checkpointed postings, no job needed)
@@ -360,7 +364,7 @@ class AriadneIndex:
         dropped = sorted(changed | removed)
 
         def df(rows, schema):
-            return spark.createDataFrame(rows, schema)
+            return local_frame(spark, rows, schema)
 
         local_build = len(model_rows) <= config.local_build_max_models
         if local_build:
@@ -391,14 +395,11 @@ class AriadneIndex:
             postings=kept_postings,
             docstats=kept_docstats,
             config=config,
+            n_models=len(model_rows),
         )
         if local_build:
-            idx.postings = kept_postings.unionByName(
-                df(posting_rows, "unique_id string, field string, term string, tf long")
-            )
-            idx.docstats = kept_docstats.unionByName(
-                df(docstat_rows, "unique_id string, field string, dl long")
-            )
+            idx.postings = kept_postings.unionByName(df(posting_rows, POSTINGS_DDL))
+            idx.docstats = kept_docstats.unionByName(df(docstat_rows, DOCSTATS_DDL))
         else:
             old_parts = spark.conf.get("spark.sql.shuffle.partitions")
             spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -427,6 +428,12 @@ class AriadneIndex:
         }
         return idx
 
+    def model_count(self) -> int:
+        """Row count of ``models``, without a Spark job once known."""
+        if self.n_models is None:
+            self.n_models = self.models.count()
+        return self.n_models
+
     def local(self):
         """Driver-local snapshot for latency-critical serving (built
         lazily, once per index — see operators/local_cache.py)."""
@@ -451,7 +458,7 @@ class AriadneIndex:
         # an uncut lineage blows Python's recursion limit during plan
         # conversion. The tables are small (≤10k models) so materializing
         # them eagerly is the right trade at any scale. Tables whose plan
-        # is already a leaf (local relation / fresh scan) can be skipped
+        # is already a leaf (LocalRelation / fresh scan) can be skipped
         # via the `tables` selector.
         for t in tables:
             setattr(self, t, getattr(self, t).localCheckpoint(eager=True))
@@ -534,9 +541,7 @@ class AriadneIndex:
         refresh — the caller merges the reused rows back)."""
         models = self.models
         if only_ids is not None:
-            ids_df = self.spark.createDataFrame(
-                [(u,) for u in only_ids], "unique_id string"
-            )
+            ids_df = local_frame(self.spark, [(u,) for u in only_ids], "unique_id string")
             models = models.join(F.broadcast(ids_df), "unique_id", "left_semi")
         col_names = self.columns.groupBy(F.col("model_id").alias("unique_id")).agg(
             F.concat_ws(" ", F.collect_list("name")).alias("column_names")
@@ -614,7 +619,8 @@ class AriadneIndex:
                     "_data_type": str(c.get("type") or ""),
                 })
         if stat_rows:
-            sdf = self.spark.createDataFrame(
+            sdf = local_frame(
+                self.spark,
                 stat_rows,
                 "unique_id string, _row_count long, _bytes long, _last_modified string",
             )
@@ -626,8 +632,8 @@ class AriadneIndex:
                 .withColumnRenamed("_last_modified", "last_modified")
             )
         if col_rows:
-            cdf = self.spark.createDataFrame(
-                col_rows, "unique_id string, _col_lower string, _data_type string"
+            cdf = local_frame(
+                self.spark, col_rows, "unique_id string, _col_lower string, _data_type string"
             )
             cols = self.columns
             self.columns = (
@@ -673,8 +679,8 @@ class AriadneIndex:
             })
         if not rows:
             return
-        rdf = self.spark.createDataFrame(
-            rows, "unique_id string, _status string, _exec double, _failures int"
+        rdf = local_frame(
+            self.spark, rows, "unique_id string, _status string, _exec double, _failures int"
         )
         self.tests = (
             self.tests.drop("last_status", "last_execution_time", "last_failures")
@@ -695,4 +701,5 @@ class AriadneIndex:
         kw = {t: spark.read.parquet(os.path.join(out_dir, t)) for t in TABLES}
         idx = cls(spark=spark, config=config or EngineConfig(), **kw)
         idx.cache()
+        idx.n_models = idx.models.count()
         return idx

@@ -23,6 +23,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ariadne_dbt_spark.session import local_frame
+
 _AGG_FNS = ("sum", "count", "avg", "min", "max", "approx_count_distinct", "collect_list")
 
 _REF = re.compile(r"\{\{\s*ref\(\s*['\"](\w+)['\"]\s*\)\s*\}\}")
@@ -174,7 +176,7 @@ def build_column_lineage(spark: SparkSession, models: list[dict]) -> DataFrame:
     rows = []
     for m in models:
         rows.extend(extract_column_lineage(m["name"], m.get("raw_code") or ""))
-    return spark.createDataFrame(rows or [], _LINEAGE_SCHEMA)
+    return local_frame(spark, rows, _LINEAGE_SCHEMA)
 
 
 def column_lineage_df(

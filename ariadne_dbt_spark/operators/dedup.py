@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ariadne_dbt_spark.functions.text import tokenize
 from ariadne_dbt_spark.operators import epoch_store
 from ariadne_dbt_spark.operators.text import fingerprint_md5
+from ariadne_dbt_spark.session import local_frame
 
 # deterministic MinHash parameters (Carter-Wegman style h_i(x) = a_i*x+b_i mod p).
 # p is the 31-bit Mersenne prime so a*h ≤ 2^62 never overflows a signed
@@ -1747,7 +1748,7 @@ def delete_from_shingle_index(spark, index_dir: str, ids: list | DataFrame) -> i
     if isinstance(ids, DataFrame):
         id_df = ids.select(F.col(ids.columns[0]).cast("long").alias("id")).distinct()
     else:
-        id_df = spark.createDataFrame([(int(i),) for i in ids], "id long").distinct()
+        id_df = local_frame(spark, [(int(i),) for i in ids], "id long").distinct()
     n = id_df.count()
     id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
     return n

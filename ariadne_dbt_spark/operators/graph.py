@@ -23,6 +23,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ariadne_dbt_spark.session import local_frame
+
 UPSTREAM = "upstream"
 DOWNSTREAM = "downstream"
 
@@ -129,27 +131,12 @@ def _bfs_local(
         ((u, d) for u, d in dist.items() if not (exclude_start and u in set(starts))),
         key=lambda t: (t[1], t[0]),
     )
-    # pandas + Arrow → LocalRelation: consumed JVM-side with no
-    # parallelize job and no Python-worker spin-up (the plain-list path
-    # costs ~1s of worker startup the first time a session touches it)
-    import pandas as pd
-
     if with_ord:
         # rows are already in (distance, id) order — the rank costs a
         # Python enumerate, zero extra Spark work
         ranked = [(i + 1, u, d) for i, (u, d) in enumerate(rows)]
-        schema = "ord long, unique_id string, distance int"
-        if not ranked:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(
-            pd.DataFrame(ranked, columns=["ord", "unique_id", "distance"]), schema
-        )
-    schema = "unique_id string, distance int"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["unique_id", "distance"]), schema
-    )
+        return local_frame(spark, ranked, "ord long, unique_id string, distance int")
+    return local_frame(spark, rows, "unique_id string, distance int")
 
 
 def _bfs_distributed(
@@ -178,7 +165,7 @@ def _bfs_distributed(
     spark = edges.sparkSession
     src, dst = ("parent_id", "child_id") if direction == DOWNSTREAM else ("child_id", "parent_id")
     if not isinstance(start_ids, DataFrame):
-        start_ids = spark.createDataFrame([(s,) for s in start_ids], "unique_id string")
+        start_ids = local_frame(spark, [(s,) for s in start_ids], "unique_id string")
     visited = start_ids.select("unique_id").distinct().withColumn("distance", F.lit(0)).cache()
     frontier = visited
     intermediates = [visited]

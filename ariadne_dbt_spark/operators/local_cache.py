@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 
 from ariadne_dbt_spark.config import HYBRID_WEIGHTS, LAYER_BOOSTS
 from ariadne_dbt_spark.functions.text import tokenize_query
-from ariadne_dbt_spark.operators.search import B, DEFAULT_FIELD_WEIGHTS, K1
+from ariadne_dbt_spark.operators.search import B, DEFAULT_FIELD_WEIGHTS, K1, rounded_score
 
 
 @dataclass
@@ -109,6 +109,13 @@ class LocalIndexCache:
                     scores[uid] = scores.get(uid, 0.0) + idf * tf_norm * w
         return scores
 
+    def bm25_candidates(self, query: str, n: int) -> list[tuple[str, float]]:
+        """The top ``n`` ``(unique_id, bm25_score)`` hits, cut in
+        search.bm25's order: the score rounded to 1e-9, then unique_id, so
+        a tie whose sums differ in the last bits keeps the same members."""
+        raw = self.bm25(query)
+        return sorted(raw.items(), key=lambda kv: (-rounded_score(kv[1]), kv[0]))[:n]
+
     def search(
         self,
         query: str,
@@ -122,8 +129,7 @@ class LocalIndexCache:
         # effective 2×limit, cut the ranked list there, THEN layer-filter
         limit = max(1, min(int(limit), 50))
         eff_limit = 2 * limit if layer else limit
-        raw = self.bm25(query)
-        candidates = sorted(raw.items(), key=lambda kv: (-kv[1], kv[0]))[: 4 * eff_limit]
+        candidates = self.bm25_candidates(query, 4 * eff_limit)
         if not candidates:  # T4: LIKE fallback, centrality-ranked
             q = query.lower().strip()
             fall = [

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ariadne_dbt_spark.config import HYBRID_WEIGHTS, LAYER_BOOSTS
 from ariadne_dbt_spark.ingest.indexer import AriadneIndex
 from ariadne_dbt_spark.operators.search import bm25, hybrid_rerank
+from ariadne_dbt_spark.session import local_frame
 
 _MODEL_COLS = (
     "unique_id",
@@ -51,11 +52,10 @@ def search_models(
     calls ``search(limit=limit*2)`` → layer filter → ``[:limit]``)."""
     limit = max(1, min(int(limit), index.config.search_limit_cap))
     eff_limit = 2 * limit if layer else limit
-    n_docs = index.models.count()
     hits = bm25(
         index.postings,
         index.docstats,
-        n_docs,
+        index.model_count(),
         query,
         stem_query=index.config.stem_tokens,
     )
@@ -74,7 +74,7 @@ def search_models(
             .withColumn("bm25_score", F.lit(0.5))
         )
     if exclude_ids:
-        ex = index.spark.createDataFrame([(e,) for e in exclude_ids], "unique_id string")
+        ex = local_frame(index.spark, [(e,) for e in exclude_ids], "unique_id string")
         cand = cand.join(F.broadcast(ex), "unique_id", "left_anti")
 
     ranked = hybrid_rerank(

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ariadne_dbt_spark.session import local_frame
+
 ASSET_SCHEMA = T.StructType([
     T.StructField("asset_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),  # image|audio|video
@@ -73,7 +75,7 @@ def synthetic_assets(spark, n: int = 32) -> DataFrame:
             "sample_rate": 16000 if kind == "audio" else None,
         }
         rows.append((i, kind, bytearray(payload), meta))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return local_frame(spark, rows, ASSET_SCHEMA)
 
 
 def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ariadne_dbt_spark.ingest.indexer import AriadneIndex
+from ariadne_dbt_spark.session import local_frame
 
 
 def project_stats(index: AriadneIndex) -> dict:
@@ -183,8 +184,6 @@ def profile_table(df, columns: list[str]):
             F.max(F.col(c).cast("string")).alias(f"{c}__max"),
         ]
     wide = df.agg(*aggs)
-    import pandas as pd
-
     row = wide.toPandas().iloc[0]
     out = []
     for c in columns:
@@ -195,10 +194,7 @@ def profile_table(df, columns: list[str]):
             (c, "max", None if row[f"{c}__max"] is None else str(row[f"{c}__max"])),
         ]
     spark = df.sparkSession
-    return spark.createDataFrame(
-        pd.DataFrame(out, columns=["column", "metric", "value"]),
-        "column string, metric string, value string",
-    )
+    return local_frame(spark, out, "column string, metric string, value string")
 
 
 def k_anonymity_report(

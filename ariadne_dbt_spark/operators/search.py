@@ -22,10 +22,13 @@ score — see SURVEY §7 "hard parts").
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ariadne_dbt_spark.functions.text import tokenize, tokenize_query
+from ariadne_dbt_spark.session import local_frame
 
 K1 = 1.2
 B = 0.75
@@ -143,7 +146,7 @@ def bm25(
     spark = postings.sparkSession
     terms = tokenize_query(query_text, stem=stem_query)
     if not terms:
-        return spark.createDataFrame([], "unique_id string, bm25_score double")
+        return local_frame(spark, [], "unique_id string, bm25_score double")
     weights = field_weights or DEFAULT_FIELD_WEIGHTS
 
     tset = sorted(set(terms))
@@ -211,7 +214,26 @@ def bm25(
         .groupBy("unique_id")
         .agg(F.sum("term_score").alias("bm25_score"))
     )
-    return scored.orderBy(F.desc("bm25_score"), "unique_id")
+    return scored.orderBy(F.desc(score_order_key("bm25_score")), "unique_id")
+
+
+def score_order_key(col: str):
+    """The BM25 score rounded to 1e-9, as ``floor(score·1e9 + 0.5)`` — the
+    order key for ranking and cutting candidate lists.
+
+    Two scoring paths sum the same terms in different orders, so an exact
+    tie can come back differing in the last bits; ordering on the raw
+    score would then skip the ``unique_id`` tie-break and each path would
+    keep a different member of a tie straddling a cut. The Spark side and
+    :meth:`LocalIndexCache.bm25_candidates` compute this key with the same
+    IEEE operations (:func:`rounded_score`), so they agree bit for bit.
+    Returned scores stay unrounded."""
+    return F.floor(F.col(col) * F.lit(1e9) + F.lit(0.5))
+
+
+def rounded_score(score: float) -> int:
+    """Driver-side twin of :func:`score_order_key`."""
+    return math.floor(score * 1e9 + 0.5)
 
 
 def positional_postings(
@@ -303,8 +325,10 @@ def hybrid_rerank(
     spark = candidates.sparkSession
     out = minmax_normalize(candidates, "bm25_score", "norm_bm25")
     if layer_weights:
-        lw = spark.createDataFrame(
-            [(k, float(v)) for k, v in layer_weights.items()], "layer string, layer_boost double"
+        lw = local_frame(
+            spark,
+            [(k, float(v)) for k, v in layer_weights.items()],
+            "layer string, layer_boost double",
         )
         out = out.join(F.broadcast(lw), "layer", "left").withColumn(
             "layer_boost", F.coalesce("layer_boost", F.lit(0.0))
@@ -361,12 +385,10 @@ def bm25_batch(
         for t in tokenize_query(text, stem=stem_query):
             qt_rows.append((str(qid), t))
     if not qt_rows:
-        return spark.createDataFrame(
-            [], "query_id string, unique_id string, bm25_score double"
+        return local_frame(
+            spark, [], "query_id string, unique_id string, bm25_score double"
         )
-    qterms = spark.createDataFrame(
-        sorted(set(qt_rows)), "query_id string, term string"
-    )
+    qterms = local_frame(spark, sorted(set(qt_rows)), "query_id string, term string")
     all_terms = sorted({t for _, t in qt_rows})
     matched = postings.where(F.col("term").isin(all_terms))
     if dfreq is not None:
@@ -427,11 +449,12 @@ def bm25_batch(
         .groupBy("query_id", "unique_id")
         .agg(F.sum("term_score").alias("bm25_score"))
     )
+    order = (F.desc(score_order_key("bm25_score")), "unique_id")
     if k is None:
-        return scored.orderBy("query_id", F.desc("bm25_score"), "unique_id")
+        return scored.orderBy("query_id", *order)
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("bm25_score"), "unique_id")
+    w = Window.partitionBy("query_id").orderBy(*order)
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .where(F.col("rank") <= int(k))

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from ariadne_dbt_spark.operators import epoch_store
 from ariadne_dbt_spark.operators.search import build_postings
+from ariadne_dbt_spark.session import local_frame
 
 _POSTINGS_SCHEMA = "unique_id string, field string, term string, tf bigint, gen bigint"
 _DOCSTATS_SCHEMA = "unique_id string, field string, dl bigint, gen bigint"
@@ -224,7 +225,7 @@ def build_search_index(
     _append(docstats, out_dir, "docstats")
     _append(docids, out_dir, "docids")
     # empty tombstone log with a fixed schema so readers never branch
-    _append(spark.createDataFrame([], _TOMB_SCHEMA), out_dir, "tombstones")
+    _append(local_frame(spark, [], _TOMB_SCHEMA), out_dir, "tombstones")
     field_stats = _agg_stats(spark.read.parquet(os.path.join(out_dir, "docstats")))
     meta = {
         "gen": 0,
@@ -358,9 +359,7 @@ def delete_from_search_index(
     if isinstance(ids, DataFrame):
         id_df = ids.select(F.col(ids.columns[0]).cast("string").alias("unique_id"))
     else:
-        id_df = spark.createDataFrame(
-            [(str(i),) for i in ids], "unique_id string"
-        )
+        id_df = local_frame(spark, [(str(i),) for i in ids], "unique_id string")
     id_df = id_df.distinct()
 
     tomb = _tomb_max(spark, index_dir, meta)
@@ -460,7 +459,7 @@ def compact_search_index(
         d.write.mode("overwrite").parquet(
             epoch_store.data_dir(index_dir, name, new_epoch)
         )
-    spark.createDataFrame([], _TOMB_SCHEMA).write.mode("overwrite").parquet(
+    local_frame(spark, [], _TOMB_SCHEMA).write.mode("overwrite").parquet(
         epoch_store.data_dir(index_dir, "tombstones", new_epoch)
     )
     # THE commit: everything above is invisible until this one replace

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ariadne_dbt_spark.operators import epoch_store
+from ariadne_dbt_spark.session import local_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1103,7 +1104,7 @@ def ivf_delete(spark, index_dir: str, ids: list) -> int:
     drive the RETRAIN decision, not result correctness."""
     import os
 
-    id_df = spark.createDataFrame([(int(i),) for i in ids], "vec_id long").distinct()
+    id_df = local_frame(spark, [(int(i),) for i in ids], "vec_id long").distinct()
     n = id_df.count()
     id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
     return n
@@ -1839,7 +1840,7 @@ def ivf_pq_delete(spark, index_dir: str, ids: list) -> int:
     anti-join, fold with :func:`ivf_pq_compact`)."""
     import os
 
-    id_df = spark.createDataFrame([(int(i),) for i in ids], "vec_id long").distinct()
+    id_df = local_frame(spark, [(int(i),) for i in ids], "vec_id long").distinct()
     n = id_df.count()
     id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
     return n

@@ -72,6 +72,7 @@ from ariadne_dbt_spark.operators.epoch_store import (
     sweep_stale_epochs,
     _walk_parquet,
 )
+from ariadne_dbt_spark.session import local_frame
 
 __all__ = [
     "DATA_NAME",
@@ -890,7 +891,7 @@ def table_changes_log(
         )
     if not frames:
         schema = read_table(spark, table_dir).schema
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         return empty.withColumn("_change_type", F.lit("")).withColumn(
             "_commit_epoch", F.lit(0).cast("int")
         ).limit(0)
@@ -1080,7 +1081,7 @@ def read_table_for_keys(
     if schema is None:
         schema = _read_epoch_dir(spark, live).schema
     if not touched:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     reader = spark.read.schema(schema)
     if pcols:
         reader = reader.option("basePath", live)
@@ -1361,7 +1362,7 @@ def merge_table(
                 reader = reader.option("basePath", live)
             tdf = reader.parquet(*touched)
         else:
-            tdf = spark.createDataFrame([], target_schema)
+            tdf = local_frame(spark, [], target_schema)
         # persisted like src: the touched read feeds the match count,
         # the keep/winner joins, the constraint agg, and the staged
         # write — without it each action re-reads the parquet
@@ -1706,7 +1707,7 @@ def _rewrite_where(
             reader = reader.option("basePath", live)
         tdf = reader.parquet(*touched)
     else:
-        tdf = spark.createDataFrame([], schema)
+        tdf = local_frame(spark, [], schema)
     # persisted: the touched read feeds the hit count, the rewrite, the
     # constraint agg, and the staged write
     tdf = tdf.persist()

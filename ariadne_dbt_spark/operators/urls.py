@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ariadne_dbt_spark.session import local_frame
+
 __all__ = [
     "url_host",
     "registered_domain",
@@ -100,9 +102,7 @@ def filter_blocked_domains(
     megabytes); the corpus side never shuffles."""
     spark = df.sparkSession
     if not isinstance(blocked, DataFrame):
-        import pandas as pd
-
-        blocked = spark.createDataFrame(pd.DataFrame({"domain": list(blocked)}))
+        blocked = local_frame(spark, [(d,) for d in blocked], "domain string")
     tagged = df.withColumn("_dom", registered_domain(url_col))
     out = tagged.join(
         F.broadcast(blocked.select(F.col("domain").alias("_dom"))),

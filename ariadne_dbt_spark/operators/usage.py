@@ -17,6 +17,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ariadne_dbt_spark.session import local_frame
+
 
 class UsageLog:
     def __init__(self, spark: SparkSession, log_dir: str):
@@ -51,7 +53,8 @@ class UsageLog:
             int(token_estimate),
             int(duration_ms),
         )]
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             row,
             "id long, ts timestamp, tool_name string, task_text string, intent string,"
             " focus_model string, pivot_count int, token_estimate int, duration_ms int",
@@ -73,8 +76,8 @@ class UsageLog:
             notes or "",
             datetime.now(timezone.utc).replace(tzinfo=None),
         )]
-        df = self.spark.createDataFrame(
-            row, "log_id long, rating int, notes string, rated_at timestamp"
+        df = local_frame(
+            self.spark, row, "log_id long, rating int, notes string, rated_at timestamp"
         )
         df.write.mode("append").parquet(os.path.join(self.log_dir, "_ratings"))
 
@@ -197,7 +200,8 @@ class SessionEventLog:
 
         ts = ts or datetime.now(timezone.utc).replace(tzinfo=None)
         eid = int(time.time_ns())
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             [(eid, session_id, event_type, tool_name, _json.dumps(payload or {}), ts)],
             self.SCHEMA,
         )

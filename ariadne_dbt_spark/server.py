@@ -239,7 +239,7 @@ class ToolServer:
         self.builder = CapsuleBuilder(self.index)
         return {
             "status": "ok",
-            "models": self.index.models.count(),
+            "models": self.index.model_count(),
             "delta": self.index.last_refresh_stats,
         }
 

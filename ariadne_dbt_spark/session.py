@@ -2,16 +2,21 @@
 
 Local testing runs ``local[$SPARK_GRAFT_CPUS]``; the same configuration
 keys are what we would set on a 1000-executor cluster (AQE on, shuffle
-partitions sized to the parallelism, Arrow enabled for the few pandas-UDF
+partitions sized to the parallelism, Arrow enabled for the pandas-UDF
 paths). Every query module accepts an externally-built session, so the
 driver harness can inject its own.
+
+Driver-side rows become DataFrames through :func:`local_frame` only: it
+ships them to the JVM as one Arrow table, so the frame is a JVM
+``LocalRelation`` and scanning it never starts a Python worker.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -28,6 +33,18 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
+
+
+def _driver_memory() -> str:
+    """Half the host's RAM, between 1g and 64g. The driver JVM's heap
+    grows toward its maximum under bursts of allocation; a 64g maximum
+    on a 16 GB host let the test suite's JVM reach 15.8 GB and be killed
+    by the kernel's OOM killer, taking the whole session down."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "64g"
+    return f"{min(64, max(1, ram // 2**31))}g"
 
 
 def get_spark(app_name: str = "ariadne-dbt-spark") -> SparkSession:
@@ -78,12 +95,59 @@ def get_spark(app_name: str = "ariadne-dbt-spark") -> SparkSession:
             "spark.sql.dataFrameQueryContext.enabled",
             os.environ.get("SPARK_GRAFT_DF_QUERY_CONTEXT", "false"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _driver_memory()))
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows``, held in the JVM as a
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` is ``parallelize`` plus an
+    identity ``map`` in PySpark 4: the frame is a ``LogicalRDD`` over a
+    PythonRDD, and every job that scans it forks Python workers to
+    unpickle the same rows again. An Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) becomes a ``LocalRelation`` instead: planned and scanned in
+    the JVM, and collected without a job when nothing above it shuffles.
+
+    ``rows`` are tuples, Rows or dicts (matched by field name); ``schema``
+    is a StructType or a DDL string. Each row passes the same type
+    verifier and converter the list path applies, so a wrong Python type,
+    a float in an integral column or a None in a non-nullable field still
+    raise rather than being coerced by Arrow. Converted rows are in
+    Spark's internal form (timestamps as UTC micros, dates as days, maps
+    as dicts, structs as tuples), which Arrow takes without a cast.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        _create_converter,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(schema, T.StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(convert(row)))
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*internal)) if internal else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ariadne_dbt_spark.operators import epoch_store
+from ariadne_dbt_spark.session import local_frame
 from ariadne_dbt_spark.operators.search_index import (
     build_search_index,
     compact_search_index,
@@ -66,7 +67,7 @@ def search_index_ingest_stream(
     is rebuild-identical by construction (epoch flip of the same live
     rows), so served results are unchanged."""
     if not os.path.exists(os.path.join(index_dir, "meta.json")):
-        empty = spark.createDataFrame([], f"{id_col} long, {text_col} string")
+        empty = local_frame(spark, [], f"{id_col} long, {text_col} string")
         build_search_index(empty, id_col, {text_col: text_col}, index_dir)
     applied: list[int] = []
 
