@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +100,49 @@ def _doc_signature(m: dict, col_names: list[str], config: EngineConfig) -> str:
     return hashlib.md5(payload.encode()).hexdigest()
 
 
+def _doc_signatures(
+    model_rows: Iterable[dict], column_rows: Iterable[dict], config: EngineConfig
+) -> dict[str, str]:
+    """``_doc_signature`` of every model, keyed by unique_id."""
+    cols_by_model: dict[str, list[str]] = {}
+    for c in column_rows:
+        cols_by_model.setdefault(c["model_id"], []).append(c["name"])
+    return {
+        m["unique_id"]: _doc_signature(m, cols_by_model.get(m["unique_id"], []), config)
+        for m in model_rows
+    }
+
+
+#: schema of each table parsed from the manifest
+PARSE_SCHEMAS = {
+    "models": schemas.MODELS,
+    "columns": schemas.COLUMNS,
+    "sources": schemas.SOURCES,
+    "source_columns": schemas.SOURCE_COLUMNS,
+    "tests": schemas.TESTS,
+    "macros": schemas.MACROS,
+    "exposures": schemas.EXPOSURES,
+    "edges": schemas.EDGES,
+    "index_metadata": schemas.METADATA,
+}
+
+
+def _parse_tables(man: dict) -> dict[str, list[dict]]:
+    """The rows of every table in ``PARSE_SCHEMAS``."""
+    src_rows, src_col_rows = mf.parse_sources(man)
+    return {
+        "models": mf.parse_models(man),
+        "columns": mf.parse_columns(man),
+        "sources": src_rows,
+        "source_columns": src_col_rows,
+        "tests": mf.parse_tests(man),
+        "macros": mf.parse_macros(man),
+        "exposures": mf.parse_exposures(man),
+        "edges": mf.parse_edges(man),
+        "index_metadata": mf.parse_metadata(man),
+    }
+
+
 def _build_postings_local(
     model_rows: list[dict], column_rows: list[dict], config: EngineConfig
 ) -> tuple[list[tuple], list[tuple]]:
@@ -134,19 +178,7 @@ def _build_postings_local(
     return postings, docstats
 
 
-TABLES = (
-    "models",
-    "columns",
-    "sources",
-    "source_columns",
-    "tests",
-    "macros",
-    "exposures",
-    "edges",
-    "index_metadata",
-    "postings",
-    "docstats",
-)
+TABLES = (*PARSE_SCHEMAS, "postings", "docstats")
 
 
 @dataclass
@@ -183,15 +215,8 @@ class AriadneIndex:
         config: EngineConfig | None = None,
     ) -> "AriadneIndex":
         config = config or EngineConfig()
-        man = mf.load_manifest(manifest_path)
-
-        def df(rows, schema):
-            return local_frame(spark, rows, schema)
-
-        model_rows = mf.parse_models(man)
-        column_rows = mf.parse_columns(man)
-        test_rows = mf.parse_tests(man)
-        edge_rows = mf.parse_edges(man)
+        rows = _parse_tables(mf.load_manifest(manifest_path))
+        model_rows = rows["models"]
 
         local_build = len(model_rows) <= config.local_build_max_models
         if local_build:
@@ -201,36 +226,19 @@ class AriadneIndex:
             # (local_frame) and the build runs zero Spark jobs. The
             # distributed derivations below handle larger manifests with
             # identical semantics (parity pinned in tests/test_indexer.py).
-            _derive_degrees_local(model_rows, edge_rows)
-            _derive_pk_fk_local(column_rows, test_rows)
+            _derive_degrees_local(model_rows, rows["edges"])
+            _derive_pk_fk_local(rows["columns"], rows["tests"])
             posting_rows, docstat_rows = _build_postings_local(
-                model_rows, column_rows, config
+                model_rows, rows["columns"], config
             )
-
-        models = df(model_rows, schemas.MODELS)
-        columns = df(column_rows, schemas.COLUMNS)
-        src_rows, src_col_rows = mf.parse_sources(man)
-        sources = df(src_rows, schemas.SOURCES)
-        source_columns = df(src_col_rows, schemas.SOURCE_COLUMNS)
-        tests = df(test_rows, schemas.TESTS)
-        macros = df(mf.parse_macros(man), schemas.MACROS)
-        exposures = df(mf.parse_exposures(man), schemas.EXPOSURES)
-        edges = df(edge_rows, schemas.EDGES)
-        meta = df(mf.parse_metadata(man), schemas.METADATA)
+        else:
+            posting_rows, docstat_rows = [], []
 
         idx = cls(
             spark=spark,
-            models=models,
-            columns=columns,
-            sources=sources,
-            source_columns=source_columns,
-            tests=tests,
-            macros=macros,
-            exposures=exposures,
-            edges=edges,
-            index_metadata=meta,
-            postings=df(posting_rows if local_build else [], POSTINGS_DDL),
-            docstats=df(docstat_rows if local_build else [], DOCSTATS_DDL),
+            **{t: local_frame(spark, r, PARSE_SCHEMAS[t]) for t, r in rows.items()},
+            postings=local_frame(spark, posting_rows, POSTINGS_DDL),
+            docstats=local_frame(spark, docstat_rows, DOCSTATS_DDL),
             config=config,
             n_models=len(model_rows),
         )
@@ -239,6 +247,9 @@ class AriadneIndex:
                 idx.enrich_from_catalog(catalog_path)
             if run_results_path:
                 idx.enrich_from_run_results(run_results_path)
+            if not (catalog_path or run_results_path):
+                # the serving snapshot is these same rows (see ``local``)
+                idx._local_rows = (rows, posting_rows, docstat_rows)
             return idx
         # distributed path: the index tables are bigger, but shuffles on
         # them are still metadata-scale; a small partition count keeps
@@ -265,26 +276,35 @@ class AriadneIndex:
         return idx
 
     _local = None
+    #: ``LocalIndexCache.from_rows`` arguments of a driver-side build,
+    #: held until the snapshot is first asked for
+    _local_rows: tuple | None = None
     _patterns = None
     #: delta of the last ``refresh()``: {"changed": n, "reused": n, "removed": n}
     last_refresh_stats: dict | None = None
 
     def doc_signatures(self) -> dict[str, str]:
         """Per-model search-doc content hashes for the CURRENT index
-        state (what the existing postings encode). Metadata-scale
-        collect — the same envelope every serving snapshot already pays."""
-        cols_by_model: dict[str, list[str]] = {}
-        for r in self.columns.select("model_id", "name").collect():
-            cols_by_model.setdefault(r["model_id"], []).append(r["name"])
-        out = {}
-        for r in self.models.select(
-            "unique_id", "name", "description", "compiled_code", "raw_code", "tags"
-        ).collect():
-            m = r.asDict()
-            out[m["unique_id"]] = _doc_signature(
-                m, cols_by_model.get(m["unique_id"], []), self.config
+        state (what the existing postings encode), computed from the
+        snapshot's rows when the index holds one; otherwise a
+        metadata-scale collect of models and columns."""
+        if self._local is not None or self._local_rows is not None:
+            snap = self.local()
+            return _doc_signatures(
+                snap.models.values(),
+                (c for cols in snap.columns.values() for c in cols),
+                self.config,
             )
-        return out
+        return _doc_signatures(
+            [
+                r.asDict()
+                for r in self.models.select(
+                    "unique_id", "name", "description", "compiled_code", "raw_code", "tags"
+                ).collect()
+            ],
+            self.columns.select("model_id", "name").collect(),
+            self.config,
+        )
 
     def manifest_delta(self, manifest_path: str) -> dict:
         """Doc-level diff of a new manifest against THIS index's state:
@@ -292,17 +312,7 @@ class AriadneIndex:
         unique_id (the same signatures ``refresh`` uses to decide what
         to re-tokenize). Parse-only — no index is built."""
         man = mf.load_manifest(manifest_path)
-        model_rows = mf.parse_models(man)
-        column_rows = mf.parse_columns(man)
-        cols_by_model: dict[str, list[str]] = {}
-        for c in column_rows:
-            cols_by_model.setdefault(c["model_id"], []).append(c["name"])
-        new_sigs = {
-            m["unique_id"]: _doc_signature(
-                m, cols_by_model.get(m["unique_id"], []), self.config
-            )
-            for m in model_rows
-        }
+        new_sigs = _doc_signatures(mf.parse_models(man), mf.parse_columns(man), self.config)
         old_sigs = self.doc_signatures()
         return {
             "changed": sorted(
@@ -336,70 +346,73 @@ class AriadneIndex:
         anywhere can shift, and they cost a handful of metadata-scale
         shuffles.
 
+        A driver-side refresh also hands the new index its serving
+        snapshot (``local``): the parse tables are the rows just parsed,
+        and postings/docstats are the old snapshot's less the changed and
+        removed docs plus the re-tokenized rows — nothing is collected
+        back from the JVM. An enriched refresh leaves the snapshot to a
+        collect on first use.
+
         Equality with a from-scratch ``build()`` on the new manifest is
         pinned by tests/test_incremental.py (modify / add / remove /
-        no-op cases)."""
-        spark, config = self.spark, self.config
-        man = mf.load_manifest(manifest_path)
-        model_rows = mf.parse_models(man)
-        column_rows = mf.parse_columns(man)
-        test_rows = mf.parse_tests(man)
-        edge_rows = mf.parse_edges(man)
+        no-op cases); the patched snapshot's equality with a collected
+        one by tests/test_served_snapshot.py."""
+        from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
 
-        cols_by_model: dict[str, list[str]] = {}
-        for c in column_rows:
-            cols_by_model.setdefault(c["model_id"], []).append(c["name"])
-        new_sigs = {
-            m["unique_id"]: _doc_signature(
-                m, cols_by_model.get(m["unique_id"], []), config
-            )
-            for m in model_rows
-        }
+        spark, config = self.spark, self.config
+        rows = _parse_tables(mf.load_manifest(manifest_path))
+        model_rows, column_rows = rows["models"], rows["columns"]
+        local_build = len(model_rows) <= config.local_build_max_models
+        # an unenriched driver-side refresh patches the old snapshot;
+        # taking it first also gives the old signatures without a JVM
+        # round trip
+        patch = local_build and not (catalog_path or run_results_path)
+        base = self.local() if patch else None
+
+        new_sigs = _doc_signatures(model_rows, column_rows, config)
         old_sigs = self.doc_signatures()
         changed = {u for u, s in new_sigs.items() if old_sigs.get(u) != s}
         removed = set(old_sigs) - set(new_sigs)
         reused = set(new_sigs) - changed
         # rows to drop from the old postings: changed docs (stale) and
         # removed docs (gone); reused docs pass through untouched
-        dropped = sorted(changed | removed)
+        dropped = changed | removed
 
-        def df(rows, schema):
-            return local_frame(spark, rows, schema)
-
-        local_build = len(model_rows) <= config.local_build_max_models
         if local_build:
-            _derive_degrees_local(model_rows, edge_rows)
-            _derive_pk_fk_local(column_rows, test_rows)
+            _derive_degrees_local(model_rows, rows["edges"])
+            _derive_pk_fk_local(column_rows, rows["tests"])
             posting_rows, docstat_rows = _build_postings_local(
                 [m for m in model_rows if m["unique_id"] in changed],
                 [c for c in column_rows if c["model_id"] in changed],
                 config,
             )
 
-        src_rows, src_col_rows = mf.parse_sources(man)
-        drop_df = df([(u,) for u in dropped], "unique_id string")
+        drop_df = local_frame(spark, [(u,) for u in sorted(dropped)], "unique_id string")
         kept_postings = self.postings.join(F.broadcast(drop_df), "unique_id", "left_anti")
         kept_docstats = self.docstats.join(F.broadcast(drop_df), "unique_id", "left_anti")
 
         idx = AriadneIndex(
             spark=spark,
-            models=df(model_rows, schemas.MODELS),
-            columns=df(column_rows, schemas.COLUMNS),
-            sources=df(src_rows, schemas.SOURCES),
-            source_columns=df(src_col_rows, schemas.SOURCE_COLUMNS),
-            tests=df(test_rows, schemas.TESTS),
-            macros=df(mf.parse_macros(man), schemas.MACROS),
-            exposures=df(mf.parse_exposures(man), schemas.EXPOSURES),
-            edges=df(edge_rows, schemas.EDGES),
-            index_metadata=df(mf.parse_metadata(man), schemas.METADATA),
+            **{t: local_frame(spark, r, PARSE_SCHEMAS[t]) for t, r in rows.items()},
             postings=kept_postings,
             docstats=kept_docstats,
             config=config,
             n_models=len(model_rows),
         )
         if local_build:
-            idx.postings = kept_postings.unionByName(df(posting_rows, POSTINGS_DDL))
-            idx.docstats = kept_docstats.unionByName(df(docstat_rows, DOCSTATS_DDL))
+            idx.postings = kept_postings.unionByName(
+                local_frame(spark, posting_rows, POSTINGS_DDL)
+            )
+            idx.docstats = kept_docstats.unionByName(
+                local_frame(spark, docstat_rows, DOCSTATS_DDL)
+            )
+            if patch:
+                # the same union on the snapshot; an enriched refresh
+                # collects its snapshot when one is asked for
+                idx._local = LocalIndexCache.from_rows(
+                    config, rows, posting_rows, docstat_rows
+                )
+                idx._local.patch_search(base, dropped)
         else:
             old_parts = spark.conf.get("spark.sql.shuffle.partitions")
             spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -435,12 +448,17 @@ class AriadneIndex:
         return self.n_models
 
     def local(self):
-        """Driver-local snapshot for latency-critical serving (built
-        lazily, once per index — see operators/local_cache.py)."""
+        """Driver-local snapshot for latency-critical serving, built once
+        per index: from the rows of a driver-side build, else by
+        collecting the tables (see operators/local_cache.py)."""
         if self._local is None:
             from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
 
-            self._local = LocalIndexCache.from_index(self)
+            if self._local_rows is not None:
+                self._local = LocalIndexCache.from_rows(self.config, *self._local_rows)
+                self._local_rows = None
+            else:
+                self._local = LocalIndexCache.from_index(self)
         return self._local
 
     def patterns(self) -> dict:

@@ -4,21 +4,32 @@ The index tables are metadata-scale (≤10k models — reference scale
 envelope, README.md:13); the reference serves them from an in-process
 SQLite. A Spark job per lookup costs 50-300ms of scheduling alone, so
 interactive tools (search → capsule → lineage) run against this
-collected snapshot instead — pure-Python scoring reproduces the
-DataFrame pipeline's semantics exactly (pinned by tests), and the
-DataFrame path remains the source of truth for batch/scale use.
+snapshot instead — pure-Python scoring reproduces the DataFrame
+pipeline's semantics exactly (pinned by tests), and the DataFrame path
+remains the source of truth for batch/scale use.
 
-Build cost: one collect per table, done once per index build.
+Build cost: no JVM round trip on a driver-side index. ``from_rows``
+takes the rows ``AriadneIndex.build`` has just parsed and derived;
+``AriadneIndex.refresh`` hands it the new parse tables plus the
+re-tokenized docs' postings, then ``patch_search`` adds the old
+snapshot's postings/docstats less the changed and removed docs — the
+DataFrame refresh's anti-join and union, done on the snapshot.
+``from_index`` (one collect per table) covers everything else: a
+loaded index, the distributed build path and an enriched refresh.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from typing import Iterable, Mapping
 
-from ariadne_dbt_spark.config import HYBRID_WEIGHTS, LAYER_BOOSTS
+from ariadne_dbt_spark.config import HYBRID_WEIGHTS, LAYER_BOOSTS, EngineConfig
 from ariadne_dbt_spark.functions.text import tokenize_query
 from ariadne_dbt_spark.operators.search import B, DEFAULT_FIELD_WEIGHTS, K1, rounded_score
+
+#: the index tables a snapshot holds besides postings/docstats
+SNAPSHOT_TABLES = ("models", "columns", "tests", "macros", "sources", "exposures", "edges")
 
 
 @dataclass
@@ -34,33 +45,66 @@ class LocalIndexCache:
     # postings[field][term] → {unique_id: tf}; docstats[field][unique_id] → dl
     postings: dict[str, dict[str, dict[str, int]]] = field(default_factory=dict)
     docstats: dict[str, dict[str, int]] = field(default_factory=dict)
-    #: queries must stem iff the snapshotted postings were stemmed
-    stem: bool = False
+    #: the index's config: query stemming (queries must stem iff the
+    #: postings were stemmed), the hit cap and the description cut
+    config: EngineConfig = field(default_factory=EngineConfig)
+
+    @classmethod
+    def from_rows(
+        cls,
+        config: EngineConfig,
+        tables: Mapping[str, list[dict]],
+        postings: Iterable[tuple],
+        docstats: Iterable[tuple],
+    ) -> "LocalIndexCache":
+        """The snapshot over driver-side rows: ``tables`` maps each name
+        in ``SNAPSHOT_TABLES`` to its rows as dicts keyed by column name
+        (held, not copied); ``postings`` are ``(unique_id, field, term,
+        tf)`` and ``docstats`` ``(unique_id, field, dl)`` tuples."""
+        c = cls(config=config)
+        c.models = {m["unique_id"]: m for m in tables["models"]}
+        for r in tables["columns"]:
+            c.columns.setdefault(r["model_id"], []).append(r)
+        for cols in c.columns.values():
+            cols.sort(key=lambda x: x["name"])
+        for r in tables["tests"]:
+            c.tests.setdefault(r["model_id"], []).append(r)
+        c.macros = list(tables["macros"])
+        c.sources = {r["unique_id"]: r for r in tables["sources"]}
+        c.exposures = {r["unique_id"]: r for r in tables["exposures"]}
+        for r in tables["edges"]:
+            c.children.setdefault(r["parent_id"], []).append(r["child_id"])
+            c.parents.setdefault(r["child_id"], []).append(r["parent_id"])
+        for uid, fld, term, tf in postings:
+            c.postings.setdefault(fld, {}).setdefault(term, {})[uid] = tf
+        for uid, fld, dl in docstats:
+            c.docstats.setdefault(fld, {})[uid] = dl
+        return c
 
     @classmethod
     def from_index(cls, index) -> "LocalIndexCache":
-        c = cls()
-        c.stem = bool(getattr(index.config, "stem_tokens", False))
-        c.models = {r["unique_id"]: r.asDict() for r in index.models.collect()}
-        for r in index.columns.collect():
-            c.columns.setdefault(r["model_id"], []).append(r.asDict())
-        for cols in c.columns.values():
-            cols.sort(key=lambda x: x["name"])
-        for r in index.tests.collect():
-            c.tests.setdefault(r["model_id"], []).append(r.asDict())
-        c.macros = [r.asDict() for r in index.macros.collect()]
-        c.sources = {r["unique_id"]: r.asDict() for r in index.sources.collect()}
-        c.exposures = {r["unique_id"]: r.asDict() for r in index.exposures.collect()}
-        for r in index.edges.collect():
-            c.children.setdefault(r.parent_id, []).append(r.child_id)
-            c.parents.setdefault(r.child_id, []).append(r.parent_id)
-        for r in index.postings.collect():
-            c.postings.setdefault(r["field"], {}).setdefault(r["term"], {})[
-                r["unique_id"]
-            ] = r["tf"]
-        for r in index.docstats.collect():
-            c.docstats.setdefault(r["field"], {})[r["unique_id"]] = r["dl"]
-        return c
+        """Collect every table of ``index`` and build the snapshot on it."""
+        return cls.from_rows(
+            index.config,
+            {t: [r.asDict() for r in getattr(index, t).collect()] for t in SNAPSHOT_TABLES},
+            index.postings.select("unique_id", "field", "term", "tf").collect(),
+            index.docstats.select("unique_id", "field", "dl").collect(),
+        )
+
+    def patch_search(self, base: "LocalIndexCache", dropped: set[str]) -> None:
+        """Add ``base``'s postings and docstats, less the ``dropped`` docs'
+        rows, to this snapshot's own, which hold only the re-tokenized
+        docs. ``base`` is left as it is."""
+        for fld, terms in base.postings.items():
+            for term, docs in terms.items():
+                kept = {u: tf for u, tf in docs.items() if u not in dropped}
+                if kept:
+                    mine = self.postings.setdefault(fld, {})
+                    mine[term] = {**kept, **mine.get(term, {})}
+        for fld, stats in base.docstats.items():
+            kept = {u: dl for u, dl in stats.items() if u not in dropped}
+            if kept:
+                self.docstats[fld] = {**kept, **self.docstats.get(fld, {})}
 
     # -- graph (pure-python BFS; same semantics as operators.graph.bfs) ------
     def bfs(self, starts: list[str], direction: str, max_depth: int,
@@ -87,7 +131,7 @@ class LocalIndexCache:
 
     # -- search (same math as operators.search.bm25 + hybrid_rerank) ---------
     def bm25(self, query: str, *, field_weights: dict[str, float] | None = None) -> dict[str, float]:
-        terms = set(tokenize_query(query, stem=self.stem))
+        terms = set(tokenize_query(query, stem=self.config.stem_tokens))
         if not terms:
             return {}
         weights = field_weights or DEFAULT_FIELD_WEIGHTS
@@ -127,19 +171,16 @@ class LocalIndexCache:
     ) -> list[dict]:
         # reference layer sequence (server.py:363-371): search with an
         # effective 2×limit, cut the ranked list there, THEN layer-filter
-        limit = max(1, min(int(limit), 50))
+        limit = max(1, min(int(limit), self.config.search_limit_cap))
         eff_limit = 2 * limit if layer else limit
         candidates = self.bm25_candidates(query, 4 * eff_limit)
-        if not candidates:  # T4: LIKE fallback, centrality-ranked
+        if not candidates:  # T4: LIKE fallback, every match, constant score
             q = query.lower().strip()
-            fall = [
+            candidates = [
                 (uid, 0.5)
                 for uid, m in self.models.items()
                 if q in (m["name"] or "").lower() or q in (m["description"] or "").lower()
             ]
-            candidates = sorted(
-                fall, key=lambda kv: (-(self.models[kv[0]]["centrality"] or 0), kv[0])
-            )[: 4 * eff_limit]
         exclude = set(exclude_ids or ())
         candidates = [(u, s) for u, s in candidates if u not in exclude]
         if not candidates:
@@ -167,7 +208,7 @@ class LocalIndexCache:
                     "unique_id": uid,
                     "name": m["name"],
                     "layer": m["layer"],
-                    "description": (m["description"] or "")[:200],
+                    "description": _cut(m["description"], self.config.description_truncate),
                     "centrality": m["centrality"],
                     "bm25_score": s,
                     "score": score,
@@ -460,10 +501,9 @@ class LocalIndexCache:
         """Names-only orientation list — local twin of
         CapsuleBuilder.discover (same pivot seeding, depth-4 DAG labels,
         search fill labeled ``search``; reference: capsule.py:432-501)."""
-        from ariadne_dbt_spark.config import EngineConfig
         from ariadne_dbt_spark.operators.capsule import detect_intent
 
-        limit = max(1, min(int(limit), EngineConfig().discover_limit))
+        limit = max(1, min(int(limit), self.config.discover_limit))
         intent = detect_intent(task)
 
         pivots: list[str] = []
@@ -516,3 +556,8 @@ class LocalIndexCache:
 def _neg_name(name: str | None):
     """Sort helper: makes LOWER names win ties under max-comparison."""
     return tuple(-ord(ch) for ch in (name or ""))
+
+
+def _cut(text: str | None, n: int) -> str | None:
+    """``substring(text, 1, n)`` as Spark computes it: NULL stays NULL."""
+    return None if text is None else text[:n]

@@ -10,6 +10,13 @@ Tools (names mirror the reference):
     refresh_index, usage_stats, find_models_by_column,
     find_models_by_path, rate_capsule, detect_antipatterns
 
+``search_models`` answers from the index's driver-local snapshot
+(``AriadneIndex.local()``, operators/local_cache.py) and runs no Spark
+job; ``refresh_index`` hands the refreshed index a patched snapshot, so
+the search after it runs none either. ``get_project_patterns`` is
+computed once per index (``AriadneIndex.patterns()``). The other tools
+run the DataFrame operators.
+
 Every call is usage-logged (S8) with duration, like the reference.
 """
 
@@ -32,9 +39,7 @@ from ariadne_dbt_spark.operators.model_search import (
     find_by_path,
     get_model_by_name,
     macros_used,
-    search_models,
 )
-from ariadne_dbt_spark.operators.patterns import extract_patterns
 from ariadne_dbt_spark.operators.usage import SessionEventLog, UsageLog
 
 
@@ -58,8 +63,8 @@ class ToolServer:
     def search_models(self, query: str, limit: int = 10, layer: str | None = None,
                       intent: str = "explore") -> dict:
         limit = max(1, min(int(limit), 50))  # O7 clamp (reference: server.py:363)
-        hits = search_models(self.index, query, intent=intent, limit=limit, layer=layer)
-        return {"results": [r.asDict() for r in hits.collect()]}
+        hits = self.index.local().search(query, intent=intent, limit=limit, layer=layer)
+        return {"results": hits}
 
     def get_model_details(self, model_name: str) -> dict:
         # name OR unique_id lookup (reference: server.py:196); error text
@@ -213,7 +218,7 @@ class ToolServer:
         return {"success": True, "log_id": log_id, "rating": rating}
 
     def get_project_patterns(self) -> dict:
-        return extract_patterns(self.index)
+        return self.index.patterns()
 
     def detect_antipatterns(self, rules: list[str] | None = None) -> dict:
         """Project anti-pattern report (reference README roadmap v1.0;

@@ -110,10 +110,12 @@ def _pctl(xs: list[float], pct: float) -> float:
 
 
 def latency_section(spark) -> dict:
-    """P50/P95 of the interactive serving path (LocalIndexCache) on a
-    500-model synthetic manifest — mirrors the reference harness
-    (reference: benchmarks/run.py:200-240: 10 rounds per op, search/
-    capsule/lineage/patterns + index build)."""
+    """P50/P95 of the interactive serving path on a 500-model synthetic
+    manifest — mirrors the reference harness (reference:
+    benchmarks/run.py:200-240: 10 rounds per op, search/capsule/lineage/
+    patterns + index build). ``search`` goes through ``ToolServer.handle``,
+    the path the CLI and the MCP adapter serve; the other ops time the
+    index's driver-local snapshot (LocalIndexCache)."""
     import importlib.util
 
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -128,6 +130,7 @@ def latency_section(spark) -> dict:
         json.dump(mod.make_manifest(500), f)
 
     from ariadne_dbt_spark.ingest.indexer import AriadneIndex
+    from ariadne_dbt_spark.server import ToolServer
 
     # warm the Arrow/pandas-UDF worker pool once so the timed build
     # measures steady-state rebuild cost, not first-ever Python worker
@@ -144,13 +147,16 @@ def latency_section(spark) -> dict:
     idx = AriadneIndex.build(spark, man_path)
     build_sec = round(time.perf_counter() - t0, 3)
     cache = idx.local()
+    server = ToolServer(idx)
 
     central = max(
         cache.models.values(),
         key=lambda m: (m["centrality"] or 0.0, m["unique_id"]),
     )["unique_id"]
     ops = {
-        "search": lambda: cache.search("revenue customer order", limit=10),
+        "search": lambda: server.handle(
+            {"tool": "search_models", "args": {"query": "revenue customer order", "limit": 10}}
+        ),
         "capsule": lambda: cache.capsule(
             "debug failing test on revenue model", token_budget=8000
         ),
