@@ -37,6 +37,7 @@ expose; serving transport is intentionally thin.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -425,19 +426,29 @@ def cmd_maintain(args):
         )
         return
 
-    layouts = {
-        "ivf": ("vectors", "stats.json"),
-        "ivf-pq": ("codes", "index_meta.json"),
-        "shingle": ("postings", "meta.json"),
-        "search": (("postings", "docstats", "docids"), "meta.json"),
-    }
-    names, meta_file = layouts[args.kind]
     kw = {}
     if args.max_files is not None:
         kw["max_files"] = args.max_files
     if args.dead_frac is not None:
         kw["dead_frac_threshold"] = args.dead_frac
-    report = epoch_store.maintenance_report(args.index, names, meta_file, **kw)
+    if args.kind in ("ivf", "ivf-pq"):
+        # one lifecycle serves both IVF codecs: the index dir names its own
+        from ariadne_dbt_spark.operators.similarity import (
+            ivf_compact as fold,
+            ivf_maintenance_report as report_of,
+        )
+    elif args.kind == "shingle":
+        from ariadne_dbt_spark.operators.dedup import compact_shingle_index as fold
+
+        report_of = functools.partial(
+            epoch_store.maintenance_report, names="postings", meta_file="meta.json"
+        )
+    else:
+        from ariadne_dbt_spark.operators.search_index import (
+            compact_search_index as fold,
+            search_maintenance_report as report_of,
+        )
+    report = report_of(args.index, **kw)
     compacted = False
     if args.compact and report["should_compact"]:
         # the one path here that needs Spark; retention keeps the
@@ -445,19 +456,9 @@ def cmd_maintain(args):
         from ariadne_dbt_spark.session import get_spark
 
         spark = get_spark("ariadne-maintain")
-        if args.kind == "ivf":
-            from ariadne_dbt_spark.operators.similarity import ivf_compact as fold
-        elif args.kind == "ivf-pq":
-            from ariadne_dbt_spark.operators.similarity import ivf_pq_compact as fold
-        elif args.kind == "shingle":
-            from ariadne_dbt_spark.operators.dedup import compact_shingle_index as fold
-        else:
-            from ariadne_dbt_spark.operators.search_index import (
-                compact_search_index as fold,
-            )
         fold(spark, args.index, retention_sec=args.retention_sec)
         compacted = True
-        report = epoch_store.maintenance_report(args.index, names, meta_file, **kw)
+        report = report_of(args.index, **kw)
     _emit(
         {
             "index_dir": args.index,

@@ -1865,12 +1865,11 @@ def forget_docs(
         meta = delete_from_search_index(spark, search_index_dir, ids)
         out["search_index_gen"] = meta["gen"]
         out["search_index_n_docs"] = meta["n_docs"]
-    if ivf_index_dir is not None:
-        from ariadne_dbt_spark.operators.similarity import ivf_delete
+    from ariadne_dbt_spark.operators.similarity import ivf_delete
 
+    # ivf_delete serves both IVF codecs (one tombstone contract)
+    if ivf_index_dir is not None:
         out["ivf_tombstoned"] = ivf_delete(spark, ivf_index_dir, ids)
     if ivf_pq_index_dir is not None:
-        from ariadne_dbt_spark.operators.similarity import ivf_pq_delete
-
-        out["ivf_pq_tombstoned"] = ivf_pq_delete(spark, ivf_pq_index_dir, ids)
+        out["ivf_pq_tombstoned"] = ivf_delete(spark, ivf_pq_index_dir, ids)
     return out

@@ -224,50 +224,6 @@ def neighbors(edges: DataFrame, node_id: str) -> DataFrame:
     return up.union(down).orderBy("relationship", "unique_id")
 
 
-def impact_analysis(
-    edges: DataFrame,
-    node_id: str,
-    max_depth: int = 5,
-    model_layers: DataFrame | None = None,
-) -> dict:
-    """Blast-radius summary (reference: graph.py:79-132).
-
-    Downstream BFS, split hits by id-prefix kind, then the reference's
-    risk heuristic (graph.py:113-122): high iff exposures>0 or (a marts-
-    layer model is hit AND models>5); medium iff models>3 or mart-hit;
-    else low. ``model_layers`` is an optional ``(unique_id, layer)``
-    DataFrame for the mart-hit term; without it mart_hit=False (edge
-    lists carry no layer info). ``lineage.get_impact_analysis`` applies
-    the identical heuristic with the index's layer column.
-    """
-    affected = bfs(edges, [node_id], DOWNSTREAM, max_depth=max_depth)
-    by_kind = (
-        affected.withColumn("kind", F.split("unique_id", "\\.").getItem(0))
-        .groupBy("kind")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    counts = {r["kind"]: r["n"] for r in by_kind}
-    n_models = counts.get("model", 0)
-    n_exposures = counts.get("exposure", 0)
-    mart_hit = False
-    if model_layers is not None:
-        mart_hit = (
-            affected.join(F.broadcast(model_layers), "unique_id")
-            .where(F.col("layer") == "marts")
-            .limit(1)
-            .count()
-            > 0
-        )
-    if n_exposures > 0 or (mart_hit and n_models > 5):
-        risk = "high"
-    elif n_models > 3 or mart_hit:
-        risk = "medium"
-    else:
-        risk = "low"
-    return {"counts": counts, "risk": risk, "affected": affected}
-
-
 def degree_centrality(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Per-node (upstream+downstream degree) / global max — reference:
     indexer.py:458-469. Two partial-agg groupBys + a single-row broadcast

@@ -16,7 +16,12 @@ engine-agnostic arithmetic.
 
 from __future__ import annotations
 
+import glob
+import json
 import math
+import os
+import re
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -145,8 +150,6 @@ def auto_lsh_params(
     ``ivf_build_index``/``batch_lsh_topk`` for retrieval-shaped access
     instead of materializing the full near-dup pair set in one job.
     """
-    import math
-
     r = int(min(24, max(4, math.ceil(math.log2(max(n_rows, 2) / _TARGET_BUCKET_DOCS)))))
     p = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     pr = p**r
@@ -180,11 +183,8 @@ def lsh_bucket_signature(
     Bit i (LSB-first) is plane i's sign, matching the driver-side
     signature in ``lsh_topk``.
     """
-    planes_2d = F.array(
-        *[F.array(*[F.lit(v) for v in row]) for row in _hyperplanes(dim, n_planes)]
-    )
     bits = F.transform(
-        planes_2d,
+        _matrix_literal(_hyperplanes(dim, n_planes)),
         lambda p: F.when(_dot(vec_col, p) >= 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         ),
@@ -257,19 +257,20 @@ def lsh_topk(
     return brute_force_topk(cand, query_vec, id_col=id_col, vec_col=vec_col, k=k)
 
 
-def _centroid_literal(centroids: list[list[float]]) -> Column:
-    """Literal array<array<double>> of centroids (small: k × dim),
-    assembled as ONE SQL expression: the element-wise ``F.lit`` shape
-    paid k×dim py4j round-trips of pure driver time per call (round 11
-    — ~0.5 s at 8×64 before any job ran). ``repr`` round-trips doubles
-    exactly, so the parsed literal is bit-identical. Non-finite values
-    (a centroid trained over corrupt embeddings) have no SQL double
-    literal form — fall back to the element-wise construction for
-    correctness there."""
-    if not all(math.isfinite(float(v)) for c in centroids for v in c):
-        return F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in centroids])
+def _matrix_literal(matrix: list[list[float]]) -> Column:
+    """Literal array<array<double>> of a small driver-side matrix
+    (centroids, hyperplanes, a PQ lookup table), assembled as ONE SQL
+    expression: the element-wise ``F.lit`` shape paid rows×cols py4j
+    round-trips of pure driver time per call (round 11 — ~0.5 s at 8×64
+    centroids before any job ran). ``repr`` round-trips doubles exactly,
+    so the parsed literal is bit-identical. Non-finite values (a
+    centroid trained over corrupt embeddings) have no SQL double literal
+    form — fall back to the element-wise construction for correctness
+    there."""
+    if not all(math.isfinite(float(v)) for row in matrix for v in row):
+        return F.array(*[F.array(*[F.lit(float(v)) for v in row]) for row in matrix])
     rows = ",".join(
-        "array({})".format(",".join(f"{float(v)!r}D" for v in c)) for c in centroids
+        "array({})".format(",".join(f"{float(v)!r}D" for v in row)) for row in matrix
     )
     return F.expr(f"array({rows})")
 
@@ -285,9 +286,8 @@ def _nearest_centroid(vec_col: Column, centroids: list[list[float]]) -> Column:
     ``array_position`` returns the FIRST index holding the minimum —
     the same value the min came from, so the comparison is bit-exact
     and ties break to the lowest index, matching the old shape."""
-    cents = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in centroids])
     dists = F.transform(
-        cents,
+        _matrix_literal(centroids),
         lambda c: F.aggregate(
             F.zip_with(
                 vec_col, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
@@ -385,13 +385,8 @@ def ivf_topk(
             embeddings, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids, iters=iters
         )
 
-    def d2(c: list[float]) -> float:
-        return sum((float(x) - float(y)) ** 2 for x, y in zip(query_vec, c))
-
-    probe = sorted(range(len(centroids)), key=lambda i: (d2(centroids[i]), i))[:nprobe]
-    cand = embeddings.where(
-        _assign_col(F.col(vec_col), centroids).isin([int(p) for p in probe])
-    )
+    probe = _probe_cells(query_vec, centroids, nprobe)
+    cand = embeddings.where(_assign_col(F.col(vec_col), centroids).isin(probe))
     return brute_force_topk(cand, query_vec, id_col=id_col, vec_col=vec_col, k=k)
 
 
@@ -461,13 +456,9 @@ def pairwise_near_duplicates(
     # strings and parsed by ONE F.expr each (round 11): the Column-API
     # shape issued bands×r×dim F.lit py4j round-trips for the plane
     # matrix alone — measured ~0.8 s of pure driver construction per
-    # call, 3x the row's warm execution. repr() round-trips doubles
-    # exactly, so the parsed literals are bit-identical to F.lit's.
-    planes_sql = ",".join(
-        "array({})".format(",".join(f"{x!r}D" for x in row)) for row in planes
-    )
+    # call, 3x the row's warm execution (see _matrix_literal).
     bits = F.transform(
-        F.expr(f"array({planes_sql})"),
+        _matrix_literal(planes),
         lambda p: F.when(_dot(F.col("v"), p) >= 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         ),
@@ -686,494 +677,6 @@ def batch_lsh_topk(
     return approx.where(~F.col("query_id").isin(short)).unionByName(exact)
 
 
-def ivf_build_index(
-    embeddings: DataFrame,
-    out_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    iters: int = 3,
-    train_mod: int = 1,
-    stream_epoch: tuple[str, int] | None = None,
-) -> list[list[float]]:
-    """Persist a cell-partitioned IVF index: vectors written as parquet
-    PARTITIONED BY their Voronoi cell (``cell=<i>/`` directories), plus
-    the trained centroids as JSON metadata. Returns the centroids.
-
-    This is what makes the IVF pruning claim physical: a query that
-    probes ``nprobe`` of ``n_centroids`` cells compiles to a scan whose
-    ``PartitionFilters`` prune the other directories — the unprobed
-    (1 - nprobe/n_centroids) of the corpus is never READ, not merely
-    never ranked (asserted on the executed plan in tests). Assignment is
-    the same map-only broadcast-literal expression as ``ivf_topk``.
-    """
-    import json
-    import os
-
-    # rebuild-replaces semantics: clear every prior epoch's vectors,
-    # staging leftovers and tombstones — a rebuild must never inherit a
-    # tombstone that silently suppresses a re-indexed id
-    os.makedirs(out_dir, exist_ok=True)
-    epoch_store.clear_index(out_dir, ["vectors"])
-    centroids = ivf_train_centroids(
-        embeddings,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        iters=iters,
-        train_mod=train_mod,
-    )
-    nearest = _nearest_centroid(F.col(vec_col), centroids)
-    assigned = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        nearest.getField("i").alias("cell"),
-        F.sqrt(nearest.getField("d")).alias("_dist"),
-    )
-    assigned.drop("_dist").withColumn(
-        "gen", F.lit(0).cast("bigint")
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        epoch_store.data_dir(out_dir, "vectors", 0)
-    )
-    # build-time fit quality, the baseline the staleness metric compares
-    # against after appends (one extra agg pass at build time only)
-    stats = assigned.agg(
-        F.avg("_dist").alias("m"), F.count(F.lit(1)).alias("n")
-    ).first()
-    with open(os.path.join(out_dir, "centroids.json"), "w") as f:
-        json.dump(centroids, f)
-    payload = {
-        "build_mean_dist": float(stats["m"] or 0.0),
-        "mean_dist": float(stats["m"] or 0.0),
-        "n_vectors": int(stats["n"]),
-        "gen": 0,
-        "orphans": [],
-    }
-    if stream_epoch is not None:
-        # a streaming first-batch build records its micro-batch id in the
-        # same atomic commit — a replay (crash between this commit and
-        # the streaming checkpoint) would otherwise take the APPEND path
-        # (stats.json now exists) and duplicate batch 0
-        payload["stream_epochs"] = {str(stream_epoch[0]): int(stream_epoch[1])}
-    _write_index_json(os.path.join(out_dir, "stats.json"), payload)
-    return centroids
-
-
-def _write_index_json(path: str, payload: dict) -> None:
-    # atomic replace — for gen-logged indexes this file is the COMMIT
-    # POINT of an append: rows of a gen not recorded here stay invisible
-    import json
-    import os
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, sort_keys=True)
-    os.replace(tmp, path)
-
-
-def ivf_append(
-    new_vectors: DataFrame,
-    index_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stream_epoch: tuple[str, int] | None = None,
-) -> dict:
-    """Index maintenance: assign a new batch to the EXISTING cells (no
-    retrain — the same map-only broadcast-literal expression as the
-    build) and append-write it into the cell-partitioned layout, so
-    queries see the new vectors immediately with partition pruning
-    intact. Returns the updated staleness stats.
-
-    Staleness: the index records mean distance-to-assigned-centroid at
-    build time; each append folds its batch into a running mean. When
-    the running mean drifts well above the build mean (``drift`` =
-    mean/build − 1), the data distribution has moved away from the
-    trained centroids — cells are getting baggy, probes less selective
-    — and it is time to retrain (``ivf_build_index`` again). Append is
-    batch-bounded: it touches only the batch rows, never the stored
-    corpus.
-
-    Crash-retry safe (same protocol as the search/shingle indexes): the
-    batch is gen-tagged through the per-epoch attempt marker and becomes
-    visible only when the stats.json commit records the gen; a crashed
-    append's partial rows stay orphaned forever.
-
-    ``stream_epoch=(stream_id, epoch_id)`` records the last applied
-    streaming micro-batch INSIDE the same atomic stats.json commit —
-    foreachBatch is at-least-once, so a crash AFTER this commit but
-    BEFORE the streaming checkpoint commit replays the micro-batch, and
-    without the marker the replay would blind-append the same vec_ids
-    under a fresh gen (duplicates would serve). The stream maintainer
-    (streaming/vector_stream.py) short-circuits replayed epoch_ids.
-    """
-    import json
-    import os
-
-    centroids = _read_ivf_centroids(index_dir)
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    expect = epoch_store.gen_state(stats)
-    epoch = epoch_store.read_epoch(index_dir)
-    gen = epoch_store.next_attempt_gen(index_dir, epoch, stats.get("gen", 0))
-    # conform the batch's vector type to the stored layout (a footer
-    # read, no data scan): arithmetic upstream of an append silently
-    # promotes float arrays to double, and mixed element types in one
-    # partitioned dataset fail every subsequent read
-    stored = new_vectors.sparkSession.read.parquet(
-        epoch_store.data_dir(index_dir, "vectors")
-    ).schema["embedding"].dataType
-    nearest = _nearest_centroid(F.col(vec_col), centroids)
-    assigned = new_vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast(stored).alias("embedding"),
-        nearest.getField("i").alias("cell"),
-        F.sqrt(nearest.getField("d")).alias("_dist"),
-    )
-    # cluster the batch by cell before the write: one file per touched
-    # cell per append instead of one per (shuffle partition, cell) —
-    # measured ~300 files per 500-row append without this, which is the
-    # MOR file-count amplification the maintenance_report exists to
-    # bound. The extra shuffle is batch-sized, O(batch)
-    assigned = assigned.repartition(F.col("cell"))
-    assigned.drop("_dist").withColumn(
-        "gen", F.lit(gen).cast("bigint")
-    ).write.mode("append").partitionBy("cell").parquet(
-        epoch_store.data_dir(index_dir, "vectors")
-    )
-    b = assigned.agg(F.avg("_dist").alias("m"), F.count(F.lit(1)).alias("n")).first()
-    bm, bn = float(b["m"] or 0.0), int(b["n"])
-    n0, m0 = stats["n_vectors"], stats["mean_dist"]
-    stats["n_vectors"] = n0 + bn
-    if stats["n_vectors"]:
-        stats["mean_dist"] = (m0 * n0 + bm * bn) / stats["n_vectors"]
-    if stream_epoch is not None:
-        sid, eid = stream_epoch
-        se = dict(stats.get("stream_epochs") or {})
-        se[str(sid)] = int(eid)
-        stats["stream_epochs"] = se
-    # CAS under the commit lock: a concurrent writer's committed
-    # gen/stats must not be dropped, and the lock makes the
-    # check→replace window atomic (not merely best-effort). The epoch
-    # check closes the append∥compact/retrain race: a flip that landed
-    # mid-append rewrote the OLD epoch's cell dirs, so this append's
-    # rows are invisible in the new epoch — committing the gen anyway
-    # would record rows no reader can see
-    with epoch_store.commit_lock(index_dir):
-        live_epoch = epoch_store.read_epoch(index_dir)
-        if live_epoch != epoch:
-            # burn the gen in the new epoch's marker first: rows that
-            # landed post-flip sit in the NEW dirs, and a retry reusing
-            # this gen would double-count them (see shingle twin)
-            epoch_store.next_attempt_gen(index_dir, live_epoch, gen)
-            raise epoch_store.ConcurrentWriteError(
-                f"IVF index {index_dir} epoch moved past {epoch} during "
-                "this append; retry against the new epoch"
-            )
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            epoch_store.check_gen_unchanged(json.load(f), expect)
-        _write_index_json(
-            os.path.join(index_dir, "stats.json"), epoch_store.advance_gen(stats, gen)
-        )
-    build = stats["build_mean_dist"]
-    return {
-        "n_appended": bn,
-        "batch_mean_dist": round(bm, 6),
-        "mean_dist": round(stats["mean_dist"], 6),
-        "build_mean_dist": round(build, 6),
-        "drift": round(stats["mean_dist"] / build - 1, 6) if build else None,
-    }
-
-
-def ivf_staleness(index_dir: str) -> dict:
-    """Current staleness of a persisted IVF index (metadata-only — no
-    Spark job): drift of the running mean centroid distance over the
-    build-time mean. Retrain when drift is large."""
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    build = stats["build_mean_dist"]
-    return {
-        "n_vectors": stats["n_vectors"],
-        "mean_dist": round(stats["mean_dist"], 6),
-        "build_mean_dist": round(build, 6),
-        "drift": round(stats["mean_dist"] / build - 1, 6) if build else None,
-    }
-
-
-def _epoch_json_path(index_dir: str, base: str, epoch: int) -> str:
-    import os
-
-    suffix = "" if epoch == 0 else f"_ep{epoch}"
-    return os.path.join(index_dir, f"{base}{suffix}.json")
-
-
-def _read_epoch_json(index_dir: str, base: str, epoch: int | None = None):
-    """Epoch-resolved JSON artifact (round 8): a retrain writes
-    ``<base>_ep<k>.json`` beside the new epoch's data and commits both
-    with the one epoch-pointer flip, so queries can never pair new cell
-    assignments with old centroids/codebooks (or vice versa). A
-    compaction flips epochs WITHOUT retraining, so resolution takes the
-    newest artifact file at-or-below the committed epoch."""
-    import glob
-    import json
-    import os
-    import re as _re
-
-    if epoch is None:
-        epoch = epoch_store.read_epoch(index_dir)
-    best, best_k = None, -1
-    for p in glob.glob(os.path.join(index_dir, f"{base}*.json")):
-        m = _re.fullmatch(rf"{base}(?:_ep(\d+))?\.json", os.path.basename(p))
-        if m is None:
-            continue
-        k = int(m.group(1) or 0)
-        if best_k < k <= epoch:
-            best, best_k = p, k
-    if best is None:
-        raise FileNotFoundError(f"no {base} file in {index_dir}")
-    with open(best) as f:
-        return json.load(f)
-
-
-def _read_ivf_centroids(index_dir: str, epoch: int | None = None) -> list:
-    return _read_epoch_json(index_dir, "centroids", epoch)
-
-
-def ivf_retrain(
-    spark,
-    index_dir: str,
-    *,
-    n_centroids: int = 8,
-    iters: int = 3,
-    retention_sec: float = 0.0,
-) -> list[list[float]]:
-    """Retrain the coarse centroids over the CURRENT live vectors and
-    re-cluster the layout — the answer to a baggy ``ivf_staleness``
-    drift, as a crash-safe EPOCH FLIP (round 8; previously the README'd
-    recipe was a manual wholesale ``ivf_build_index`` rerun):
-
-    * train on the committed live vectors (gen filter + tombstones),
-    * stage the reassigned, cell-clustered layout AND the new centroids
-      into ``*_ep<k+1>`` names,
-    * commit with the single atomic epoch-pointer flip; stats.json then
-      resets the drift baseline while PRESERVING the streaming replay
-      markers (``stream_epochs``) — a crash anywhere before the flip
-      leaves readers on the old epoch with the old centroids.
-
-    O(corpus) by nature (every vector reassigns) — that is what retrain
-    means; the point of the signal-driven trigger is to pay it only
-    when drift says the cells went baggy.
-    """
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    epoch = epoch_store.read_epoch(index_dir)
-    live = epoch_store.apply_gen_filter(
-        epoch_store.read_gen_data(spark, index_dir, "vectors", epoch), stats
-    )
-    tomb_dir = epoch_store.data_dir(index_dir, "tombstones")
-    if os.path.exists(tomb_dir):
-        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
-        live = live.join(F.broadcast(tomb), "vec_id", "left_anti")
-    live = live.select("vec_id", "embedding")
-    centroids = ivf_train_centroids(
-        live, id_col="vec_id", vec_col="embedding",
-        n_centroids=n_centroids, iters=iters,
-    )
-    nearest = _nearest_centroid(F.col("embedding"), centroids)
-    assigned = live.select(
-        "vec_id",
-        "embedding",
-        nearest.getField("i").alias("cell"),
-        F.sqrt(nearest.getField("d")).alias("_dist"),
-    )
-    new_epoch = epoch + 1
-    # stage: clustered one-file-per-cell, mode overwrite so a crashed
-    # attempt's leftover staged dir can't wedge the retry
-    assigned.drop("_dist").withColumn(
-        "gen", F.lit(0).cast("bigint")
-    ).repartition(F.col("cell")).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(epoch_store.data_dir(index_dir, "vectors", new_epoch))
-    fit = assigned.agg(F.avg("_dist").alias("m"), F.count(F.lit(1)).alias("n")).first()
-    tmp = _epoch_json_path(index_dir, "centroids", new_epoch) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(centroids, f)
-    os.replace(tmp, _epoch_json_path(index_dir, "centroids", new_epoch))
-    # THE commit: pointer flip makes new vectors + new centroids + the
-    # reset drift baseline visible together, guarded like the compaction
-    # flip — this retrain trained on the index's OWN live vectors, so an
-    # append that committed after the training snapshot holds rows the
-    # flip would silently drop; CAS turns that into a loud retry. (A
-    # crash between flip and stats write serves the NEW epoch under the
-    # OLD stats — gens there are all 0, and apply_gen_filter keeps
-    # gen<=hi, so rows still serve correctly; only the drift baseline is
-    # stale until the write lands.)
-    new_stats = {
-        "build_mean_dist": float(fit["m"] or 0.0),
-        "mean_dist": float(fit["m"] or 0.0),
-        "n_vectors": int(fit["n"]),
-        "gen": 0,
-        "orphans": [],
-    }
-    if stats.get("stream_epochs"):
-        new_stats["stream_epochs"] = stats["stream_epochs"]
-    with epoch_store.commit_lock(index_dir):
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            epoch_store.check_gen_unchanged(
-                json.load(f), epoch_store.gen_state(stats)
-            )
-        if epoch_store.read_epoch(index_dir) != epoch:
-            raise epoch_store.ConcurrentWriteError(
-                f"IVF index {index_dir} epoch moved past {epoch} during "
-                "retrain; re-run against the new epoch"
-            )
-        epoch_store.commit_epoch(index_dir, new_epoch)
-        _write_index_json(os.path.join(index_dir, "stats.json"), new_stats)
-    epoch_store.sweep_stale_epochs(
-        index_dir, ["vectors"], new_epoch, retention_sec=retention_sec
-    )
-    return centroids
-
-
-def ivf_maintenance_report(index_dir: str, **kw) -> dict:
-    """Compaction-cadence signal for the IVF index (metadata-only —
-    parquet footers + stats.json): dead/tombstone row fractions, live
-    file count, ``should_compact`` + reasons. Run :func:`ivf_compact`
-    when it fires; retrain-vs-compact is a separate decision
-    (:func:`ivf_staleness` answers that one)."""
-    return epoch_store.maintenance_report(index_dir, "vectors", "stats.json", **kw)
-
-
-def ivf_pq_maintenance_report(index_dir: str, **kw) -> dict:
-    """Compaction-cadence signal for the IVF-PQ codes index — see
-    :func:`ivf_maintenance_report`; fold with :func:`ivf_pq_compact`."""
-    return epoch_store.maintenance_report(index_dir, "codes", "index_meta.json", **kw)
-
-
-def ivf_query_index(
-    spark,
-    index_dir: str,
-    query_vec: list[float],
-    *,
-    k: int = 10,
-    nprobe: int = 3,
-) -> DataFrame:
-    """Serve one query from a persisted IVF index: pick the ``nprobe``
-    cells nearest the query from the (tiny) centroid metadata, scan ONLY
-    those partitions (`cell IN (...)` → PartitionFilters), exact-cosine
-    re-rank inside them."""
-    import json
-    import os
-
-    centroids = _read_ivf_centroids(index_dir)
-
-    def d2(c: list[float]) -> float:
-        return sum((float(x) - float(y)) ** 2 for x, y in zip(query_vec, c))
-
-    probe = sorted(range(len(centroids)), key=lambda i: (d2(centroids[i]), i))[:nprobe]
-    vectors = epoch_store.read_gen_data(spark, index_dir, "vectors")
-    stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            # committed-gen visibility: a crashed append's rows are not
-            # in stats.json's gen record and must never serve
-            vectors = epoch_store.apply_gen_filter(vectors, json.load(f))
-    cand = vectors.where(F.col("cell").isin([int(p) for p in probe]))
-    tomb_dir = epoch_store.data_dir(index_dir, "tombstones")
-    if os.path.exists(tomb_dir):
-        # merge-on-read deletes (ivf_delete): forgotten vectors stop
-        # serving immediately; broadcast bounded by churn until
-        # ivf_compact folds the log
-        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
-        cand = cand.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return brute_force_topk(cand, query_vec, k=k)
-
-
-def ivf_delete(spark, index_dir: str, ids: list) -> int:
-    """Right-to-be-forgotten for the IVF index: tombstone vector ids in
-    O(|ids|) (same merge-on-read recipe as the shingle/search indexes —
-    rewriting cell partitions per deletion request would be O(corpus)).
-    Stats in ``stats.json`` intentionally stay build-time values: they
-    drive the RETRAIN decision, not result correctness."""
-    import os
-
-    id_df = local_frame(spark, [(int(i),) for i in ids], "vec_id long").distinct()
-    n = id_df.count()
-    id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
-    return n
-
-
-def ivf_compact(spark, index_dir: str, *, retention_sec: float = 0.0) -> None:
-    """Fold IVF tombstones into the cell-partitioned data, committed by
-    one atomic epoch-pointer flip (crash anywhere before it leaves the
-    old vectors + tombstones live — see ``epoch_store``)."""
-    import os
-
-    import json
-
-    tomb_dir = epoch_store.data_dir(index_dir, "tombstones")
-    epoch = epoch_store.read_epoch(index_dir)
-    stats_path = os.path.join(index_dir, "stats.json")
-    stats = {}
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            stats = json.load(f)
-    live = epoch_store.apply_gen_filter(
-        epoch_store.read_gen_data(spark, index_dir, "vectors", epoch),
-        stats,
-    )
-    # no tombstones is still a valid reason to compact: folding many
-    # small appended files + orphaned gens bounds MOR read amplification
-    # (the maintenance_report file-count signal)
-    if os.path.exists(tomb_dir):
-        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
-        live = live.join(F.broadcast(tomb), "vec_id", "left_anti")
-    new_epoch = epoch + 1
-    # hash-cluster by cell so each cell folds to ONE file — compaction
-    # exists to cut MOR file-count amplification, so the fold itself
-    # must not re-fragment (measured: 8.9k append files → 16 after this
-    # vs 373 with the default write partitioning); at true 100 TB scale
-    # a cell may need several files, which AQE's target-size split gives
-    live = live.repartition(F.col("cell"))
-    # overwrite: a leftover partial staged dir from a crashed attempt
-    # must not make the retry fail with 'path already exists'
-    live.write.mode("overwrite").partitionBy("cell").parquet(
-        epoch_store.data_dir(index_dir, "vectors", new_epoch)
-    )
-    # guarded flip (see compact_shingle_index): an append that committed
-    # after this compaction's stats snapshot wrote vectors into the OLD
-    # epoch's dirs — flipping anyway would orphan its committed rows,
-    # and the orphan-clearing stats write would revert its gen advance.
-    # CAS turns the lost update into a loud retry; appends hold the same
-    # lock (and refuse when the epoch moved under THEM).
-    with epoch_store.commit_lock(index_dir):
-        if os.path.exists(stats_path):
-            with open(stats_path) as f:
-                epoch_store.check_gen_unchanged(
-                    json.load(f), epoch_store.gen_state(stats)
-                )
-        if epoch_store.read_epoch(index_dir) != epoch:
-            raise epoch_store.ConcurrentWriteError(
-                f"IVF index {index_dir} epoch moved past {epoch} during "
-                "compaction; re-run against the new epoch"
-            )
-        epoch_store.commit_epoch(index_dir, new_epoch)
-        # orphaned gens were physically dropped by the filter above
-        if stats.get("orphans"):
-            stats["orphans"] = []
-            _write_index_json(stats_path, stats)
-    epoch_store.sweep_stale_epochs(
-        index_dir, ["vectors"], new_epoch, retention_sec=retention_sec
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ): compress vectors to m small codes so the
 # candidate scan reads BYTES instead of floats. The scale story beyond
@@ -1357,16 +860,356 @@ def _adc_score_col(
         ]
         for j in range(m)
     ]
-    lut_lit = F.array(*[F.array(*[F.lit(v) for v in row]) for row in lut])
     return F.aggregate(
         F.zip_with(
-            lut_lit,
+            _matrix_literal(lut),
             F.col(codes_col),
             lambda row, c: F.element_at(row, c + 1),
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+# ---------------------------------------------------------------------------
+# Persisted IVF index: ONE lifecycle, two payload codecs. Both layouts are
+# cell-partitioned parquet (``cell=<i>/``) behind the epoch_store protocol
+# — gen-tagged appends, tombstones, CAS-guarded epoch flips and a sweep —
+# and differ only in what a cell row carries:
+#
+# * raw — ``vectors/`` of (vec_id, embedding) + ``stats.json`` (drift
+#   stats); queries exact-cosine re-rank the probed cells;
+# * PQ — ``codes/`` of (vec_id, pq_codes) + ``index_meta.json`` and the
+#   ``pq_codebooks*.json`` artifact; queries ADC-score the codes (with the
+#   per-cell shift when the codes quantize residuals).
+#
+# Both keep ``centroids*.json``. Append, delete, compact, retrain and the
+# maintenance report read the codec from the index directory; build and
+# query keep one entry point per codec (their parameters and output
+# columns differ).
+# ---------------------------------------------------------------------------
+
+
+class _Codec(NamedTuple):
+    data: str  # cell-partitioned parquet dir, resolved through the epoch
+    meta: str  # gen record: the COMMIT POINT of an append
+    artifacts: tuple[str, ...]  # ``<base>.json`` / ``<base>_ep<k>.json``
+    label: str
+
+
+_RAW = _Codec("vectors", "stats.json", ("centroids",), "IVF")
+_PQ = _Codec("codes", "index_meta.json", ("centroids", "pq_codebooks"), "IVF-PQ")
+_ARTIFACT_FILE = re.compile(r"(?:centroids|pq_codebooks)(?:_ep\d+)?\.json")
+
+
+def _codec(index_dir: str) -> _Codec:
+    # every PQ build writes the epoch-0 codebooks file; no raw build does
+    # (and a rebuild clears the other codec's files, see _build)
+    return _PQ if os.path.exists(os.path.join(index_dir, "pq_codebooks.json")) else _RAW
+
+
+def _read_meta(index_dir: str, codec: _Codec) -> dict:
+    """The codec's meta file, or ``{}`` for an index that predates it
+    (the gen filter then keeps every row — see ``apply_gen_filter``)."""
+    path = os.path.join(index_dir, codec.meta)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def _write_index_json(path: str, payload) -> None:
+    # atomic replace — for gen-logged indexes the meta file is the COMMIT
+    # POINT of an append: rows of a gen not recorded here stay invisible
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(payload, f, sort_keys=True)
+    os.replace(tmp, path)
+
+
+def _epoch_json_path(index_dir: str, base: str, epoch: int) -> str:
+    suffix = "" if epoch == 0 else f"_ep{epoch}"
+    return os.path.join(index_dir, f"{base}{suffix}.json")
+
+
+def _read_epoch_json(index_dir: str, base: str):
+    """Epoch-resolved JSON artifact (round 8): a retrain writes
+    ``<base>_ep<k>.json`` beside the new epoch's data and commits both
+    with the one epoch-pointer flip, so queries can never pair new cell
+    assignments with old centroids/codebooks (or vice versa). A
+    compaction flips epochs WITHOUT retraining, so resolution takes the
+    newest artifact file at-or-below the committed epoch."""
+    epoch = epoch_store.read_epoch(index_dir)
+    best, best_k = None, -1
+    for p in glob.glob(os.path.join(index_dir, f"{base}*.json")):
+        m = re.fullmatch(rf"{base}(?:_ep(\d+))?\.json", os.path.basename(p))
+        if m is None:
+            continue
+        k = int(m.group(1) or 0)
+        if best_k < k <= epoch:
+            best, best_k = p, k
+    if best is None:
+        raise FileNotFoundError(f"no {base} file in {index_dir}")
+    with open(best) as f:
+        return json.load(f)
+
+
+def _read_artifacts(index_dir: str, codec: _Codec) -> dict:
+    return {base: _read_epoch_json(index_dir, base) for base in codec.artifacts}
+
+
+def _probe_cells(query_vec: list[float], centroids: list, nprobe: int) -> list[int]:
+    """The ``nprobe`` cells nearest the query (squared L2, ties to the
+    lowest index), chosen driver-side from the tiny centroid list."""
+
+    def d2(c: list[float]) -> float:
+        return sum((float(x) - float(y)) ** 2 for x, y in zip(query_vec, c))
+
+    return sorted(range(len(centroids)), key=lambda i: (d2(centroids[i]), i))[:nprobe]
+
+
+def _live_rows(
+    spark,
+    index_dir: str,
+    codec: _Codec,
+    meta: dict,
+    *,
+    epoch: int | None = None,
+    cells: list[int] | None = None,
+) -> DataFrame:
+    """The committed live rows of an epoch: the gen filter (a crashed
+    append's rows are not in the meta's gen record and never serve),
+    then the probed ``cells`` (``cell IN (...)`` → PartitionFilters: the
+    unprobed cells are never READ), then the tombstone anti-join
+    (merge-on-read deletes; the broadcast is bounded by churn until
+    :func:`ivf_compact` folds the log)."""
+    rows = epoch_store.apply_gen_filter(
+        epoch_store.read_gen_data(spark, index_dir, codec.data, epoch), meta
+    )
+    if cells is not None:
+        rows = rows.where(F.col("cell").isin(cells))
+    tomb_dir = epoch_store.data_dir(index_dir, "tombstones", epoch)
+    if os.path.exists(tomb_dir):
+        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
+        rows = rows.join(F.broadcast(tomb), "vec_id", "left_anti")
+    return rows
+
+
+def _raw_rows(
+    vectors: DataFrame, centroids: list, id_col: str, vec_col: str, vec_type=None
+) -> DataFrame:
+    """The raw codec's cell rows ``(vec_id, embedding, cell, _dist)``:
+    assignment is the same map-only broadcast-literal expression as
+    ``ivf_topk``; ``_dist`` (distance to the assigned centroid) feeds
+    the drift stats and is dropped before the write."""
+    nearest = _nearest_centroid(F.col(vec_col), centroids)
+    vec = F.col(vec_col) if vec_type is None else F.col(vec_col).cast(vec_type)
+    return vectors.select(
+        F.col(id_col).alias("vec_id"),
+        vec.alias("embedding"),
+        nearest.getField("i").alias("cell"),
+        F.sqrt(nearest.getField("d")).alias("_dist"),
+    )
+
+
+def _pq_source(
+    vectors: DataFrame, centroids: list, id_col: str, vec_col: str, residual: bool
+) -> DataFrame:
+    """``(vec_id, _v, cell)`` — what the PQ codec encodes: the vector,
+    or with ``residual`` its shift ``x - centroid[cell]`` (the FAISS
+    refinement: residuals concentrate near zero, so the same codebook
+    budget reconstructs tighter)."""
+    src = vectors.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("_v"),
+        _assign_col(F.col(vec_col), centroids).alias("cell"),
+    )
+    if not residual:
+        return src
+    cents = _matrix_literal(centroids)
+    return src.withColumn(
+        "_v",
+        F.zip_with(
+            F.col("_v"),
+            F.element_at(cents, F.col("cell") + 1),
+            lambda x, c: x.cast("double") - c,
+        ),
+    )
+
+
+def _stage(rows: DataFrame, index_dir: str, codec: _Codec, epoch: int) -> None:
+    """Write ``rows`` as ``epoch``'s cell-partitioned data, mode
+    overwrite so a crashed attempt's partial leftover can't wedge the
+    retry. A fold into a new epoch hash-clusters by cell first so each
+    cell lands in ONE file — compaction exists to cut MOR file-count
+    amplification and must not re-fragment (measured: 8.9k append files
+    → 16 after the fold vs 373 with the default write partitioning; at
+    100 TB a cell may need several files, which AQE's target-size split
+    gives). A fresh build (epoch 0) writes as partitioned."""
+    if epoch > 0:
+        rows = rows.repartition(F.col("cell"))
+    rows.write.mode("overwrite").partitionBy("cell").parquet(
+        epoch_store.data_dir(index_dir, codec.data, epoch)
+    )
+
+
+def _train_stage(
+    src: DataFrame,
+    index_dir: str,
+    codec: _Codec,
+    epoch: int,
+    prior: dict,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_centroids: int,
+    iters: int,
+    train_mod: int,
+    m: int = 8,
+    k_sub: int = 16,
+    dim: int | None = None,
+    codebooks: list | None = None,
+) -> tuple[dict, dict]:
+    """Train centroids (and PQ codebooks unless given) over ``src``,
+    stage the encoded layout as ``epoch``'s gen-0 data plus its
+    artifacts, and return ``(artifacts, meta)`` — the fresh meta the
+    caller commits. The PQ residual flag and the streaming replay
+    markers (``stream_epochs``) carry over from ``prior``."""
+    centroids = ivf_train_centroids(
+        src, id_col=id_col, vec_col=vec_col,
+        n_centroids=n_centroids, iters=iters, train_mod=train_mod,
+    )
+    if codec is _RAW:
+        rows = _raw_rows(src, centroids, id_col, vec_col)
+        artifacts = {"centroids": centroids}
+    else:
+        residual = bool(prior.get("residual", False))
+        enc = _pq_source(src, centroids, id_col, vec_col, residual)
+        if codebooks is None:
+            codebooks = pq_train(
+                enc, id_col="vec_id", vec_col="_v",
+                m=m, k=k_sub, iters=iters, train_mod=train_mod, dim=dim,
+            )
+        # cell + codes in ONE map-only projection — no build-time join
+        rows = pq_encode(enc, codebooks, id_col="vec_id", vec_col="_v", keep=["cell"])
+        artifacts = {"centroids": centroids, "pq_codebooks": codebooks}
+    _stage(
+        rows.drop("_dist").withColumn("gen", F.lit(0).cast("bigint")),
+        index_dir,
+        codec,
+        epoch,
+    )
+    for base, payload in artifacts.items():
+        _write_index_json(_epoch_json_path(index_dir, base, epoch), payload)
+    if codec is _RAW:
+        # fit quality of the new layout: the baseline the drift metric
+        # compares appends against (one extra agg pass)
+        fit = rows.agg(F.avg("_dist").alias("m"), F.count(F.lit(1)).alias("n")).first()
+        meta = {
+            "build_mean_dist": float(fit["m"] or 0.0),
+            "mean_dist": float(fit["m"] or 0.0),
+            "n_vectors": int(fit["n"]),
+        }
+    else:
+        meta = {"residual": residual, "m": len(codebooks), "d_sub": len(codebooks[0][0])}
+    meta.update(gen=0, orphans=[])
+    if prior.get("stream_epochs"):
+        meta["stream_epochs"] = prior["stream_epochs"]
+    return artifacts, meta
+
+
+def _build(embeddings: DataFrame, out_dir: str, codec: _Codec, prior: dict, **train) -> dict:
+    """Rebuild-replaces: clear every prior epoch's data, tombstones and
+    staging leftovers, and BOTH codecs' metas and artifacts — a rebuild
+    must never inherit a tombstone that suppresses a re-indexed id, the
+    other codec's meta (it names the codec), or a ``<base>_ep<k>.json``
+    that would outrank the new artifacts once compactions walk the
+    epoch back up to k — then train and write epoch 0."""
+    os.makedirs(out_dir, exist_ok=True)
+    epoch_store.clear_index(out_dir, [_RAW.data, _PQ.data])
+    for name in os.listdir(out_dir):
+        if name in (_RAW.meta, _PQ.meta) or _ARTIFACT_FILE.fullmatch(name):
+            os.remove(os.path.join(out_dir, name))
+    artifacts, meta = _train_stage(embeddings, out_dir, codec, 0, prior, **train)
+    _write_index_json(os.path.join(out_dir, codec.meta), meta)
+    return artifacts
+
+
+def _flip(
+    index_dir: str,
+    codec: _Codec,
+    epoch: int,
+    action: str,
+    new_meta: dict | None,
+    *,
+    expect: tuple | None,
+    retention_sec: float,
+) -> None:
+    """THE commit of a compaction or retrain: one atomic epoch-pointer
+    flip (a crash anywhere before it leaves readers on the old epoch),
+    under the commit lock and guarded. ``expect`` is the gen state the
+    caller snapshotted: an append that committed since wrote rows into
+    the OLD epoch's dirs, so flipping would orphan them (and the meta
+    write would revert its gen advance) — CAS turns the lost update into
+    a loud retry. A flip that landed meanwhile refuses the same way.
+    The retired epoch is swept after the flip."""
+    with epoch_store.commit_lock(index_dir):
+        if expect is not None:
+            epoch_store.check_gen_unchanged(_read_meta(index_dir, codec), expect)
+        if epoch_store.read_epoch(index_dir) != epoch:
+            raise epoch_store.ConcurrentWriteError(
+                f"{codec.label} index {index_dir} epoch moved past {epoch} during "
+                f"{action}; re-run against the new epoch"
+            )
+        epoch_store.commit_epoch(index_dir, epoch + 1)
+        if new_meta is not None:
+            _write_index_json(os.path.join(index_dir, codec.meta), new_meta)
+    epoch_store.sweep_stale_epochs(
+        index_dir, [codec.data], epoch + 1, retention_sec=retention_sec
+    )
+
+
+def ivf_build_index(
+    embeddings: DataFrame,
+    out_dir: str,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_centroids: int = 8,
+    iters: int = 3,
+    train_mod: int = 1,
+    stream_epoch: tuple[str, int] | None = None,
+) -> list[list[float]]:
+    """Persist a cell-partitioned IVF index with the raw codec: vectors
+    written as parquet PARTITIONED BY their Voronoi cell (``cell=<i>/``
+    directories), plus the trained centroids as JSON metadata and the
+    build-time fit in ``stats.json``. Returns the centroids.
+
+    This is what makes the IVF pruning claim physical: a query that
+    probes ``nprobe`` of ``n_centroids`` cells compiles to a scan whose
+    ``PartitionFilters`` prune the other directories — the unprobed
+    (1 - nprobe/n_centroids) of the corpus is never READ, not merely
+    never ranked (asserted on the executed plan in tests).
+
+    A streaming first-batch build passes ``stream_epoch`` to record its
+    micro-batch id in the same commit — a replay (crash between this
+    commit and the streaming checkpoint) would otherwise take the APPEND
+    path (stats.json now exists) and duplicate batch 0.
+    """
+    prior = {}
+    if stream_epoch is not None:
+        prior["stream_epochs"] = {str(stream_epoch[0]): int(stream_epoch[1])}
+    return _build(
+        embeddings,
+        out_dir,
+        _RAW,
+        prior,
+        id_col=id_col,
+        vec_col=vec_col,
+        n_centroids=n_centroids,
+        iters=iters,
+        train_mod=train_mod,
+    )["centroids"]
 
 
 def ivf_pq_build_index(
@@ -1394,11 +1237,9 @@ def ivf_pq_build_index(
     only by the final skinny id-join re-rank in
     :func:`ivf_pq_query_index`.
 
-    ``residual=True`` is the FAISS-shape refinement: codes quantize
-    ``x - centroid[cell]`` instead of the raw vector. Residuals
-    concentrate near zero, so the same codebook budget reconstructs
-    tighter (pinned by the MSE test). Dot-product ADC needs NO
-    per-cell tables for this: ``dot(q, centroid_c + recon) =
+    ``residual=True`` quantizes ``x - centroid[cell]`` instead of the
+    raw vector (pinned tighter by the MSE test). Dot-product ADC needs
+    NO per-cell tables for this: ``dot(q, centroid_c + recon) =
     dot(q, centroid_c) + Σ_j lut[j][code_j]`` — a driver-computed
     scalar bias per probed cell plus the one query-global table.
 
@@ -1406,67 +1247,39 @@ def ivf_pq_build_index(
     ``centroids.json``, ``pq_codebooks.json`` and ``index_meta.json``.
     Returns ``{"centroids": ..., "codebooks": ...}``.
     """
-    import json
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    epoch_store.clear_index(out_dir, ["codes"])
-    centroids = ivf_train_centroids(
+    artifacts = _build(
         embeddings,
+        out_dir,
+        _PQ,
+        {"residual": residual},
         id_col=id_col,
         vec_col=vec_col,
         n_centroids=n_centroids,
         iters=iters,
         train_mod=train_mod,
+        m=m,
+        k_sub=k_sub,
+        dim=dim,
+        codebooks=codebooks,
     )
-    with_cell = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_v"),
-        _assign_col(F.col(vec_col), centroids).alias("cell"),
-    )
-    enc_src = with_cell
-    if residual:
-        cent_lit = _centroid_literal(centroids)
-        enc_src = with_cell.withColumn(
-            "_v",
-            F.zip_with(
-                F.col("_v"),
-                F.element_at(cent_lit, F.col("cell") + 1),
-                lambda x, c: x.cast("double") - c,
-            ),
-        )
-    if codebooks is None:
-        codebooks = pq_train(
-            enc_src,
-            id_col="vec_id",
-            vec_col="_v",
-            m=m,
-            k=k_sub,
-            iters=iters,
-            train_mod=train_mod,
-            dim=dim,
-        )
-    # cell + codes in ONE map-only projection — no build-time join
-    d_sub = len(codebooks[0][0])
-    out = pq_encode(enc_src, codebooks, id_col="vec_id", vec_col="_v", keep=["cell"])
-    out.withColumn("gen", F.lit(0).cast("bigint")).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(epoch_store.data_dir(out_dir, "codes", 0))
-    with open(os.path.join(out_dir, "centroids.json"), "w") as f:
-        json.dump(centroids, f)
-    with open(os.path.join(out_dir, "pq_codebooks.json"), "w") as f:
-        json.dump(codebooks, f)
-    _write_index_json(
-        os.path.join(out_dir, "index_meta.json"),
-        {
-            "residual": residual,
-            "m": len(codebooks),
-            "d_sub": d_sub,
-            "gen": 0,
-            "orphans": [],
-        },
-    )
-    return {"centroids": centroids, "codebooks": codebooks}
+    return {"centroids": artifacts["centroids"], "codebooks": artifacts["pq_codebooks"]}
+
+
+def ivf_query_index(
+    spark,
+    index_dir: str,
+    query_vec: list[float],
+    *,
+    k: int = 10,
+    nprobe: int = 3,
+) -> DataFrame:
+    """Serve one query from a persisted raw IVF index: pick the
+    ``nprobe`` cells nearest the query from the (tiny) centroid
+    metadata, scan ONLY those partitions, exact-cosine re-rank inside
+    them — ``(vec_id, cos_sim)``."""
+    probe = _probe_cells(query_vec, _read_epoch_json(index_dir, "centroids"), nprobe)
+    cand = _live_rows(spark, index_dir, _RAW, _read_meta(index_dir, _RAW), cells=probe)
+    return brute_force_topk(cand, query_vec, k=k)
 
 
 def ivf_pq_query_index(
@@ -1485,8 +1298,8 @@ def ivf_pq_query_index(
 
     1. pick ``nprobe`` cells from the centroid metadata (driver-side);
     2. scan ONLY those code partitions (``cell IN (...)`` →
-       PartitionFilters — same physical pruning as the float IVF
-       index, but over the 32×-smaller code table);
+       PartitionFilters — same physical pruning as the raw index, but
+       over the 32×-smaller code table);
     3. ADC-score the probed codes (m lookups/row) and keep the top
        ``refine * k`` by ADC;
     4. if ``embeddings`` is given, rehydrate ONLY those survivors'
@@ -1495,149 +1308,285 @@ def ivf_pq_query_index(
        cos_sim)``); otherwise return the ADC ranking (``(vec_id,
        adc_score)``).
     """
-    import json
-    import os
-
-    centroids = _read_epoch_json(index_dir, "centroids")
-    codebooks = _read_epoch_json(index_dir, "pq_codebooks")
-    meta_path = os.path.join(index_dir, "index_meta.json")
-    index_meta: dict = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            index_meta = json.load(f)
-    residual = bool(index_meta.get("residual", False))
-
-    def d2(c: list[float]) -> float:
-        return sum((float(x) - float(y)) ** 2 for x, y in zip(query_vec, c))
-
-    probe = sorted(range(len(centroids)), key=lambda i: (d2(centroids[i]), i))[:nprobe]
-    codes = epoch_store.apply_gen_filter(
-        epoch_store.read_gen_data(spark, index_dir, "codes"), index_meta
-    ).where(F.col("cell").isin([int(p) for p in probe]))
-    tomb_dir = epoch_store.data_dir(index_dir, "tombstones")
-    if os.path.exists(tomb_dir):
-        # merge-on-read deletes (ivf_pq_delete) — same contract as the
-        # float IVF index's ivf_delete
-        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
-        codes = codes.join(F.broadcast(tomb), "vec_id", "left_anti")
-    n_short = refine * k if embeddings is not None else k
-    if not residual:
-        shortlist = pq_topk(codes, codebooks, query_vec, k=n_short)
-    else:
+    artifacts = _read_artifacts(index_dir, _PQ)
+    centroids, codebooks = artifacts["centroids"], artifacts["pq_codebooks"]
+    meta = _read_meta(index_dir, _PQ)
+    probe = _probe_cells(query_vec, centroids, nprobe)
+    codes = _live_rows(spark, index_dir, _PQ, meta, cells=probe)
+    score = _adc_score_col(codebooks, query_vec, "pq_codes")
+    if meta.get("residual", False):
         # residual ADC for dot scoring: the global code table plus a
         # per-probed-cell scalar bias dot(q, centroid_c) — still one
         # pruned scan, nprobe literal CASE arms, no per-cell tables
-        score = _adc_score_col(codebooks, query_vec, "pq_codes")
         bias = None
         for c in probe:
-            bval = F.lit(
-                sum(float(x) * float(y) for x, y in zip(query_vec, centroids[c]))
-            )
-            bias = (
-                F.when(F.col("cell") == int(c), bval)
-                if bias is None
-                else bias.when(F.col("cell") == int(c), bval)
-            )
-        shortlist = (
-            codes.select(
-                F.col("vec_id"), (score + bias).alias("adc_score")
-            )
-            .orderBy(F.desc("adc_score"), "vec_id")
-            .limit(n_short)
-        )
+            bval = F.lit(sum(float(x) * float(y) for x, y in zip(query_vec, centroids[c])))
+            arm = F.col("cell") == c
+            bias = F.when(arm, bval) if bias is None else bias.when(arm, bval)
+        score = score + bias
+    shortlist = (
+        codes.select("vec_id", score.alias("adc_score"))
+        .orderBy(F.desc("adc_score"), "vec_id")
+        .limit(refine * k if embeddings is not None else k)
+    )
     if embeddings is None:
         return shortlist
     rehydrated = shortlist.select("vec_id").join(
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
-        ),
+        embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")),
         "vec_id",
     )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        rehydrated.select(
-            "vec_id", cosine_similarity(F.col("_v"), q).alias("cos_sim")
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(k)
-    )
+    return brute_force_topk(rehydrated, query_vec, vec_col="_v", k=k)
 
 
-def ivf_pq_append(
+def _drift(stats: dict) -> dict:
+    build = stats["build_mean_dist"]
+    return {
+        "mean_dist": round(stats["mean_dist"], 6),
+        "build_mean_dist": round(build, 6),
+        "drift": round(stats["mean_dist"] / build - 1, 6) if build else None,
+    }
+
+
+def ivf_append(
     new_vectors: DataFrame,
     index_dir: str,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> int:
-    """IVF-PQ index maintenance: encode a new batch with the EXISTING
-    codebooks, assign it to the existing cells (both map-only
-    broadcast-literal passes — no retrain, no stored-corpus scan), and
-    append into the cell-partitioned code layout. Returns the number of
-    rows appended. Codebook/centroid drift tracking belongs to the
-    float index's ``ivf_staleness`` pattern; when the coarse cells go
-    stale the PQ codebooks trained on the same distribution are stale
-    too, so the retrain trigger is shared.
+    stream_epoch: tuple[str, int] | None = None,
+) -> dict:
+    """Index maintenance for either codec: assign a new batch to the
+    EXISTING cells (and for PQ encode it with the existing codebooks —
+    no retrain, map-only broadcast-literal passes) and append-write it
+    into the cell-partitioned layout, so queries see the new vectors
+    immediately with partition pruning intact. Append is batch-bounded:
+    it touches only the batch rows, never the stored corpus. Returns
+    ``{"n_appended": n}``, plus for the raw codec the updated staleness
+    stats.
 
-    Crash-retry safe (same protocol as the search/shingle/IVF indexes):
-    gen-tagged through the per-epoch attempt marker, visible only after
-    the index_meta.json commit records the gen.
+    Staleness (raw): the index records mean distance-to-assigned-centroid
+    at build time; each append folds its batch into a running mean. When
+    the running mean drifts well above the build mean (``drift`` =
+    mean/build − 1), the data distribution has moved away from the
+    trained centroids — cells are getting baggy, probes less selective
+    — and it is time to :func:`ivf_retrain`. PQ codebooks trained on the
+    same distribution go stale with the cells, so the trigger is shared.
+
+    Crash-retry safe (same protocol as the search/shingle indexes): the
+    batch is gen-tagged through the per-epoch attempt marker and becomes
+    visible only when the meta commit records the gen; a crashed
+    append's partial rows stay orphaned forever.
+
+    ``stream_epoch=(stream_id, epoch_id)`` records the last applied
+    streaming micro-batch INSIDE the same atomic meta commit —
+    foreachBatch is at-least-once, so a crash AFTER this commit but
+    BEFORE the streaming checkpoint commit replays the micro-batch, and
+    without the marker the replay would blind-append the same vec_ids
+    under a fresh gen (duplicates would serve). The stream maintainer
+    (streaming/vector_stream.py) short-circuits replayed epoch_ids.
     """
-    import json
-    import os
-
-    centroids = _read_epoch_json(index_dir, "centroids")
-    codebooks = _read_epoch_json(index_dir, "pq_codebooks")
-    meta_path = os.path.join(index_dir, "index_meta.json")
-    index_meta: dict = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            index_meta = json.load(f)
-    residual = bool(index_meta.get("residual", False))
-    expect = epoch_store.gen_state(index_meta)
+    codec = _codec(index_dir)
+    artifacts = _read_artifacts(index_dir, codec)
+    meta = _read_meta(index_dir, codec)
+    expect = epoch_store.gen_state(meta)
     epoch = epoch_store.read_epoch(index_dir)
-    gen = epoch_store.next_attempt_gen(index_dir, epoch, index_meta.get("gen", 0))
-    with_cell = new_vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_v"),
-        _assign_col(F.col(vec_col), centroids).alias("cell"),
-    )
-    if residual:
-        cent_lit = _centroid_literal(centroids)
-        with_cell = with_cell.withColumn(
-            "_v",
-            F.zip_with(
-                F.col("_v"),
-                F.element_at(cent_lit, F.col("cell") + 1),
-                lambda x, c: x.cast("double") - c,
-            ),
+    gen = epoch_store.next_attempt_gen(index_dir, epoch, meta.get("gen", 0))
+    if codec is _RAW:
+        # conform the batch's vector type to the stored layout (a footer
+        # read, no data scan): arithmetic upstream of an append silently
+        # promotes float arrays to double, and mixed element types in one
+        # partitioned dataset fail every subsequent read
+        stored = new_vectors.sparkSession.read.parquet(
+            epoch_store.data_dir(index_dir, codec.data)
+        ).schema["embedding"].dataType
+        rows = _raw_rows(new_vectors, artifacts["centroids"], id_col, vec_col, stored)
+    else:
+        enc = _pq_source(
+            new_vectors, artifacts["centroids"], id_col, vec_col, bool(meta.get("residual"))
         )
-    batch = pq_encode(with_cell, codebooks, id_col="vec_id", vec_col="_v", keep=["cell"])
-    n = batch.count()
-    # one file per touched cell per append (see ivf_append)
-    batch = batch.repartition(F.col("cell"))
-    batch.withColumn("gen", F.lit(gen).cast("bigint")).write.mode(
+        rows = pq_encode(
+            enc, artifacts["pq_codebooks"], id_col="vec_id", vec_col="_v", keep=["cell"]
+        )
+    # cluster the batch by cell before the write: one file per touched
+    # cell per append instead of one per (shuffle partition, cell) —
+    # measured ~300 files per 500-row append without this, which is the
+    # MOR file-count amplification the maintenance_report exists to
+    # bound. The extra shuffle is batch-sized, O(batch)
+    rows = rows.repartition(F.col("cell"))
+    rows.drop("_dist").withColumn("gen", F.lit(gen).cast("bigint")).write.mode(
         "append"
-    ).partitionBy("cell").parquet(epoch_store.data_dir(index_dir, "codes"))
+    ).partitionBy("cell").parquet(epoch_store.data_dir(index_dir, codec.data))
+    if codec is _RAW:
+        b = rows.agg(F.avg("_dist").alias("m"), F.count(F.lit(1)).alias("n")).first()
+        bm, bn = float(b["m"] or 0.0), int(b["n"])
+        n0, m0 = meta["n_vectors"], meta["mean_dist"]
+        meta["n_vectors"] = n0 + bn
+        if meta["n_vectors"]:
+            meta["mean_dist"] = (m0 * n0 + bm * bn) / meta["n_vectors"]
+        out = {"n_appended": bn, "batch_mean_dist": round(bm, 6)}
+    else:
+        out = {"n_appended": rows.count()}
+    if stream_epoch is not None:
+        sid, eid = stream_epoch
+        meta["stream_epochs"] = {**(meta.get("stream_epochs") or {}), str(sid): int(eid)}
     # CAS under the commit lock: a concurrent writer's committed gen
-    # must not be dropped, and the lock makes check→replace atomic.
-    # Epoch check: see ivf_append — a mid-append flip strands this
-    # batch's rows in the old epoch's dirs
+    # must not be dropped, and the lock makes the check→replace window
+    # atomic (not merely best-effort). The epoch check closes the
+    # append∥compact/retrain race: a flip that landed mid-append
+    # rewrote the OLD epoch's cell dirs, so this append's rows are
+    # invisible in the new epoch — committing the gen anyway would
+    # record rows no reader can see
     with epoch_store.commit_lock(index_dir):
         live_epoch = epoch_store.read_epoch(index_dir)
         if live_epoch != epoch:
-            # burn the gen in the new epoch's marker first (see
-            # ivf_append / shingle twin)
+            # burn the gen in the new epoch's marker first: rows that
+            # landed post-flip sit in the NEW dirs, and a retry reusing
+            # this gen would double-count them (see shingle twin)
             epoch_store.next_attempt_gen(index_dir, live_epoch, gen)
             raise epoch_store.ConcurrentWriteError(
-                f"IVF-PQ index {index_dir} epoch moved past {epoch} "
+                f"{codec.label} index {index_dir} epoch moved past {epoch} "
                 "during this append; retry against the new epoch"
             )
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                epoch_store.check_gen_unchanged(json.load(f), expect)
-        _write_index_json(meta_path, epoch_store.advance_gen(index_meta, gen))
+        epoch_store.check_gen_unchanged(_read_meta(index_dir, codec), expect)
+        _write_index_json(
+            os.path.join(index_dir, codec.meta), epoch_store.advance_gen(meta, gen)
+        )
+    if codec is _RAW:
+        out.update(_drift(meta))
+    return out
+
+
+def ivf_staleness(index_dir: str) -> dict:
+    """Current staleness of a persisted raw IVF index (metadata-only —
+    no Spark job): drift of the running mean centroid distance over the
+    build-time mean. Retrain when drift is large."""
+    stats = _read_meta(index_dir, _RAW)
+    return {"n_vectors": stats["n_vectors"], **_drift(stats)}
+
+
+def ivf_delete(spark, index_dir: str, ids: list) -> int:
+    """Right-to-be-forgotten for either codec: tombstone vector ids in
+    O(|ids|) (same merge-on-read recipe as the shingle/search indexes —
+    rewriting cell partitions per deletion request would be O(corpus));
+    every read path anti-joins the tombstones and :func:`ivf_compact`
+    folds them. Raw ``stats.json`` stays at build-time values: it drives
+    the RETRAIN decision, not result correctness."""
+    id_df = local_frame(spark, [(int(i),) for i in ids], "vec_id long").distinct()
+    n = id_df.count()
+    id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
     return n
+
+
+def ivf_compact(spark, index_dir: str, *, retention_sec: float = 0.0) -> None:
+    """Fold tombstones, orphaned gens and the many small appended files
+    into a new epoch of the cell-partitioned data, committed by one
+    guarded epoch-pointer flip (see :func:`_flip`). No tombstones is
+    still a reason to compact: folding small files bounds MOR read
+    amplification (the maintenance report's file-count signal)."""
+    codec = _codec(index_dir)
+    epoch = epoch_store.read_epoch(index_dir)
+    meta = _read_meta(index_dir, codec)
+    live = _live_rows(spark, index_dir, codec, meta, epoch=epoch)
+    _stage(live, index_dir, codec, epoch + 1)
+    # orphaned gens were physically dropped by the gen filter
+    _flip(
+        index_dir,
+        codec,
+        epoch,
+        "compaction",
+        {**meta, "orphans": []} if meta.get("orphans") else None,
+        expect=epoch_store.gen_state(meta),
+        retention_sec=retention_sec,
+    )
+
+
+def ivf_retrain(
+    spark,
+    index_dir: str,
+    embeddings: DataFrame | None = None,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    iters: int = 3,
+    train_mod: int = 1,
+    retention_sec: float = 0.0,
+):
+    """Retrain the index as a crash-safe EPOCH FLIP — the answer to a
+    baggy :func:`ivf_staleness` drift. The built shape is kept: the
+    centroid count (and for PQ ``m``, ``k_sub`` and ``dim``) is read
+    from the index. The new layout and its artifacts stage into
+    ``*_ep<k+1>`` names; the ONLY commit is the epoch-pointer flip, so a
+    crash anywhere before it leaves readers on the old epoch with the
+    old centroids. The fresh meta resets the drift baseline while
+    PRESERVING the streaming replay markers. Returns what the codec's
+    build returns.
+
+    * raw: trains on the index's OWN committed live vectors (gen filter
+      + tombstones), so the flip is guarded by the gen CAS as well as
+      the epoch CAS — an append that committed after the training
+      snapshot holds rows the flip would silently drop. (A crash between
+      flip and meta write serves the NEW epoch under the OLD stats —
+      gens there are all 0 and the gen filter keeps gen<=hi, so rows
+      still serve; only the drift baseline is stale until the write.)
+    * PQ: codes are lossy, so retraining needs the ORIGINAL floats —
+      ``embeddings`` (the source table) is required, and refused for
+      raw. Membership stays the index's: the live code rows pick which
+      ids re-encode, via a semi-join. Only the epoch CAS guards: the
+      rebuild resets gen 0 over mid-retrain appends by the
+      rebuild-replaces contract (their rows are expected in the source).
+
+    O(corpus) by nature (every vector reassigns) — that is what retrain
+    means; the drift signal exists so it is paid only when the cells
+    went baggy.
+    """
+    codec = _codec(index_dir)
+    if (embeddings is None) != (codec is _RAW):
+        raise ValueError(
+            "PQ retrain re-encodes from the source table: pass embeddings"
+            if codec is _PQ
+            else "raw IVF retrain trains on the index's own vectors: "
+            "embeddings is not accepted"
+        )
+    meta = _read_meta(index_dir, codec)
+    built = _read_artifacts(index_dir, codec)
+    epoch = epoch_store.read_epoch(index_dir)
+    live = _live_rows(spark, index_dir, codec, meta, epoch=epoch)
+    shape = {"n_centroids": len(built["centroids"])}
+    if codec is _RAW:
+        src = live.select("vec_id", "embedding")
+        expect = epoch_store.gen_state(meta)
+    else:
+        books = built["pq_codebooks"]
+        shape.update(m=len(books), k_sub=len(books[0]), dim=len(books) * len(books[0][0]))
+        src = embeddings.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        ).join(live.select("vec_id").distinct(), "vec_id", "semi")
+        expect = None
+    artifacts, new_meta = _train_stage(
+        src, index_dir, codec, epoch + 1, meta, iters=iters, train_mod=train_mod, **shape
+    )
+    _flip(
+        index_dir,
+        codec,
+        epoch,
+        "retrain",
+        new_meta,
+        expect=expect,
+        retention_sec=retention_sec,
+    )
+    if codec is _RAW:
+        return artifacts["centroids"]
+    return {"centroids": artifacts["centroids"], "codebooks": artifacts["pq_codebooks"]}
+
+
+def ivf_maintenance_report(index_dir: str, **kw) -> dict:
+    """Compaction-cadence signal for either codec (metadata-only —
+    parquet footers + the meta file): dead/tombstone row fractions, live
+    file count, ``should_compact`` + reasons. Run :func:`ivf_compact`
+    when it fires; retrain-vs-compact is a separate decision
+    (:func:`ivf_staleness` answers that one)."""
+    codec = _codec(index_dir)
+    return epoch_store.maintenance_report(index_dir, codec.data, codec.meta, **kw)
 
 
 def _cosine_assign_col(vec_col: Column, centroids: list[list[float]]) -> Column:
@@ -1649,9 +1598,7 @@ def _cosine_assign_col(vec_col: Column, centroids: list[list[float]]) -> Column:
     one vector-norm fold. Cosine assignment (vs L2) makes the
     clustering scale-invariant — the paper's setup (SemDeDup clusters
     L2-normalized embeddings, where L2-argmin ≡ cosine-argmax)."""
-    import math
-
-    cents = _centroid_literal(centroids)
+    cents = _matrix_literal(centroids)
     norms = [math.sqrt(sum(float(v) * float(v) for v in c)) for c in centroids]
     if all(math.isfinite(n) for n in norms):
         norms_lit = F.expr(
@@ -1832,177 +1779,3 @@ def dequantize_int8(
         "vec_approx",
         F.transform(F.col(codes_col), lambda c: c.cast("double") * F.col(scale_col)),
     )
-
-
-def ivf_pq_delete(spark, index_dir: str, ids: list) -> int:
-    """Right-to-be-forgotten for the IVF-PQ codes index — identical
-    tombstone contract to :func:`ivf_delete` (O(|ids|) append, read-path
-    anti-join, fold with :func:`ivf_pq_compact`)."""
-    import os
-
-    id_df = local_frame(spark, [(int(i),) for i in ids], "vec_id long").distinct()
-    n = id_df.count()
-    id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
-    return n
-
-
-def ivf_pq_compact(spark, index_dir: str, *, retention_sec: float = 0.0) -> None:
-    """Fold IVF-PQ tombstones into the cell-partitioned code table,
-    committed by one atomic epoch-pointer flip (see ``epoch_store``)."""
-    import os
-
-    import json
-
-    tomb_dir = epoch_store.data_dir(index_dir, "tombstones")
-    epoch = epoch_store.read_epoch(index_dir)
-    meta_path = os.path.join(index_dir, "index_meta.json")
-    index_meta: dict = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            index_meta = json.load(f)
-    live = epoch_store.apply_gen_filter(
-        epoch_store.read_gen_data(spark, index_dir, "codes", epoch),
-        index_meta,
-    )
-    # tombstone-free compaction still folds small files + orphaned gens
-    if os.path.exists(tomb_dir):
-        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
-        live = live.join(F.broadcast(tomb), "vec_id", "left_anti")
-    new_epoch = epoch + 1
-    # one file per cell after the fold (see ivf_compact)
-    live = live.repartition(F.col("cell"))
-    # overwrite: retry after a crash mid-staged-write must not abort on
-    # the leftover partial *_ep<k+1> dir
-    live.write.mode("overwrite").partitionBy("cell").parquet(
-        epoch_store.data_dir(index_dir, "codes", new_epoch)
-    )
-    # guarded flip — same append∥compact race as ivf_compact
-    with epoch_store.commit_lock(index_dir):
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                epoch_store.check_gen_unchanged(
-                    json.load(f), epoch_store.gen_state(index_meta)
-                )
-        if epoch_store.read_epoch(index_dir) != epoch:
-            raise epoch_store.ConcurrentWriteError(
-                f"IVF-PQ index {index_dir} epoch moved past {epoch} "
-                "during compaction; re-run against the new epoch"
-            )
-        epoch_store.commit_epoch(index_dir, new_epoch)
-        # orphaned gens were physically dropped by the filter above
-        if index_meta.get("orphans"):
-            index_meta["orphans"] = []
-            _write_index_json(meta_path, index_meta)
-    epoch_store.sweep_stale_epochs(
-        index_dir, ["codes"], new_epoch, retention_sec=retention_sec
-    )
-
-
-def ivf_pq_retrain(
-    spark,
-    index_dir: str,
-    embeddings: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    iters: int = 3,
-    m: int = 8,
-    k_sub: int = 16,
-    dim: int | None = None,
-    train_mod: int = 1,
-    retention_sec: float = 0.0,
-) -> dict:
-    """Retrain the IVF-PQ index's centroids AND codebooks as a
-    crash-safe EPOCH FLIP (round 8; closes the last manual-rebuild note
-    in SCALE.md) — the PQ analog of :func:`ivf_retrain`.
-
-    PQ codes are lossy, so retraining needs the ORIGINAL float vectors:
-    ``embeddings`` is the source table; membership stays the INDEX's —
-    the committed live code rows (gen filter + tombstones) pick which
-    ids re-encode, via a semi-join against the source. The residual
-    flag is preserved from the existing index_meta. All three artifacts
-    (codes_ep<k+1>, centroids_ep<k+1>.json, pq_codebooks_ep<k+1>.json)
-    stage first; the ONLY commit is the epoch-pointer flip, so a crash
-    anywhere before it leaves every reader on the old consistent
-    triple.
-    """
-    import json
-    import os
-
-    meta_path = os.path.join(index_dir, "index_meta.json")
-    index_meta: dict = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            index_meta = json.load(f)
-    residual = bool(index_meta.get("residual", False))
-    epoch = epoch_store.read_epoch(index_dir)
-
-    live_ids = epoch_store.apply_gen_filter(
-        epoch_store.read_gen_data(spark, index_dir, "codes", epoch), index_meta
-    ).select("vec_id")
-    tomb_dir = epoch_store.data_dir(index_dir, "tombstones")
-    if os.path.exists(tomb_dir):
-        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
-        live_ids = live_ids.join(F.broadcast(tomb), "vec_id", "left_anti")
-    src = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
-    ).join(live_ids.distinct(), "vec_id", "semi")
-
-    centroids = ivf_train_centroids(
-        src, id_col="vec_id", vec_col="_v",
-        n_centroids=n_centroids, iters=iters, train_mod=train_mod,
-    )
-    with_cell = src.select(
-        "vec_id", "_v", _assign_col(F.col("_v"), centroids).alias("cell")
-    )
-    enc_src = with_cell
-    if residual:
-        cent_lit = _centroid_literal(centroids)
-        enc_src = with_cell.withColumn(
-            "_v",
-            F.zip_with(
-                F.col("_v"),
-                F.element_at(cent_lit, F.col("cell") + 1),
-                lambda x, c: x.cast("double") - c,
-            ),
-        )
-    codebooks = pq_train(
-        enc_src, id_col="vec_id", vec_col="_v",
-        m=m, k=k_sub, iters=iters, train_mod=train_mod, dim=dim,
-    )
-    out = pq_encode(enc_src, codebooks, id_col="vec_id", vec_col="_v", keep=["cell"])
-    new_epoch = epoch + 1
-    out.withColumn("gen", F.lit(0).cast("bigint")).repartition(
-        F.col("cell")
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        epoch_store.data_dir(index_dir, "codes", new_epoch)
-    )
-    for base, payload in (("centroids", centroids), ("pq_codebooks", codebooks)):
-        tmp = _epoch_json_path(index_dir, base, new_epoch) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, _epoch_json_path(index_dir, base, new_epoch))
-    # THE commit: flip the pointer — codes + centroids + codebooks
-    # become visible together. Guarded against a concurrent flip only:
-    # unlike ivf_retrain_index this rebuilds from the EXTERNAL source
-    # table, so resetting gen 0 over mid-retrain appends is the
-    # documented rebuild-replaces contract (their rows are expected in
-    # the source); a concurrent compaction's flip, however, must not be
-    # silently double-advanced.
-    index_meta.update(
-        residual=residual, m=len(codebooks), d_sub=len(codebooks[0][0]),
-        gen=0, orphans=[],
-    )
-    with epoch_store.commit_lock(index_dir):
-        if epoch_store.read_epoch(index_dir) != epoch:
-            raise epoch_store.ConcurrentWriteError(
-                f"IVF-PQ index {index_dir} epoch moved past {epoch} "
-                "during retrain; re-run against the new epoch"
-            )
-        epoch_store.commit_epoch(index_dir, new_epoch)
-        _write_index_json(meta_path, index_meta)
-    epoch_store.sweep_stale_epochs(
-        index_dir, ["codes"], new_epoch, retention_sec=retention_sec
-    )
-    return {"centroids": centroids, "codebooks": codebooks}

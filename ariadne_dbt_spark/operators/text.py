@@ -40,25 +40,10 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     return F.regexp_count(F.lower(c), F.lit(_BPE_ISH))
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.regexp_replace(F.lower(c), "[^a-z0-9\\s]", " "), "\\s+")
-    toks = F.filter(toks, lambda t: F.length(t) >= 1)
-    stops = F.filter(toks, lambda t: t.isin(*STOPWORDS))
-    return F.when(F.size(toks) > 0, F.size(stops).cast("double") / F.size(toks)).otherwise(0.0)
-
-
 def punct_ratio(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     n_punct = F.length(c) - F.length(F.regexp_replace(c, "[^\\w\\s]", ""))
     return F.when(F.length(c) > 0, n_punct.cast("double") / F.length(c)).otherwise(0.0)
-
-
-def mean_word_length(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.filter(F.split(F.trim(c), "\\s+"), lambda t: F.length(t) >= 1)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(0.0)
 
 
 def _idiv(a: Column, b: Column) -> Column:

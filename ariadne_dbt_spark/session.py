@@ -152,14 +152,3 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
 
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
-
-
-def load_tables(spark: SparkSession, sf_dir: str):
-    """Read every synthetic table as a DataFrame (lazy; parquet pushdown)."""
-    return {t: spark.read.parquet(table_path(sf_dir, t)) for t in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for the SQL surface."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -182,12 +182,7 @@ def ivf_ingest_stream(
             if auto_retrain_drift is not None:
                 drift = ivf_staleness(index_dir).get("drift")
                 if drift is not None and drift >= auto_retrain_drift:
-                    ivf_retrain(
-                        batch_df.sparkSession,
-                        index_dir,
-                        n_centroids=n_centroids,
-                        iters=iters,
-                    )
+                    ivf_retrain(batch_df.sparkSession, index_dir, iters=iters)
                     return  # retrain already folded the log
             if auto_compact and ivf_maintenance_report(index_dir, **kw)[
                 "should_compact"

@@ -23,7 +23,7 @@ Derivation (k = p_partkey, identical on both sides):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ariadne_dbt_spark.session import table_path
@@ -274,9 +274,3 @@ def synthetic_index(spark: SparkSession, sf_dir: str):
     idx.cache()
     _CACHE[key] = idx
     return idx
-
-
-def corpus_models(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain models frame (with degrees/centrality) for queries that
-    don't need the full index."""
-    return synthetic_index(spark, sf_dir).models

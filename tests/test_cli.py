@@ -139,32 +139,42 @@ def test_cli_maintain_reports_index_health(tmp_path, capsys, spark):
 def test_cli_maintain_compact_folds_when_signal_fires(tmp_path, capsys, spark):
     """`maintain --compact` folds the log only when should_compact, and
     --retention-sec keeps the retired epoch dir for cross-process
-    readers; the post-fold report is re-emitted with compacted=true."""
+    readers; the post-fold report is re-emitted with compacted=true.
+    Runs for both IVF kinds (raw vectors and PQ codes)."""
     import os
 
     from ariadne_dbt_spark.operators import epoch_store
-    from ariadne_dbt_spark.operators.similarity import ivf_build_index, ivf_delete
+    from ariadne_dbt_spark.operators.similarity import (
+        ivf_build_index,
+        ivf_delete,
+        ivf_pq_build_index,
+    )
 
-    idx = str(tmp_path / "ivf")
     emb = spark.createDataFrame(
         [(i, [float(((i * 7 + j * 3) % 10)) for j in range(8)]) for i in range(30)],
         "vec_id bigint, embedding array<float>",
     )
-    ivf_build_index(emb, idx, n_centroids=4, iters=2)
-    ivf_delete(spark, idx, list(range(10)))  # 33% tombstoned -> fires
-    old_vectors = epoch_store.data_dir(idx, "vectors", epoch_store.read_epoch(idx))
-    out = _run(
-        capsys, "maintain", "--index", idx, "--kind", "ivf",
-        "--compact", "--retention-sec", "3600",
-    )
-    assert out["compacted"] is True
-    assert out["tombstone_rows"] == 0 and out["should_compact"] is False
-    assert os.path.isdir(old_vectors)  # retention kept the retired epoch
-    # signal clear -> a second --compact run is a no-op
-    out2 = _run(
-        capsys, "maintain", "--index", idx, "--kind", "ivf", "--compact",
-    )
-    assert out2["compacted"] is False
+    for kind, data in (("ivf", "vectors"), ("ivf-pq", "codes")):
+        idx = str(tmp_path / kind)
+        if kind == "ivf":
+            ivf_build_index(emb, idx, n_centroids=4, iters=2)
+        else:
+            ivf_pq_build_index(emb, idx, n_centroids=4, iters=2, m=4, k_sub=4)
+        ivf_delete(spark, idx, list(range(10)))  # 33% tombstoned -> fires
+        old_data = epoch_store.data_dir(idx, data, epoch_store.read_epoch(idx))
+        out = _run(
+            capsys, "maintain", "--index", idx, "--kind", kind,
+            "--compact", "--retention-sec", "3600",
+        )
+        assert out["kind"] == kind and out["compacted"] is True
+        assert out["tombstone_rows"] == 0 and out["should_compact"] is False
+        assert out["total_rows"] == 20  # the fold dropped the tombstoned rows
+        assert os.path.isdir(old_data)  # retention kept the retired epoch
+        # signal clear -> a second --compact run is a no-op
+        out2 = _run(
+            capsys, "maintain", "--index", idx, "--kind", kind, "--compact",
+        )
+        assert out2["compacted"] is False
 
 
 def test_cli_maintain_table_kind_reports_and_optimizes(tmp_path, capsys, spark):

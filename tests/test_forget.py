@@ -90,38 +90,58 @@ def test_forget_docs_spans_both_indexes(spark, tmp_path):
 
 
 def test_ivf_delete_and_compact(spark, tmp_path):
+    """Both IVF codecs share one delete/compact lifecycle: a tombstoned
+    vector stops serving at once, and the fold serves the same ranking
+    with the row physically gone."""
+    from functools import partial
+
     from ariadne_dbt_spark.operators.similarity import (
         ivf_build_index,
         ivf_compact,
         ivf_delete,
+        ivf_pq_build_index,
+        ivf_pq_query_index,
         ivf_query_index,
     )
 
-    rows = [
+    raw_rows = [
         (i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)]) for i in range(64)
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx = str(tmp_path / "ivf")
-    ivf_build_index(emb, idx, n_centroids=4, iters=2)
-    q = rows[5][1]
-    before = [r["vec_id"] for r in ivf_query_index(spark, idx, q, k=5, nprobe=4).collect()]
-    assert rows[5][0] in before  # the vector itself is its own neighbor
+    pq_rows = [
+        (i, [float((i * 5 + j * 7) % 13 - 6) for j in range(8)]) for i in range(48)
+    ]
+    raw_build = partial(ivf_build_index, n_centroids=4, iters=2)
+    pq_build = partial(ivf_pq_build_index, n_centroids=4, m=4, k_sub=8, iters=2)
+    cases = [
+        # (codec, rows, query row, k, build, query, data dir)
+        ("raw", raw_rows, 5, 5, raw_build, ivf_query_index, "vectors"),
+        ("pq", pq_rows, 7, 6, pq_build, ivf_pq_query_index, "codes"),
+    ]
+    for codec, rows, qi, k, build, query, data in cases:
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        idx = str(tmp_path / codec)
+        build(emb, idx)
+        q = rows[qi][1]
 
-    ivf_delete(spark, idx, [rows[5][0]])
-    after = [r["vec_id"] for r in ivf_query_index(spark, idx, q, k=5, nprobe=4).collect()]
-    assert rows[5][0] not in after
+        def served():
+            return [r["vec_id"] for r in query(spark, idx, q, k=k, nprobe=4).collect()]
 
-    ivf_compact(spark, idx)
-    assert not os.path.exists(os.path.join(idx, "tombstones"))
-    folded = [r["vec_id"] for r in ivf_query_index(spark, idx, q, k=5, nprobe=4).collect()]
-    assert folded == after
-    ids = {
-        r["vec_id"]
-        for r in spark.read.parquet(
-            epoch_store.data_dir(idx, "vectors")
-        ).select("vec_id").collect()
-    }
-    assert rows[5][0] not in ids and len(ids) == 63
+        assert rows[qi][0] in served()  # the vector itself is its own neighbor
+
+        ivf_delete(spark, idx, [rows[qi][0]])
+        after = served()
+        assert rows[qi][0] not in after
+
+        ivf_compact(spark, idx)
+        assert not os.path.exists(os.path.join(idx, "tombstones"))
+        assert served() == after
+        ids = {
+            r["vec_id"]
+            for r in spark.read.parquet(epoch_store.data_dir(idx, data))
+            .select("vec_id")
+            .collect()
+        }
+        assert rows[qi][0] not in ids and len(ids) == len(rows) - 1
 
 
 def test_forget_docs_includes_ivf(spark, tmp_path):
@@ -142,40 +162,6 @@ def test_forget_docs_includes_ivf(spark, tmp_path):
         ).collect()
     ]
     assert 3 not in got and len(got) == 19
-
-
-def test_ivf_pq_delete_and_compact(spark, tmp_path):
-    from ariadne_dbt_spark.operators.similarity import (
-        ivf_pq_build_index,
-        ivf_pq_compact,
-        ivf_pq_delete,
-        ivf_pq_query_index,
-    )
-
-    rows = [
-        (i, [float((i * 5 + j * 7) % 13 - 6) for j in range(8)]) for i in range(48)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx = str(tmp_path / "ivfpq")
-    ivf_pq_build_index(emb, idx, n_centroids=4, m=4, k_sub=8, iters=2)
-    q = rows[7][1]
-    before = [
-        r["vec_id"] for r in ivf_pq_query_index(spark, idx, q, k=6, nprobe=4).collect()
-    ]
-    assert rows[7][0] in before
-
-    ivf_pq_delete(spark, idx, [rows[7][0]])
-    after = [
-        r["vec_id"] for r in ivf_pq_query_index(spark, idx, q, k=6, nprobe=4).collect()
-    ]
-    assert rows[7][0] not in after
-
-    ivf_pq_compact(spark, idx)
-    assert not os.path.exists(os.path.join(idx, "tombstones"))
-    folded = [
-        r["vec_id"] for r in ivf_pq_query_index(spark, idx, q, k=6, nprobe=4).collect()
-    ]
-    assert folded == after
 
 
 def test_rebuild_clears_tombstones_shingle(spark, tmp_path):

@@ -230,78 +230,73 @@ def _embeddings(spark, ids, dim=8, base=0.0):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
 
 
-def test_ivf_append_crash_retry_no_double_count(spark, tmp_path):
+#: both IVF payload codecs share one lifecycle (ivf_append / ivf_delete /
+#: ivf_compact); each IVF protocol test below runs against both
+CODECS = ("raw", "pq")
+
+
+def _ivf_build(spark, codec, idx, ids):
     from ariadne_dbt_spark.operators.similarity import (
-        ivf_append,
         ivf_build_index,
+        ivf_pq_build_index,
+    )
+
+    if codec == "raw":
+        ivf_build_index(_embeddings(spark, ids), idx, n_centroids=4, iters=2)
+    else:
+        ivf_pq_build_index(
+            _embeddings(spark, ids), idx, n_centroids=4, iters=2, m=4, k_sub=4
+        )
+
+
+def _ivf_served(spark, codec, idx, q, k):
+    """Served vec_ids, full probe (raw: cosine re-rank; PQ: ADC rank)."""
+    from ariadne_dbt_spark.operators.similarity import (
+        ivf_pq_query_index,
         ivf_query_index,
     )
 
-    idx = str(tmp_path / "ivf")
-    ivf_build_index(_embeddings(spark, range(40)), idx, n_centroids=4, iters=2)
-    stats_file = os.path.join(idx, "stats.json")
-    saved = _save(stats_file)
-
-    batch = _embeddings(spark, range(100, 105))
-    ivf_append(batch, idx)
-    _restore(stats_file, saved)  # crash before the stats.json commit
-
-    # orphaned vectors never serve
-    q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
-    got = {r["vec_id"] for r in ivf_query_index(spark, idx, q, k=50, nprobe=4).collect()}
-    assert got.isdisjoint(set(range(100, 105)))
-
-    # retry commits; each appended id serves exactly once
-    ivf_append(batch, idx)
-    with open(stats_file) as f:
-        stats = json.load(f)
-    assert stats["gen"] == 2 and stats["orphans"] == [1]
-    res = ivf_query_index(spark, idx, q, k=100, nprobe=4).collect()
-    ids = [r["vec_id"] for r in res]
-    assert set(range(100, 105)) <= set(ids)
-    assert len(ids) == len(set(ids))
-    # full-probe candidate count = build + ONE committed batch
-    vectors = spark.read.parquet(epoch_store.data_dir(idx, "vectors"))
-    live = epoch_store.apply_gen_filter(vectors, stats)
-    assert live.count() == 45 and vectors.count() == 50
+    query = ivf_query_index if codec == "raw" else ivf_pq_query_index
+    return [r["vec_id"] for r in query(spark, idx, q, k=k, nprobe=4).collect()]
 
 
-def test_ivf_pq_append_crash_retry_no_double_count(spark, tmp_path):
-    from ariadne_dbt_spark.operators.similarity import (
-        ivf_pq_append,
-        ivf_pq_build_index,
-        ivf_pq_query_index,
-    )
+def _ivf_files(codec, idx):
+    """(data dir name, meta file path) of the codec's on-disk layout."""
+    if codec == "raw":
+        return "vectors", os.path.join(idx, "stats.json")
+    return "codes", os.path.join(idx, "index_meta.json")
 
-    idx = str(tmp_path / "ivfpq")
-    ivf_pq_build_index(
-        _embeddings(spark, range(40)), idx, n_centroids=4, iters=2, m=4, k_sub=4
-    )
-    meta_file = os.path.join(idx, "index_meta.json")
-    saved = _save(meta_file)
 
-    batch = _embeddings(spark, range(100, 105))
-    assert ivf_pq_append(batch, idx) == 5
-    _restore(meta_file, saved)  # crash before the index_meta.json commit
+def test_ivf_append_crash_retry_no_double_count(spark, tmp_path):
+    from ariadne_dbt_spark.operators.similarity import ivf_append
 
-    q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
-    got = {
-        r["vec_id"]
-        for r in ivf_pq_query_index(spark, idx, q, k=50, nprobe=4).collect()
-    }
-    assert got.isdisjoint(set(range(100, 105)))
+    for codec in CODECS:
+        idx = str(tmp_path / codec)
+        _ivf_build(spark, codec, idx, range(40))
+        data, meta_file = _ivf_files(codec, idx)
+        saved = _save(meta_file)
 
-    ivf_pq_append(batch, idx)
-    with open(meta_file) as f:
-        meta = json.load(f)
-    assert meta["gen"] == 2 and meta["orphans"] == [1]
-    res = ivf_pq_query_index(spark, idx, q, k=100, nprobe=4).collect()
-    ids = [r["vec_id"] for r in res]
-    assert set(range(100, 105)) <= set(ids)
-    assert len(ids) == len(set(ids))
-    codes = spark.read.parquet(epoch_store.data_dir(idx, "codes"))
-    live = epoch_store.apply_gen_filter(codes, meta)
-    assert live.count() == 45 and codes.count() == 50
+        batch = _embeddings(spark, range(100, 105))
+        assert ivf_append(batch, idx)["n_appended"] == 5
+        _restore(meta_file, saved)  # crash before the meta commit
+
+        # orphaned vectors never serve
+        q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
+        got = set(_ivf_served(spark, codec, idx, q, 50))
+        assert got.isdisjoint(set(range(100, 105)))
+
+        # retry commits; each appended id serves exactly once
+        ivf_append(batch, idx)
+        with open(meta_file) as f:
+            meta = json.load(f)
+        assert meta["gen"] == 2 and meta["orphans"] == [1]
+        ids = _ivf_served(spark, codec, idx, q, 100)
+        assert set(range(100, 105)) <= set(ids)
+        assert len(ids) == len(set(ids))
+        # full-probe candidate count = build + ONE committed batch
+        rows = spark.read.parquet(epoch_store.data_dir(idx, data))
+        live = epoch_store.apply_gen_filter(rows, meta)
+        assert live.count() == 45 and rows.count() == 50
 
 
 def test_ivf_append_aborts_when_compaction_flips_mid_append(
@@ -315,94 +310,80 @@ def test_ivf_append_aborts_when_compaction_flips_mid_append(
     copy can never be resurrected by gen reuse)."""
     import pytest
 
-    from ariadne_dbt_spark.operators.similarity import (
-        ivf_append,
-        ivf_build_index,
-        ivf_compact,
-        ivf_query_index,
-    )
+    from ariadne_dbt_spark.operators.similarity import ivf_append, ivf_compact
 
-    idx = str(tmp_path / "ivf")
-    ivf_build_index(_embeddings(spark, range(40)), idx, n_centroids=4, iters=2)
-
-    state = {"fired": False}
     original_lock = epoch_store.commit_lock
+    for codec in CODECS:
+        idx = str(tmp_path / codec)
+        _ivf_build(spark, codec, idx, range(40))
+        state = {"fired": False}
 
-    def lock_after_flip(target_dir):
-        if not state["fired"]:
-            state["fired"] = True
-            monkeypatch.undo()
-            ivf_compact(spark, idx)  # the concurrent maintainer
-        return original_lock(target_dir)
+        def lock_after_flip(target_dir):
+            if not state["fired"]:
+                state["fired"] = True
+                monkeypatch.undo()
+                ivf_compact(spark, idx)  # the concurrent maintainer
+            return original_lock(target_dir)
 
-    monkeypatch.setattr(epoch_store, "commit_lock", lock_after_flip)
-    batch = _embeddings(spark, range(100, 105))
-    with pytest.raises(epoch_store.ConcurrentWriteError, match="epoch moved"):
+        monkeypatch.setattr(epoch_store, "commit_lock", lock_after_flip)
+        batch = _embeddings(spark, range(100, 105))
+        with pytest.raises(epoch_store.ConcurrentWriteError, match="epoch moved"):
+            ivf_append(batch, idx)
+
+        # refused rows invisible; retry serves each id exactly once
+        q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
+        got = set(_ivf_served(spark, codec, idx, q, 50))
+        assert got.isdisjoint(set(range(100, 105)))
         ivf_append(batch, idx)
-
-    # refused rows invisible; retry serves each id exactly once
-    q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
-    got = {
-        r["vec_id"] for r in ivf_query_index(spark, idx, q, k=50, nprobe=4).collect()
-    }
-    assert got.isdisjoint(set(range(100, 105)))
-    ivf_append(batch, idx)
-    res = ivf_query_index(spark, idx, q, k=100, nprobe=4).collect()
-    ids = [r["vec_id"] for r in res]
-    assert set(range(100, 105)) <= set(ids)
-    assert len(ids) == len(set(ids))
-    with open(os.path.join(idx, "stats.json")) as f:
-        stats = json.load(f)
-    live = epoch_store.apply_gen_filter(
-        spark.read.parquet(epoch_store.data_dir(idx, "vectors")), stats
-    )
-    assert live.count() == 45
+        ids = _ivf_served(spark, codec, idx, q, 100)
+        assert set(range(100, 105)) <= set(ids)
+        assert len(ids) == len(set(ids))
+        data, meta_file = _ivf_files(codec, idx)
+        with open(meta_file) as f:
+            meta = json.load(f)
+        live = epoch_store.apply_gen_filter(
+            spark.read.parquet(epoch_store.data_dir(idx, data)), meta
+        )
+        assert live.count() == 45
 
 
 def test_ivf_compaction_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
     """Mirror direction: an append that commits between ivf_compact's
-    stats snapshot and its flip must abort the compaction (its rows live
+    meta snapshot and its flip must abort the compaction (its rows live
     in the epoch the flip would retire); the re-run folds everything."""
     import pytest
 
-    from ariadne_dbt_spark.operators.similarity import (
-        ivf_append,
-        ivf_build_index,
-        ivf_compact,
-        ivf_query_index,
-    )
+    from ariadne_dbt_spark.operators.similarity import ivf_append, ivf_compact
 
-    idx = str(tmp_path / "ivf")
-    ivf_build_index(_embeddings(spark, range(40)), idx, n_centroids=4, iters=2)
-
-    state = {"fired": False}
     original_lock = epoch_store.commit_lock
     batch = _embeddings(spark, range(100, 105))
+    for codec in CODECS:
+        idx = str(tmp_path / codec)
+        _ivf_build(spark, codec, idx, range(40))
+        state = {"fired": False}
 
-    def lock_after_append(target_dir):
-        if not state["fired"]:
-            state["fired"] = True
-            monkeypatch.undo()
-            ivf_append(batch, idx)  # the concurrent committer
-        return original_lock(target_dir)
+        def lock_after_append(target_dir):
+            if not state["fired"]:
+                state["fired"] = True
+                monkeypatch.undo()
+                ivf_append(batch, idx)  # the concurrent committer
+            return original_lock(target_dir)
 
-    monkeypatch.setattr(epoch_store, "commit_lock", lock_after_append)
-    with pytest.raises(epoch_store.ConcurrentWriteError):
+        monkeypatch.setattr(epoch_store, "commit_lock", lock_after_append)
+        with pytest.raises(epoch_store.ConcurrentWriteError):
+            ivf_compact(spark, idx)
+
+        # nothing flipped; the append stayed fully committed and visible
+        assert epoch_store.read_epoch(idx) == 0
+        q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
+        assert set(range(100, 105)) <= set(_ivf_served(spark, codec, idx, q, 100))
+
+        # the re-run compacts cleanly, keeping the appended vectors
         ivf_compact(spark, idx)
-
-    # nothing flipped; the append stayed fully committed and visible
-    assert epoch_store.read_epoch(idx) == 0
-    q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
-    res = ivf_query_index(spark, idx, q, k=100, nprobe=4).collect()
-    assert set(range(100, 105)) <= {r["vec_id"] for r in res}
-
-    # the re-run compacts cleanly, keeping the appended vectors
-    ivf_compact(spark, idx)
-    assert epoch_store.read_epoch(idx) == 1
-    res = ivf_query_index(spark, idx, q, k=100, nprobe=4).collect()
-    ids = [r["vec_id"] for r in res]
-    assert set(range(100, 105)) <= set(ids)
-    assert len(ids) == len(set(ids))
+        assert epoch_store.read_epoch(idx) == 1
+        ids = _ivf_served(spark, codec, idx, q, 100)
+        assert set(range(100, 105)) <= set(ids)
+        assert len(ids) == len(set(ids))
 
 
 def test_ivf_retrain_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
@@ -435,7 +416,7 @@ def test_ivf_retrain_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(epoch_store, "commit_lock", lock_after_append)
     with pytest.raises(epoch_store.ConcurrentWriteError):
-        ivf_retrain(spark, idx, n_centroids=4, iters=2)
+        ivf_retrain(spark, idx, iters=2)
 
     assert epoch_store.read_epoch(idx) == 0
     q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
@@ -445,7 +426,7 @@ def test_ivf_retrain_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
     }
     assert set(range(100, 105)) <= got
 
-    ivf_retrain(spark, idx, n_centroids=4, iters=2)
+    ivf_retrain(spark, idx, iters=2)
     assert epoch_store.read_epoch(idx) == 1
     res = ivf_query_index(spark, idx, q, k=100, nprobe=4).collect()
     ids = [r["vec_id"] for r in res]
@@ -492,53 +473,22 @@ def test_shingle_append_concurrent_commit_refused(spark, tmp_path):
 
 def test_ivf_compaction_retry_after_staged_dir_leftover(spark, tmp_path):
     """Same ADVICE-r6 shape for the IVF compaction: a partial staged
-    vectors_ep1 dir from a crashed attempt must not wedge the retry."""
-    from ariadne_dbt_spark.operators.similarity import (
-        ivf_build_index,
-        ivf_compact,
-        ivf_delete,
-        ivf_query_index,
-    )
+    ``<data>_ep1`` dir from a crashed attempt must not wedge the retry."""
+    from ariadne_dbt_spark.operators.similarity import ivf_compact, ivf_delete
 
-    idx = str(tmp_path / "ivf")
-    ivf_build_index(_embeddings(spark, range(30)), idx, n_centroids=4, iters=2)
-    ivf_delete(spark, idx, [3])
-    stale = epoch_store.data_dir(idx, "vectors", 1)
-    os.makedirs(stale, exist_ok=True)
-    with open(os.path.join(stale, "part-garbage.parquet"), "w") as f:
-        f.write("not parquet")
-    ivf_compact(spark, idx)
-    assert epoch_store.read_epoch(idx) == 1
-    q = [float(((3 * 7 + j * 3) % 10)) for j in range(8)]
-    got = {r.vec_id for r in ivf_query_index(spark, idx, q, k=30, nprobe=4).collect()}
-    assert 3 not in got and len(got) == 29
-
-
-def test_ivf_pq_compaction_retry_after_staged_dir_leftover(spark, tmp_path):
-    from ariadne_dbt_spark.operators.similarity import (
-        ivf_pq_build_index,
-        ivf_pq_compact,
-        ivf_pq_delete,
-        ivf_pq_query_index,
-    )
-
-    idx = str(tmp_path / "ivfpq")
-    ivf_pq_build_index(
-        _embeddings(spark, range(30)), idx, n_centroids=4, iters=2, m=4, k_sub=4
-    )
-    ivf_pq_delete(spark, idx, [3])
-    stale = epoch_store.data_dir(idx, "codes", 1)
-    os.makedirs(stale, exist_ok=True)
-    with open(os.path.join(stale, "part-garbage.parquet"), "w") as f:
-        f.write("not parquet")
-    ivf_pq_compact(spark, idx)
-    assert epoch_store.read_epoch(idx) == 1
-    q = [float(((3 * 7 + j * 3) % 10)) for j in range(8)]
-    got = {
-        r.vec_id
-        for r in ivf_pq_query_index(spark, idx, q, k=30, nprobe=4).collect()
-    }
-    assert 3 not in got
+    for codec in CODECS:
+        idx = str(tmp_path / codec)
+        _ivf_build(spark, codec, idx, range(30))
+        ivf_delete(spark, idx, [3])
+        stale = epoch_store.data_dir(idx, _ivf_files(codec, idx)[0], 1)
+        os.makedirs(stale, exist_ok=True)
+        with open(os.path.join(stale, "part-garbage.parquet"), "w") as f:
+            f.write("not parquet")
+        ivf_compact(spark, idx)
+        assert epoch_store.read_epoch(idx) == 1
+        q = [float(((3 * 7 + j * 3) % 10)) for j in range(8)]
+        got = set(_ivf_served(spark, codec, idx, q, 30))
+        assert 3 not in got and len(got) == 29
 
 
 def test_legacy_shingle_index_without_gen_still_reads(spark, tmp_path):
@@ -638,25 +588,22 @@ def test_ivf_append_refused_while_lock_held(spark, tmp_path):
     commit — the refused attempt's rows stay orphaned, never served."""
     import pytest
 
-    from ariadne_dbt_spark.operators.similarity import (
-        ivf_append,
-        ivf_build_index,
-        ivf_query_index,
-    )
+    from ariadne_dbt_spark.operators.similarity import ivf_append
 
-    idx = str(tmp_path / "ivf")
-    ivf_build_index(_embeddings(spark, range(30)), idx, n_centroids=4, iters=2)
-    with epoch_store.commit_lock(idx):
-        with pytest.raises(epoch_store.ConcurrentWriteError):
-            ivf_append(_embeddings(spark, range(100, 105)), idx)
-    # the refused batch never serves (its gen was never committed)
-    q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
-    got = {r.vec_id for r in ivf_query_index(spark, idx, q, k=40, nprobe=4).collect()}
-    assert not ({100, 101, 102, 103, 104} & got)
-    # and a retry after the lock is gone succeeds
-    ivf_append(_embeddings(spark, range(100, 105)), idx)
-    got2 = {r.vec_id for r in ivf_query_index(spark, idx, q, k=40, nprobe=4).collect()}
-    assert {100, 101, 102, 103, 104} <= got2
+    for codec in CODECS:
+        idx = str(tmp_path / codec)
+        _ivf_build(spark, codec, idx, range(30))
+        with epoch_store.commit_lock(idx):
+            with pytest.raises(epoch_store.ConcurrentWriteError):
+                ivf_append(_embeddings(spark, range(100, 105)), idx)
+        # the refused batch never serves (its gen was never committed)
+        q = [float(((101 * 7 + j * 3) % 10)) for j in range(8)]
+        got = set(_ivf_served(spark, codec, idx, q, 40))
+        assert not ({100, 101, 102, 103, 104} & got)
+        # and a retry after the lock is gone succeeds
+        ivf_append(_embeddings(spark, range(100, 105)), idx)
+        got2 = set(_ivf_served(spark, codec, idx, q, 40))
+        assert {100, 101, 102, 103, 104} <= got2
 
 
 def test_mixed_legacy_files_resolve_gen_column(spark, tmp_path):

@@ -303,7 +303,7 @@ class TestIvfRetrain:
         drift_before = ivf_staleness(idx)["drift"]
         assert drift_before > 0.5  # the shifted mass made cells baggy
 
-        ivf_retrain(spark, idx, n_centroids=4, iters=2)
+        ivf_retrain(spark, idx, iters=2)
         st = ivf_staleness(idx)
         assert st["drift"] == 0.0  # baseline reset at the new fit
         assert st["n_vectors"] == 58  # 60 - 2 tombstoned
@@ -328,7 +328,7 @@ class TestIvfRetrain:
         idx = str(tmp_path / "ivf")
         b0 = _embeddings(spark, range(20))
         assert apply_vector_batch(b0, idx, "ck", 0, n_centroids=4)
-        ivf_retrain(spark, idx, n_centroids=4, iters=2)
+        ivf_retrain(spark, idx, iters=2)
         with open(os.path.join(idx, "stats.json")) as f:
             st = json.load(f)
         assert st["stream_epochs"] == {"ck": 0}  # replay marker survived
@@ -346,7 +346,7 @@ class TestIvfRetrain:
         """retrain (ep1) then compaction (ep2, no retrain): queries must
         resolve the ep1 centroids, not the stale epoch-0 file."""
         from ariadne_dbt_spark.operators.similarity import (
-            _read_ivf_centroids,
+            _read_epoch_json,
             brute_force_topk,
             ivf_build_index,
             ivf_compact,
@@ -358,10 +358,10 @@ class TestIvfRetrain:
         idx = str(tmp_path / "ivf")
         vec = _embeddings(spark, range(40))
         ivf_build_index(vec, idx, n_centroids=4, iters=2)
-        c1 = ivf_retrain(spark, idx, n_centroids=4, iters=2)
+        c1 = ivf_retrain(spark, idx, iters=2)
         ivf_delete(spark, idx, [5])
         ivf_compact(spark, idx)  # ep2, no centroid rewrite
-        assert _read_ivf_centroids(idx) == c1
+        assert _read_epoch_json(idx, "centroids") == c1
         q = [float(((9 * 7 + j * 3) % 10)) for j in range(8)]
         served = {
             (r.vec_id, round(r.cos_sim, 9))
@@ -414,27 +414,30 @@ class TestIvfRetrain:
 
 class TestIvfPqRetrain:
     def test_pq_retrain_epoch_flip_preserves_results(self, spark, tmp_path):
-        """Round 8: ivf_pq_retrain re-trains centroids AND codebooks
-        over the index's live membership (tombstones folded) from the
-        source embeddings, committed by one epoch flip; full-probe
-        serving equals brute force over the survivors."""
+        """Round 8: ivf_retrain on a PQ index re-trains centroids AND
+        codebooks over the index's live membership (tombstones folded)
+        from the source embeddings, committed by one epoch flip, keeping
+        the built shape; full-probe serving equals brute force over the
+        survivors."""
         from ariadne_dbt_spark.operators import epoch_store
         from ariadne_dbt_spark.operators.similarity import (
             brute_force_topk,
+            ivf_delete,
             ivf_pq_build_index,
-            ivf_pq_delete,
             ivf_pq_query_index,
-            ivf_pq_retrain,
+            ivf_retrain,
         )
 
         idx = str(tmp_path / "pq")
         emb = _embeddings(spark, range(60))
         ivf_pq_build_index(emb, idx, n_centroids=4, iters=2, m=4, k_sub=8)
-        ivf_pq_delete(spark, idx, [2, 3])
-        ivf_pq_retrain(
-            spark, idx, emb, n_centroids=4, iters=2, m=4, k_sub=8
-        )
+        ivf_delete(spark, idx, [2, 3])
+        out = ivf_retrain(spark, idx, emb, iters=2)
         assert epoch_store.read_epoch(idx) == 1
+        # the built shape: 4 cells, m=4 codebooks of k_sub=8 over dim 8
+        assert len(out["centroids"]) == 4
+        assert [len(cb) for cb in out["codebooks"]] == [8] * 4
+        assert {len(c) for cb in out["codebooks"] for c in cb} == {2}
         # artifacts staged under the new epoch's names
         assert os.path.exists(os.path.join(idx, "centroids_ep1.json"))
         assert os.path.exists(os.path.join(idx, "pq_codebooks_ep1.json"))
@@ -452,13 +455,13 @@ class TestIvfPqRetrain:
         assert not ({2, 3} & got)  # tombstoned ids never resurrect
 
         # appends after the retrain land in the new epoch and serve
-        from ariadne_dbt_spark.operators.similarity import ivf_pq_append
+        from ariadne_dbt_spark.operators.similarity import ivf_append
 
         clone = spark.createDataFrame(
             [(1000, [float(((9 * 7 + j * 3) % 10)) for j in range(8)])],
             "vec_id bigint, embedding array<float>",
         )
-        ivf_pq_append(clone, idx)
+        ivf_append(clone, idx)
         got2 = {
             r.vec_id
             for r in ivf_pq_query_index(
@@ -467,3 +470,48 @@ class TestIvfPqRetrain:
             ).collect()
         }
         assert 1000 in got2
+
+    def test_retrain_embeddings_required_for_pq_refused_for_raw(self, tmp_path):
+        """The codec is read from the index dir before any Spark work:
+        PQ retrain re-encodes from the source table and needs it; raw
+        retrain trains on its own vectors and refuses one."""
+        import pytest
+
+        from ariadne_dbt_spark.operators.similarity import ivf_retrain
+
+        raw, pq = tmp_path / "raw", tmp_path / "pq"
+        raw.mkdir()
+        pq.mkdir()
+        (pq / "pq_codebooks.json").write_text("[]")
+        with pytest.raises(ValueError, match="not accepted"):
+            ivf_retrain(None, str(raw), embeddings=object())
+        with pytest.raises(ValueError, match="pass embeddings"):
+            ivf_retrain(None, str(pq))
+
+    def test_rebuild_drops_the_other_codec_and_stale_epoch_artifacts(
+        self, spark, tmp_path
+    ):
+        """A raw rebuild over a retrained PQ index must clear the PQ meta
+        and codebooks (they name the codec) and every ``*_ep<k>.json``:
+        once a compaction walks the epoch back up to 1, a leftover
+        centroids_ep1.json would outrank the rebuilt centroids."""
+        from ariadne_dbt_spark.operators.similarity import (
+            _read_epoch_json,
+            ivf_append,
+            ivf_build_index,
+            ivf_compact,
+            ivf_maintenance_report,
+            ivf_pq_build_index,
+            ivf_retrain,
+        )
+
+        idx = str(tmp_path / "idx")
+        vec = _embeddings(spark, range(40))
+        ivf_pq_build_index(vec, idx, n_centroids=4, iters=2, m=4, k_sub=4)
+        ivf_retrain(spark, idx, vec, iters=2)  # PQ epoch 1 + *_ep1.json
+        cents = ivf_build_index(vec, idx, n_centroids=2, iters=2)
+        assert sorted(os.listdir(idx)) == ["centroids.json", "stats.json", "vectors"]
+        ivf_compact(spark, idx)  # raw epoch 1, no centroid rewrite
+        assert _read_epoch_json(idx, "centroids") == cents
+        assert ivf_maintenance_report(idx)["total_rows"] == 40
+        assert "drift" in ivf_append(_embeddings(spark, range(100, 103)), idx)

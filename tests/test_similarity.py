@@ -475,7 +475,7 @@ def test_ivf_pq_append_serves_new_vectors(spark, tmp_path):
     the cell layout, is served with pruning intact, and — lossless
     construction — still re-ranks exactly."""
     from ariadne_dbt_spark.operators.similarity import (
-        ivf_pq_append,
+        ivf_append,
         ivf_pq_build_index,
         ivf_pq_query_index,
     )
@@ -492,7 +492,7 @@ def test_ivf_pq_append_serves_new_vectors(spark, tmp_path):
     ivf_pq_build_index(
         df, idx, n_centroids=4, iters=2, m=4, codebooks=[points] * 4
     )
-    assert ivf_pq_append(df2, idx) == len(extra)
+    assert ivf_append(df2, idx)["n_appended"] == len(extra)
 
     # query a vector that exists ONLY in the appended batch, full probe.
     # Code-identical base rows tie on ADC and win the vec_id tiebreak,
