@@ -471,24 +471,34 @@ def test_shingle_append_concurrent_commit_refused(spark, tmp_path):
         epoch_store.next_attempt_gen = real_next
 
 
+def _ivf_compaction_retry_after_staged_dir_leftover(spark, codec, idx):
+    from ariadne_dbt_spark.operators.similarity import ivf_compact, ivf_delete
+
+    _ivf_build(spark, codec, idx, range(30))
+    ivf_delete(spark, idx, [3])
+    stale = epoch_store.data_dir(idx, _ivf_files(codec, idx)[0], 1)
+    os.makedirs(stale, exist_ok=True)
+    with open(os.path.join(stale, "part-garbage.parquet"), "w") as f:
+        f.write("not parquet")
+    ivf_compact(spark, idx)
+    assert epoch_store.read_epoch(idx) == 1
+    q = [float(((3 * 7 + j * 3) % 10)) for j in range(8)]
+    got = set(_ivf_served(spark, codec, idx, q, 30))
+    assert 3 not in got and len(got) == 29
+
+
 def test_ivf_compaction_retry_after_staged_dir_leftover(spark, tmp_path):
     """Same ADVICE-r6 shape for the IVF compaction: a partial staged
     ``<data>_ep1`` dir from a crashed attempt must not wedge the retry."""
-    from ariadne_dbt_spark.operators.similarity import ivf_compact, ivf_delete
+    _ivf_compaction_retry_after_staged_dir_leftover(
+        spark, "raw", str(tmp_path / "ivf")
+    )
 
-    for codec in CODECS:
-        idx = str(tmp_path / codec)
-        _ivf_build(spark, codec, idx, range(30))
-        ivf_delete(spark, idx, [3])
-        stale = epoch_store.data_dir(idx, _ivf_files(codec, idx)[0], 1)
-        os.makedirs(stale, exist_ok=True)
-        with open(os.path.join(stale, "part-garbage.parquet"), "w") as f:
-            f.write("not parquet")
-        ivf_compact(spark, idx)
-        assert epoch_store.read_epoch(idx) == 1
-        q = [float(((3 * 7 + j * 3) % 10)) for j in range(8)]
-        got = set(_ivf_served(spark, codec, idx, q, 30))
-        assert 3 not in got and len(got) == 29
+
+def test_ivf_pq_compaction_retry_after_staged_dir_leftover(spark, tmp_path):
+    _ivf_compaction_retry_after_staged_dir_leftover(
+        spark, "pq", str(tmp_path / "ivfpq")
+    )
 
 
 def test_legacy_shingle_index_without_gen_still_reads(spark, tmp_path):
