@@ -37,7 +37,6 @@ expose; serving transport is intentionally thin.
 from __future__ import annotations
 
 import argparse
-import functools
 import json
 import os
 import sys
@@ -386,8 +385,6 @@ def cmd_maintain(args):
     ``--kind table`` targets a managed parquet table
     (operators/table_store.py): the report is the small-file OPTIMIZE
     signal and ``--compact`` runs the epoch-flip rewrite."""
-    from ariadne_dbt_spark.operators import epoch_store
-
     if args.kind == "table":
         from ariadne_dbt_spark.operators import table_store
 
@@ -438,10 +435,10 @@ def cmd_maintain(args):
             ivf_maintenance_report as report_of,
         )
     elif args.kind == "shingle":
-        from ariadne_dbt_spark.operators.dedup import compact_shingle_index as fold
-
-        report_of = functools.partial(
-            epoch_store.maintenance_report, names="postings", meta_file="meta.json"
+        # the shingle report adds the bloom-prefilter health signals
+        from ariadne_dbt_spark.operators.dedup import (
+            compact_shingle_index as fold,
+            shingle_maintenance_report as report_of,
         )
     else:
         from ariadne_dbt_spark.operators.search_index import (

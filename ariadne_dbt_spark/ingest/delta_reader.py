@@ -691,9 +691,9 @@ def delta_checkpoint(table_path: str) -> dict:
     ]
     out = os.path.join(log, f"{version:020d}.checkpoint.parquet")
     pq.write_table(pa.Table.from_pylist(rows), out)
-    from ariadne_dbt_spark.operators.epoch_store import _atomic_write_json
+    from ariadne_dbt_spark.operators.epoch_store import atomic_write_json
 
-    _atomic_write_json(
+    atomic_write_json(
         os.path.join(log, "_last_checkpoint"),
         {"version": version, "size": len(rows)},
     )

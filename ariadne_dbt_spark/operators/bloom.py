@@ -249,20 +249,15 @@ def save_bloom(bloom: BloomFilter, path: str) -> None:
     each written tmp+replace so a concurrent loader never sees a
     half-written bitmap. The json is the commit point — ``load_bloom``
     refuses a bin whose byte length disagrees with it."""
-    import json
     import os
 
+    from ariadne_dbt_spark.operators.epoch_store import atomic_write, atomic_write_json
+
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    tmp = path + ".bin.tmp"
-    with open(tmp, "wb") as f:
-        f.write(bloom.bits)
-    os.replace(tmp, path + ".bin")
-    tmp = path + ".json.tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"m_bits": bloom.m_bits, "k": bloom.k, "seed": bloom.seed}, f
-        )
-    os.replace(tmp, path + ".json")
+    atomic_write(path + ".bin", bloom.bits)
+    atomic_write_json(
+        path + ".json", {"m_bits": bloom.m_bits, "k": bloom.k, "seed": bloom.seed}
+    )
 
 
 def load_bloom(path: str) -> BloomFilter:
@@ -305,10 +300,13 @@ def build_decontamination_index(
     (written LAST — a directory without it is an aborted build and
     :func:`decontaminate_against_index` refuses it).
     """
-    import json
     import os
 
     from ariadne_dbt_spark.operators.dedup import shingle_sets
+    from ariadne_dbt_spark.operators.epoch_store import (
+        _parquet_rows_total,
+        atomic_write_json,
+    )
 
     os.makedirs(out_dir, exist_ok=True)
     meta_path = os.path.join(out_dir, "meta.json")
@@ -321,8 +319,6 @@ def build_decontamination_index(
     # exact row count from the just-written parquet FOOTERS (round 11):
     # driver metadata, zero Spark jobs — the old .count() re-scanned the
     # shingle parquet once per build
-    from ariadne_dbt_spark.operators.epoch_store import _parquet_rows_total
-
     n_grams = _parquet_rows_total(shingles_dir)
     bloom = bloom_build(
         written, "shingle", n_items=max(n_grams, 1), fpp=fpp, seed=seed
@@ -336,10 +332,7 @@ def build_decontamination_index(
         "m_bits": bloom.m_bits,
         "k": bloom.k,
     }
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f, sort_keys=True)
-    os.replace(tmp, meta_path)
+    atomic_write_json(meta_path, meta)
     return meta
 
 

@@ -596,6 +596,8 @@ def decontamination_flags(
 #: directories (physical pruning), small enough that the per-partition
 #: file count stays manageable on object stores
 SHINGLE_INDEX_BUCKETS = 64
+#: the shingle index's tombstone key, as epoch_store.live_rows reads it
+_KEY = "id long"
 
 
 def _shingle_bucket(n_buckets: int):
@@ -630,7 +632,6 @@ def build_shingle_index(
     append-write the accepted batch's own postings with the identical
     bucket expression.
     """
-    import json
     import os
 
     # rebuild-replaces semantics: drop EVERY prior epoch's postings,
@@ -653,19 +654,10 @@ def build_shingle_index(
     written = df.sparkSession.read.parquet(
         epoch_store.data_dir(out_dir, "postings", 0)
     ).select("shingle").distinct()
-    # a rebuild starts the gen log over, so EVERY partial from the
-    # previous index life is stale (clear_index only knows the data
-    # dirs). Never read — a committed gen always rewrites its partial
-    # first — but junk bytes a refold's <=fold_gen cut wouldn't remove.
-    import glob
-
-    for p in glob.glob(os.path.join(out_dir, "_bloom_gen*.bin")):
-        try:
-            os.remove(p)
-        except OSError:
-            pass
+    # (clear_index above also removed every ``_``-prefixed sidecar: the
+    # previous index life's bloom fold and per-gen partials)
     meta = _write_shingle_bloom_fold(out_dir, written, meta, 0)
-    _write_shingle_meta(out_dir, meta)
+    epoch_store.write_meta(out_dir, "meta.json", meta)
     return meta
 
 
@@ -688,17 +680,6 @@ def _bloom_partial_path(index_dir: str, gen: int) -> str:
     import os
 
     return os.path.join(index_dir, f"_bloom_gen{gen}.bin")
-
-
-def _write_bloom_file(path: str, bloom) -> None:
-    """Atomic write of a bloom bitmap (tmp + replace — partial files
-    must never be read half-written by a concurrent flags query)."""
-    import os
-
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(bloom.bits)
-    os.replace(tmp, path)
 
 
 def _write_shingle_bloom_fold(
@@ -730,7 +711,7 @@ def _write_shingle_bloom_fold(
                 pass
         return meta
     bloom = bloom_build(shingles, "shingle", m_bits=m, k=k, seed=11)
-    _write_bloom_file(os.path.join(index_dir, _BLOOM_FOLD_FILE), bloom)
+    epoch_store.atomic_write(os.path.join(index_dir, _BLOOM_FOLD_FILE), bloom.bits)
     meta["bloom"] = {"m": m, "k": k, "seed": 11, "fold_gen": int(fold_gen)}
     for p in glob.glob(os.path.join(index_dir, "_bloom_gen*.bin")):
         g = int(os.path.basename(p)[len("_bloom_gen"):-len(".bin")])
@@ -748,7 +729,8 @@ def load_shingle_bloom(index_dir: str, meta: dict):
     prefilter disabled, flags stay correct via the full join — when the
     sidecar is absent (legacy index) or any required partial is missing
     (a crash between gen reservation and the bloom write; the next
-    compaction's fold rebuild restores the prefilter)."""
+    compaction's fold rebuild restores the prefilter). An EMPTY partial
+    is a committed gen that added no shingles (a delete)."""
     import os
 
     import numpy as np
@@ -779,22 +761,12 @@ def load_shingle_bloom(index_dir: str, meta: dict):
             return None
         with open(p, "rb") as f:
             part = np.frombuffer(f.read(), dtype=np.uint8)
+        if len(part) == 0:
+            continue
         if len(part) != len(bits):
             return None
         bits |= part
     return BloomFilter(int(cfg["m"]), int(cfg["k"]), int(cfg["seed"]), bits.tobytes())
-
-
-def _write_shingle_meta(index_dir: str, meta: dict) -> None:
-    # atomic replace — meta.json is the COMMIT POINT for appends: rows
-    # of a gen not yet recorded here stay invisible (apply_gen_filter)
-    import json
-    import os
-
-    tmp = os.path.join(index_dir, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, sort_keys=True)
-    os.replace(tmp, os.path.join(index_dir, "meta.json"))
 
 
 def append_to_shingle_index(
@@ -810,79 +782,48 @@ def append_to_shingle_index(
     Batch-bounded: touches only the batch rows, never the stored
     postings.
 
-    Crash-retry safe (same protocol as the search index): the batch's
-    rows are tagged with a gen reserved through the per-epoch attempt
-    marker BEFORE the append, and become visible only when the meta
-    commit records that gen — a crash mid-append leaves partial rows
-    permanently orphaned (readers' apply_gen_filter skips them), and a
-    retry reserves a FRESH gen instead of resurrecting them."""
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
-    expect = epoch_store.gen_state(meta)
-    epoch = epoch_store.read_epoch(index_dir)
-    gen = epoch_store.next_attempt_gen(index_dir, epoch, meta.get("gen", 0))
-    sh = shingle_sets(df, id_col, text_col, meta["n"])
-    if meta.get("bloom"):
-        # the bloom partial below re-consumes the batch shingles;
-        # materialize once instead of re-running the shingle lineage
-        sh = sh.localCheckpoint(eager=True)
-    # one file per touched bucket per append (see ivf_append): without
-    # the cluster-by-key, each append writes one file per (shuffle
-    # partition, bucket) and MOR planning cost balloons
-    sh.withColumn("bucket", _shingle_bucket(meta["n_buckets"])).repartition(
-        F.col("bucket")
-    ).withColumn(
-        "gen", F.lit(gen).cast("bigint")
-    ).write.mode("append").partitionBy("bucket").parquet(
-        epoch_store.data_dir(index_dir, "postings")
-    )
-    # bloom partial for this gen, written BEFORE the meta commit so a
-    # committed gen always has its partial on disk (load_shingle_bloom
-    # refuses a bloom missing any committed gen's bits — a false
-    # NEGATIVE would drop true duplicates; a crash AFTER this write but
-    # before the commit merely leaves an orphan-gen partial whose extra
-    # bits are harmless false positives). Same (m, k, seed) as the fold
-    # — saturation drifts up until compaction resizes, never wrong.
-    cfg = meta.get("bloom")
-    if cfg:
-        from ariadne_dbt_spark.operators.bloom import bloom_build
-
-        part = bloom_build(
-            sh.select("shingle").distinct(),
-            "shingle",
-            m_bits=int(cfg["m"]),
-            k=int(cfg["k"]),
-            seed=int(cfg["seed"]),
+    Crash-retry safe: the batch's rows are tagged with a gen reserved
+    BEFORE the write and become visible only when the meta commit
+    records that gen (``epoch_store.append``) — a crash mid-append
+    leaves partial rows permanently orphaned, a retry reserves a FRESH
+    gen instead of resurrecting them, and an append that a compaction
+    overtook refuses."""
+    with epoch_store.append(index_dir, "meta.json", "shingle") as txn:
+        meta = txn.meta
+        sh = shingle_sets(df, id_col, text_col, meta["n"])
+        if meta.get("bloom"):
+            # the bloom partial below re-consumes the batch shingles;
+            # materialize once instead of re-running the shingle lineage
+            sh = sh.localCheckpoint(eager=True)
+        # one file per touched bucket per append (see ivf_append): without
+        # the cluster-by-key, each append writes one file per (shuffle
+        # partition, bucket) and MOR planning cost balloons
+        sh.withColumn("bucket", _shingle_bucket(meta["n_buckets"])).repartition(
+            F.col("bucket")
+        ).withColumn(
+            "gen", F.lit(txn.gen).cast("bigint")
+        ).write.mode("append").partitionBy("bucket").parquet(
+            epoch_store.data_dir(index_dir, "postings", txn.epoch)
         )
-        _write_bloom_file(_bloom_partial_path(index_dir, gen), part)
-    # CAS under the commit lock: refuse the commit if another writer
-    # slipped in (last-writer-wins would drop its gen — silently); the
-    # lock makes the check→replace window atomic, not just best-effort.
-    # The epoch check closes the append∥compact race: a compaction that
-    # flipped the pointer mid-append rewrote the OLD epoch's dirs, so
-    # this append's rows are not in the new epoch — committing the gen
-    # anyway would record rows that no reader can see. Retry re-appends
-    # into the new epoch.
-    with epoch_store.commit_lock(index_dir):
-        live_epoch = epoch_store.read_epoch(index_dir)
-        if live_epoch != epoch:
-            # burn this attempt's gen in the NEW epoch's marker before
-            # refusing: if the flip landed between the reservation and
-            # the data write, the rows sit in the new epoch's dirs —
-            # a retry reusing the gen would double-count them; burned,
-            # they become a permanent orphan instead
-            epoch_store.next_attempt_gen(index_dir, live_epoch, gen)
-            raise epoch_store.ConcurrentWriteError(
-                f"shingle index {index_dir} was compacted (epoch moved "
-                f"past {epoch}) during this append; retry the append "
-                "against the new epoch"
+        # bloom partial for this gen, written BEFORE the meta commit so a
+        # committed gen always has its partial on disk (load_shingle_bloom
+        # refuses a bloom missing any committed gen's bits — a false
+        # NEGATIVE would drop true duplicates; a crash AFTER this write but
+        # before the commit merely leaves an orphan-gen partial whose extra
+        # bits are harmless false positives). Same (m, k, seed) as the fold
+        # — saturation drifts up until compaction resizes, never wrong.
+        cfg = meta.get("bloom")
+        if cfg:
+            from ariadne_dbt_spark.operators.bloom import bloom_build
+
+            part = bloom_build(
+                sh.select("shingle").distinct(),
+                "shingle",
+                m_bits=int(cfg["m"]),
+                k=int(cfg["k"]),
+                seed=int(cfg["seed"]),
             )
-        with open(os.path.join(index_dir, "meta.json")) as f:
-            epoch_store.check_gen_unchanged(json.load(f), expect)
-        _write_shingle_meta(index_dir, epoch_store.advance_gen(meta, gen))
+            epoch_store.atomic_write(_bloom_partial_path(index_dir, txn.gen), part.bits)
 
 
 def ingest_batch_dedup_gated(
@@ -905,13 +846,9 @@ def ingest_batch_dedup_gated(
     batch-vs-corpus); run ``dedup_exact``/``ngram_jaccard_pairs`` on
     the batch first when intra-batch collisions matter.
     """
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
     flags = incremental_near_dup_flags(
-        None, batch, id_col, text_col, n=meta["n"], threshold=threshold,
+        None, batch, id_col, text_col,
+        n=epoch_store.read_meta(index_dir)["n"], threshold=threshold,
         index_dir=index_dir,
     )
     keep = flags.where(~F.col("is_dup")).select(F.col("id").alias("_keep_id"))
@@ -966,11 +903,8 @@ def incremental_near_dup_flags(
         raise ValueError("pass exactly one of existing= or index_dir=")
     sh_b = shingle_sets(batch, id_col, text_col, n)
     if index_dir is not None:
-        import json
-        import os
-
-        with open(os.path.join(index_dir, "meta.json")) as f:
-            meta = json.load(f)
+        snap = epoch_store.snapshot(index_dir)
+        meta = snap.meta
         if meta["n"] != n:
             raise ValueError(
                 f"index built with n={meta['n']}, queried with n={n}"
@@ -1010,19 +944,15 @@ def incremental_near_dup_flags(
             _shingle_bucket(meta["n_buckets"]).alias("bucket")
         ).distinct()
         buckets = [int(r["bucket"]) for r in probe.collect()]
-        stored = epoch_store.read_gen_data(
-            batch.sparkSession, index_dir, "postings"
-        ).where(F.col("bucket").isin(buckets) if buckets else F.lit(False))
-        # skip rows from appends that crashed before their meta commit
-        sh_e = epoch_store.apply_gen_filter(stored, meta).select(
-            "id", "shingle", "sz"
-        )
-        # merge-on-read deletes: forgotten docs stop matching immediately
-        # (takedown/GDPR — delete_from_shingle_index); broadcast is
-        # bounded by churn since the last compact_shingle_index
-        tomb = _read_shingle_tombstones(batch.sparkSession, index_dir)
-        if tomb is not None:
-            sh_e = sh_e.join(F.broadcast(tomb), "id", "left_anti")
+        # committed rows of the probed buckets only; forgotten docs stop
+        # matching immediately (delete_from_shingle_index tombstones)
+        sh_e = epoch_store.live_rows(
+            batch.sparkSession,
+            snap,
+            "postings",
+            _KEY,
+            where=F.col("bucket").isin(buckets) if buckets else F.lit(False),
+        ).select("id", "shingle", "sz")
     else:
         sh_e = shingle_sets(existing, id_col, text_col, n)
     inter = (
@@ -1660,9 +1590,9 @@ def containment_pairs(
 
 
 # -- shingle-index deletes (right-to-be-forgotten) ---------------------------
-# The persisted postings index gains the same merge-on-read delete the
-# versioned search index has (operators/search_index.py): tombstones
-# append in O(|ids|), readers anti-join them, compaction folds the log.
+# The persisted postings index takes the same merge-on-read delete as
+# every epoch_store index: tombstones append in O(|ids|), readers drop
+# the rows they cover, compaction folds the log.
 # Takedown/GDPR erasure over a continuously-ingested dedup corpus needs
 # exactly this — rewriting a bucket-partitioned postings table per
 # deletion request is O(corpus).
@@ -1687,15 +1617,10 @@ def shingle_maintenance_report(index_dir: str, **kw) -> dict:
     False means a sidecar hole (crash-degraded) has the flags path
     running full joins — also fixed by the refold."""
     import glob
-    import json
     import os
 
     rep = epoch_store.maintenance_report(index_dir, "postings", "meta.json", **kw)
-    try:
-        with open(os.path.join(index_dir, "meta.json")) as f:
-            meta = json.load(f)
-    except OSError:
-        return rep
+    meta = epoch_store.read_meta(index_dir)
     if not meta.get("bloom"):
         return rep
     n_partials = len(glob.glob(os.path.join(index_dir, "_bloom_gen*.bin")))
@@ -1726,31 +1651,22 @@ def shingle_maintenance_report(index_dir: str, **kw) -> dict:
     return rep
 
 
-def _read_shingle_tombstones(spark, index_dir: str):
-    import os
-
-    path = epoch_store.data_dir(index_dir, "tombstones")
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path).select("id").distinct()
-
-
 def delete_from_shingle_index(spark, index_dir: str, ids: list | DataFrame) -> int:
     """Tombstone doc ids out of the shingle index: their postings stop
-    matching immediately (merge-on-read anti-join); no data rewrite.
-    A re-ingest of a tombstoned id stays dead until
-    :func:`compact_shingle_index` folds the log — document lifecycles
-    that genuinely resurrect ids should compact between delete and
-    re-ingest (takedown pipelines don't). Returns the tombstone count
-    appended."""
-    import os
-
+    matching immediately (merge-on-read); no data rewrite. The delete
+    commits like an append (``epoch_store.tombstone``): a compaction in
+    flight refuses rather than undo it, and a later re-ingest of an id
+    serves its new postings. Returns the tombstone count appended."""
     if isinstance(ids, DataFrame):
         id_df = ids.select(F.col(ids.columns[0]).cast("long").alias("id")).distinct()
     else:
         id_df = local_frame(spark, [(int(i),) for i in ids], "id long").distinct()
     n = id_df.count()
-    id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
+    with epoch_store.append(index_dir, "meta.json", "shingle") as txn:
+        epoch_store.tombstone(txn, id_df)
+        if txn.meta.get("bloom"):
+            # a committed gen needs a bloom partial; a delete adds none
+            epoch_store.atomic_write(_bloom_partial_path(index_dir, txn.gen), b"")
     return n
 
 
@@ -1759,73 +1675,42 @@ def compact_shingle_index(
 ) -> None:
     """Fold deletes into the data: rewrite live postings (bucket
     partitioning preserved) into a NEW epoch's directory and commit by
-    atomically flipping the epoch pointer — a crash anywhere before the
-    flip leaves readers on the old postings + tombstones, never on a
-    half-swapped index (see ``epoch_store``). Stale epoch dirs are swept
-    best-effort after the commit."""
-    import json
-    import os
-
-    tomb = _read_shingle_tombstones(spark, index_dir)
-    epoch = epoch_store.read_epoch(index_dir)
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
-    snapshot = epoch_store.gen_state(meta)
-    postings = epoch_store.apply_gen_filter(
-        epoch_store.read_gen_data(spark, index_dir, "postings", epoch),
-        meta,
-    )
-    if tomb is not None:
-        postings = postings.join(F.broadcast(tomb), "id", "left_anti")
-    new_epoch = epoch + 1
+    one guarded epoch flip (``epoch_store.flip``) — a crash anywhere
+    before the flip leaves readers on the old postings + tombstones,
+    never on a half-swapped index, and an append or delete that commits
+    meanwhile makes the compaction refuse instead of being lost. Stale
+    epoch dirs are swept best-effort after the commit."""
+    snap = epoch_store.snapshot(index_dir)
+    meta = dict(snap.meta)
+    new_dir = epoch_store.data_dir(index_dir, "postings", snap.epoch + 1)
     # hash-cluster by bucket so each bucket folds to ONE file — the fold
     # exists to cut MOR file-count amplification, so it must not
-    # re-fragment (see ivf_compact)
-    postings = postings.repartition(F.col("bucket"))
-    # overwrite: a crash between this staged write and commit_epoch may
-    # leave a partial *_ep<k+1> dir; errorifexists would make every
-    # retry abort before the epoch pointer ever flips
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        epoch_store.data_dir(index_dir, "postings", new_epoch)
-    )
+    # re-fragment (see ivf_compact). Overwrite: a crashed attempt's
+    # partial staged dir must not wedge the retry
+    epoch_store.live_rows(spark, snap, "postings", _KEY).repartition(
+        F.col("bucket")
+    ).write.mode("overwrite").partitionBy("bucket").parquet(new_dir)
     # every surviving row passed the committed filter, so the orphan
-    # exclusions are dead weight in the new epoch; clearing them in the
-    # meta committed WITH the flip is safe
-    if "orphans" in meta and meta["orphans"]:
+    # exclusions are dead weight in the new epoch
+    if meta.get("orphans"):
         meta["orphans"] = []
-    # refold the bloom sidecar from the STAGED postings before taking
-    # the lock (two Spark jobs — the commit lock's contract is
-    # milliseconds of metadata work): resizes for the current corpus,
-    # drops tombstoned docs' bits (false positives until now), retires
-    # every per-gen partial. If the CAS below then aborts, the deleted
-    # partials leave load_shingle_bloom returning None — prefilter off,
-    # results still exact, maintenance report asks for the re-run.
+    # refold the bloom sidecar from the STAGED postings before the flip
+    # (two Spark jobs — the commit lock's contract is milliseconds of
+    # metadata work): resizes for the current corpus, drops tombstoned
+    # docs' bits (false positives until now), retires every per-gen
+    # partial. If the flip then refuses, the deleted partials leave
+    # load_shingle_bloom returning None — prefilter off, results still
+    # exact, maintenance report asks for the re-run.
     if meta.get("bloom"):
-        survivors = spark.read.parquet(
-            epoch_store.data_dir(index_dir, "postings", new_epoch)
-        ).select("shingle").distinct()
-        meta = _write_shingle_bloom_fold(
-            index_dir, survivors, meta, meta.get("gen", 0)
-        )
-    # flip + meta write are one guarded commit: an append that landed
-    # between this compaction's snapshot and its flip wrote postings
-    # into the OLD epoch's dirs — flipping anyway would orphan its
-    # committed rows (and the unguarded meta write would revert its gen
-    # advance). CAS on (gen, orphans) + the epoch pointer turns that
-    # lost update into a loud retry; append_to_shingle_index holds the
-    # same lock for its commit.
-    with epoch_store.commit_lock(index_dir):
-        with open(os.path.join(index_dir, "meta.json")) as f:
-            epoch_store.check_gen_unchanged(json.load(f), snapshot)
-        if epoch_store.read_epoch(index_dir) != epoch:
-            raise epoch_store.ConcurrentWriteError(
-                f"shingle index {index_dir} epoch moved past {epoch} "
-                "during compaction; re-run against the new epoch"
-            )
-        epoch_store.commit_epoch(index_dir, new_epoch)
-        _write_shingle_meta(index_dir, meta)
-    epoch_store.sweep_stale_epochs(
-        index_dir, ["postings"], new_epoch, retention_sec=retention_sec
+        survivors = spark.read.parquet(new_dir).select("shingle").distinct()
+        meta = _write_shingle_bloom_fold(index_dir, survivors, meta, meta.get("gen", 0))
+    epoch_store.flip(
+        snap,
+        meta,
+        names=["postings"],
+        label="shingle",
+        action="compaction",
+        retention_sec=retention_sec,
     )
 
 

@@ -1,49 +1,54 @@
-"""Crash-safe commit machinery shared by the persisted serving indexes
-(search/FTS, shingle-postings, IVF, IVF-PQ).
+"""The one log protocol of the persisted serving indexes (search/BM25,
+shingle postings, IVF and IVF-PQ), plus the epoch primitives the
+managed tables (``table_store``) share.
 
-Two failure modes motivated this module (found in round-5 review):
+Each index is a set of append-only parquet logs under one directory:
+its data logs (``postings``, ``vectors``, ``codes``, ...) and a
+``tombstones`` log keyed like the data. Every row carries the ``gen``
+of the write that appended it, and one small JSON meta file is the
+commit point. The index modules build plans; everything below the plan
+goes through this module:
 
-1. **Compaction was a multi-step directory-rename dance** — stage the
-   compacted data, ``os.replace`` the live dir aside, ``os.replace`` the
-   staged dir in, remove tombstones. A crash between any two steps left
-   the index unreadable (no data dir at all) or wrong (stale tombstones
-   killing freshly-compacted rows).
+* **Snapshot** (:func:`snapshot`): the meta and the epoch it names,
+  read once; every other step works against one snapshot.
+* **Live rows** (:func:`live_rows`): a data log at the snapshot's
+  epoch, filtered to committed gens (``gen <= meta.gen`` minus the
+  ``orphans`` list, so an attempt that crashed before its meta commit
+  never serves, and a later commit cannot resurrect it), then the
+  newest-wins tombstone rule: a row is live unless a committed
+  tombstone for its key has a HIGHER gen. An upsert writes its
+  tombstone and its new rows at the same gen, so the new rows win; a
+  delete followed by a re-append serves the re-appended row. A legacy
+  tombstone without a gen counts as newer than every row. The tombstone
+  side is broadcast: it is bounded by churn since the last compaction.
+* **Append commit** (:func:`append`): reserve a gen through the
+  per-epoch ``_attempt.json`` marker BEFORE any data is written (a
+  retry of a crashed attempt gets a fresh gen, never the orphan's);
+  then, under :func:`commit_lock`, refuse if the epoch moved (burning
+  the gen in the new epoch's marker), refuse if another writer
+  committed since the snapshot (the gen CAS), fold the gen into the
+  meta (:func:`advance_gen`) and write the meta atomically.
+* **Tombstone delete** (:func:`tombstone`): a gen-tagged append to the
+  ``tombstones`` log inside that same commit, so a delete is refused by
+  a concurrent compaction exactly like an append, and a compaction is
+  refused by a concurrent delete. Neither can undo the other.
+* **Epoch flip** (:func:`flip`): a compaction or retrain stages a
+  COMPLETE new epoch into ``<name>_ep<k+1>`` directories, then, under
+  the lock and guarded by the same gen CAS and an epoch check, commits
+  by one atomic file replace: the ``epoch.json`` pointer, or the meta
+  itself for an index that keeps its epoch in the meta (the search
+  index). A crash anywhere before the replace leaves readers on the old,
+  fully consistent epoch. Retired epochs are swept afterwards, after an
+  optional retention window for readers in other processes.
 
-2. **Retry after a crashed append could resurrect orphans** — a writer
-   that died after appending rows tagged ``gen = meta.gen + 1`` but
-   before the meta commit left those rows invisible; but a RETRY of the
-   same logical batch recomputed the same ``gen`` and appended a second
-   copy, and once that gen committed, both copies became live.
+Epoch 0 maps to the flat legacy directory names. Metas written before
+gen tagging (no ``gen`` key) keep every row live; round-6 search metas
+with an explicit ``gens`` list read through :func:`gen_state`, and the
+next commit rewrites them as ``gen`` + ``orphans``.
 
-The fix is the classic log-structured recipe, applied uniformly:
-
-* **Epoch pointer.** Each index's data directories are resolved through
-  a single small ``epoch.json`` (or the index's own meta.json) —
-  epoch 0 maps to the legacy directory names (``postings``,
-  ``vectors``, ``codes``, ``tombstones``), epoch ``k > 0`` to
-  ``<name>_ep<k>``. Compaction writes a COMPLETE new epoch's worth of
-  data into fresh ``*_ep<k+1>`` directories, then commits by atomically
-  rewriting the pointer file (``os.replace`` of a single JSON file —
-  the only atomic primitive local filesystems and object stores with
-  atomic-rename both give you). A crash at ANY point before the pointer
-  flip leaves every reader on the old, fully-consistent epoch; a crash
-  after it leaves them on the new one. Stale epoch directories are
-  garbage, swept best-effort after the commit (and re-swept by the next
-  compaction) — an orphaned directory is wasted bytes, never wrong
-  results.
-
-* **Attempt marker + committed-gen set** (gen-logged indexes only, i.e.
-  the search index). Writers reserve a gen by bumping a per-epoch
-  ``_attempt.json`` BEFORE appending, so no two attempts — including a
-  retry of a crashed one — ever share a gen; readers filter rows to the
-  meta's explicit ``gens`` list (committed gens), so an orphaned
-  attempt's rows stay dead forever instead of being resurrected when a
-  later gen commits.
-
-At 100 TB both mechanisms are O(metadata): the pointer flip is one tiny
-file, the committed-gen set is bounded by churn since the last
-compaction, and compaction itself is the same one-pass rewrite it
-always was — just committed atomically.
+At 100 TB every step is O(metadata): the snapshot and the commit are
+tiny JSON files, the orphan list is bounded by crashed attempts, and the
+tombstone broadcast by churn since the last compaction.
 """
 
 from __future__ import annotations
@@ -53,6 +58,7 @@ import json
 import os
 import shutil
 import time
+from typing import NamedTuple
 
 _EPOCH_FILE = "epoch.json"
 _LOCK_FILE = "_commit.lock"
@@ -81,11 +87,17 @@ def _read_retired_at(path: str) -> float | None:
 _LOCK_STALE_SEC = 60.0
 
 
-def _atomic_write_json(path: str, payload: dict) -> None:
+def atomic_write(path: str, data: bytes) -> None:
+    """Write ``data`` to a temp file and ``os.replace`` it in: a reader
+    sees the old file or the new one, never a torn write."""
     tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, sort_keys=True)
+    with open(tmp, "wb") as f:
+        f.write(data)
     os.replace(tmp, path)
+
+
+def atomic_write_json(path: str, payload) -> None:
+    atomic_write(path, json.dumps(payload, sort_keys=True).encode())
 
 
 def read_epoch(index_dir: str) -> int:
@@ -100,7 +112,7 @@ def read_epoch(index_dir: str) -> int:
 
 def commit_epoch(index_dir: str, epoch: int) -> None:
     """THE commit point for a compaction: one atomic file replace."""
-    _atomic_write_json(os.path.join(index_dir, _EPOCH_FILE), {"epoch": int(epoch)})
+    atomic_write_json(os.path.join(index_dir, _EPOCH_FILE), {"epoch": int(epoch)})
 
 
 def data_dir(index_dir: str, name: str, epoch: int | None = None) -> str:
@@ -211,7 +223,7 @@ def sweep_stale_epochs(
                     # retention clock now (== the pointer flip — this
                     # sweep runs right after it) and keep the dir
                     with contextlib.suppress(OSError):
-                        _atomic_write_json(stamp, {"retired_at": now})
+                        atomic_write_json(stamp, {"retired_at": now})
                     continue
                 if now - retired_at < retention_sec:
                     continue  # retired epoch still inside retention
@@ -220,8 +232,17 @@ def sweep_stale_epochs(
 
 def gen_state(meta: dict) -> tuple[int, list[int]]:
     """(high-water committed gen, orphaned gens below it) from an
-    index's metadata dict. Legacy metas (no gen key) → (0, [])."""
-    return int(meta.get("gen", 0)), [int(g) for g in meta.get("orphans", [])]
+    index's meta. Pre-gen metas (no ``gen`` key) → (0, []); a round-6
+    meta's explicit ``gens`` list becomes its max plus the gaps below
+    it (the next :func:`advance_gen` rewrites it in this form)."""
+    hi = int(meta.get("gen", 0))
+    if "orphans" in meta:
+        return hi, [int(g) for g in meta["orphans"]]
+    if "gens" in meta:
+        committed = {int(g) for g in meta["gens"]}
+        hi = max(committed) if committed else hi
+        return hi, sorted(set(range(hi + 1)) - committed)
+    return hi, []
 
 
 def apply_gen_filter(df, meta: dict):
@@ -249,6 +270,7 @@ def advance_gen(meta: dict, gen: int) -> dict:
     high water, and every gen skipped between the old high water and it
     was a reserved-but-never-committed attempt → permanent orphan."""
     hi, orphans = gen_state(meta)
+    meta.pop("gens", None)
     meta["gen"] = int(gen)
     meta["orphans"] = sorted(set(orphans) | set(range(hi + 1, int(gen))))
     return meta
@@ -397,8 +419,8 @@ def maintenance_report(
       orphaned/uncommitted gens: physically scanned, always filtered.
       (Files mixing live+dead gens count as live — the estimate is
       conservative.)
-    * ``tombstone_rows`` — merge-on-read deletes: each one is an
-      anti-join probe on every read until folded.
+    * ``tombstone_rows`` — merge-on-read deletes: each one is a
+      broadcast-join probe on every read until folded.
     * ``n_orphans`` — crashed-attempt exclusions carried in the meta;
       bounded by churn but folded to zero by compaction.
 
@@ -408,15 +430,9 @@ def maintenance_report(
     call this after each applied batch and trigger the index's compact
     function when it fires.
     """
-    meta_path = os.path.join(index_dir, meta_file)
-    meta: dict = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-    # the search index carries its epoch inside meta.json; the others
-    # use the shared epoch.json pointer
-    epoch = int(meta.get("epoch", read_epoch(index_dir)))
-    hi, orphans = gen_state(meta)
+    snap = snapshot(index_dir, meta_file)
+    epoch = snap.epoch
+    hi, orphans = snap.state
     dead_gens = set(orphans)
 
     n_files = total_rows = dead_rows = 0
@@ -508,5 +524,172 @@ def next_attempt_gen(index_dir: str, epoch: int, committed_gen: int) -> int:
         with open(path) as f:
             last = max(last, int(json.load(f)["gen"]))
     gen = last + 1
-    _atomic_write_json(path, {"gen": gen})
+    atomic_write_json(path, {"gen": gen})
     return gen
+
+
+# ---------------------------------------------------------------------------
+# The index log protocol: snapshot → live rows / append commit / tombstone
+# delete / guarded epoch flip. dedup.py, search_index.py and similarity.py
+# reach the primitives above only through these (tests/test_log_protocol.py).
+# ---------------------------------------------------------------------------
+
+
+def read_meta(index_dir: str, meta_file: str = "meta.json") -> dict:
+    """An index's meta, or ``{}`` for an index that predates the file
+    (the gen filter then keeps every row)."""
+    path = os.path.join(index_dir, meta_file)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_meta(index_dir: str, meta_file: str, meta: dict) -> None:
+    atomic_write_json(os.path.join(index_dir, meta_file), meta)
+
+
+class Snapshot(NamedTuple):
+    """One consistent read of an index: its meta (a working copy the
+    caller may edit into the meta it commits), the epoch it serves, and
+    the gen state the commit CAS expects. Inside :func:`append`, ``gen``
+    is the reserved gen of the open attempt."""
+
+    index_dir: str
+    meta_file: str
+    meta: dict
+    epoch: int
+    state: tuple[int, list[int]]
+    gen: int | None = None
+
+
+def snapshot(index_dir: str, meta_file: str = "meta.json") -> Snapshot:
+    """Read the meta and the epoch it serves: the meta's own ``epoch``
+    (the search index keeps it there), else the ``epoch.json`` pointer.
+    The pointer is read before and after the meta and the pair re-read
+    if it moved, so a snapshot never pairs an old epoch with the meta a
+    finished flip wrote for the new one. (Between a flip's pointer write
+    and its meta write it pairs the new epoch with the old meta: the new
+    epoch's gens are all at or below the old high water, so the same
+    rows serve, and a writer's commit CAS refuses once the meta moves.)"""
+    while True:
+        pointer = read_epoch(index_dir)
+        meta = read_meta(index_dir, meta_file)
+        if "epoch" in meta or read_epoch(index_dir) == pointer:
+            break
+    epoch = int(meta.get("epoch", pointer))
+    return Snapshot(index_dir, meta_file, meta, epoch, gen_state(meta))
+
+
+#: a legacy (gen-less) tombstone's effective gen: newer than every row
+_NEWEST_GEN = (1 << 63) - 1
+
+
+def live_rows(spark, snap: Snapshot, name: str, key: str, *, where=None):
+    """The rows of data log ``name`` that ``snap`` serves, ``gen``
+    column kept: the committed-gen filter, then ``where`` (a partition
+    predicate such as ``cell IN (...)`` goes here, below the join, so
+    the scan prunes), then the newest-wins tombstone rule — a row is
+    live unless a committed tombstone for its key has a higher gen.
+
+    ``key`` is the tombstone key as a DDL field (``"vec_id long"``).
+    The tombstone log is read with that explicit schema: a log mixing
+    legacy gen-less files with gen-tagged ones reads gen NULL for the
+    former, with no schema-merge job. No tombstone log → no join."""
+    from pyspark.sql import functions as F
+
+    rows = apply_gen_filter(read_gen_data(spark, snap.index_dir, name, snap.epoch), snap.meta)
+    if where is not None:
+        rows = rows.where(where)
+    tomb_dir = data_dir(snap.index_dir, "tombstones", snap.epoch)
+    if not os.path.isdir(tomb_dir):
+        return rows
+    col = key.split()[0]
+    tomb = apply_gen_filter(
+        spark.read.schema(f"{key}, gen bigint").parquet(tomb_dir), snap.meta
+    )
+    newest = tomb.groupBy(col).agg(
+        F.max(F.coalesce(F.col("gen"), F.lit(_NEWEST_GEN))).alias("_tmax")
+    )
+    # a row without a gen predates gen tagging: older than any tombstone
+    row_gen = F.coalesce(F.col("gen"), F.lit(-1)) if "gen" in rows.columns else F.lit(-1)
+    return (
+        rows.join(F.broadcast(newest), col, "left")
+        .where(F.col("_tmax").isNull() | (row_gen >= F.col("_tmax")))
+        .drop("_tmax")
+    )
+
+
+@contextlib.contextmanager
+def append(index_dir: str, meta_file: str, label: str):
+    """One append attempt: snapshot, reserve a gen, yield the
+    :class:`Snapshot` (``gen`` set) for the body to write its rows at
+    ``gen`` into ``snap.epoch``'s logs and edit ``snap.meta``, then
+    commit. The commit runs under :func:`commit_lock`: an epoch that
+    moved (a compaction or retrain flipped mid-append and retired the
+    dirs the rows went to) burns the gen in the new epoch's marker and
+    refuses; a gen state that moved (another writer committed) refuses;
+    otherwise the gen is folded into the meta and the meta replaced
+    atomically. A body that raises commits nothing: its rows keep an
+    uncommitted gen and never serve."""
+    snap = snapshot(index_dir, meta_file)
+    gen = next_attempt_gen(index_dir, snap.epoch, int(snap.meta.get("gen", 0)))
+    txn = snap._replace(gen=gen)
+    yield txn
+    with commit_lock(index_dir):
+        live = snapshot(index_dir, meta_file)
+        if live.epoch != txn.epoch:
+            next_attempt_gen(index_dir, live.epoch, gen)
+            raise ConcurrentWriteError(
+                f"{label} index {index_dir} was compacted (epoch moved past "
+                f"{txn.epoch}) during this commit; retry against the new epoch"
+            )
+        check_gen_unchanged(live.meta, txn.state)
+        write_meta(index_dir, meta_file, advance_gen(txn.meta, gen))
+
+
+def tombstone(txn: Snapshot, keys) -> None:
+    """Delete ``keys`` (a frame of the tombstone key column) inside an
+    open :func:`append`: a gen-tagged append to the epoch's
+    ``tombstones`` log, visible once that attempt commits."""
+    from pyspark.sql import functions as F
+
+    keys.withColumn("gen", F.lit(txn.gen).cast("bigint")).write.mode("append").parquet(
+        data_dir(txn.index_dir, "tombstones", txn.epoch)
+    )
+
+
+def flip(
+    snap: Snapshot,
+    new_meta: dict | None,
+    *,
+    names: list[str],
+    label: str,
+    action: str,
+    retention_sec: float = 0.0,
+) -> None:
+    """THE commit of a compaction or retrain that staged epoch
+    ``snap.epoch + 1``: under the lock, refuse if another writer
+    committed since ``snap`` (its rows are in the epoch this flip
+    retires) or the epoch moved, then replace the epoch pointer — the
+    meta itself when the index keeps its epoch there (``new_meta`` gets
+    the new ``epoch``), else ``epoch.json`` followed by ``new_meta``
+    (``None`` keeps the meta). Then sweep the retired epoch's ``names``
+    and tombstones."""
+    new_epoch = snap.epoch + 1
+    with commit_lock(snap.index_dir):
+        live = snapshot(snap.index_dir, snap.meta_file)
+        check_gen_unchanged(live.meta, snap.state)
+        if live.epoch != snap.epoch:
+            raise ConcurrentWriteError(
+                f"{label} index {snap.index_dir} epoch moved past {snap.epoch} "
+                f"during {action}; re-run against the new epoch"
+            )
+        if "epoch" in live.meta:
+            new_meta = dict(live.meta) if new_meta is None else new_meta
+            new_meta["epoch"] = new_epoch
+        else:
+            commit_epoch(snap.index_dir, new_epoch)
+        if new_meta is not None:
+            write_meta(snap.index_dir, snap.meta_file, new_meta)
+    sweep_stale_epochs(snap.index_dir, names, new_epoch, retention_sec=retention_sec)

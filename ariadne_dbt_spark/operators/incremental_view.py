@@ -50,7 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ariadne_dbt_spark.operators.epoch_store import _atomic_write_json, read_epoch
+from ariadne_dbt_spark.operators.epoch_store import atomic_write_json, read_epoch
 from ariadne_dbt_spark.operators.table_store import (
     merge_table,
     read_table,
@@ -247,7 +247,7 @@ def build_agg_view(
         "synced_epoch": read_epoch(table_dir),
         "view_epoch": read_epoch(view_dir),
     }
-    _atomic_write_json(_meta_path(view_dir), meta)
+    atomic_write_json(_meta_path(view_dir), meta)
     return {"view_dir": view_dir, **meta, "n_groups": n_groups}
 
 
@@ -458,7 +458,7 @@ def refresh_agg_view(
 
     meta["synced_epoch"] = cur
     meta["view_epoch"] = read_epoch(view_dir)
-    _atomic_write_json(_meta_path(view_dir), meta)
+    atomic_write_json(_meta_path(view_dir), meta)
     return {
         "refreshed": True,
         "mode": mode,

@@ -181,14 +181,15 @@ def save_language_classifier(clf: dict, out_dir: str) -> None:
     labels/n-gram sidecar) — the production shape: train ONCE on a
     small labeled set, load in every ingest job, pay only the map-only
     transform over the corpus."""
-    import json
     import os
 
+    from ariadne_dbt_spark.operators.epoch_store import atomic_write_json
+
     clf["model"].write().overwrite().save(os.path.join(out_dir, "model"))
-    tmp = os.path.join(out_dir, "langid_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"labels": clf["labels"], "n": clf["n"]}, f)
-    os.replace(tmp, os.path.join(out_dir, "langid_meta.json"))
+    atomic_write_json(
+        os.path.join(out_dir, "langid_meta.json"),
+        {"labels": clf["labels"], "n": clf["n"]},
+    )
 
 
 def load_language_classifier(out_dir: str) -> dict:

@@ -900,31 +900,14 @@ class _Codec(NamedTuple):
 _RAW = _Codec("vectors", "stats.json", ("centroids",), "IVF")
 _PQ = _Codec("codes", "index_meta.json", ("centroids", "pq_codebooks"), "IVF-PQ")
 _ARTIFACT_FILE = re.compile(r"(?:centroids|pq_codebooks)(?:_ep\d+)?\.json")
+#: the tombstone key, as epoch_store.live_rows reads it
+_KEY = "vec_id long"
 
 
 def _codec(index_dir: str) -> _Codec:
     # every PQ build writes the epoch-0 codebooks file; no raw build does
     # (and a rebuild clears the other codec's files, see _build)
     return _PQ if os.path.exists(os.path.join(index_dir, "pq_codebooks.json")) else _RAW
-
-
-def _read_meta(index_dir: str, codec: _Codec) -> dict:
-    """The codec's meta file, or ``{}`` for an index that predates it
-    (the gen filter then keeps every row — see ``apply_gen_filter``)."""
-    path = os.path.join(index_dir, codec.meta)
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f)
-
-
-def _write_index_json(path: str, payload) -> None:
-    # atomic replace — for gen-logged indexes the meta file is the COMMIT
-    # POINT of an append: rows of a gen not recorded here stay invisible
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, sort_keys=True)
-    os.replace(tmp, path)
 
 
 def _epoch_json_path(index_dir: str, base: str, epoch: int) -> str:
@@ -966,33 +949,6 @@ def _probe_cells(query_vec: list[float], centroids: list, nprobe: int) -> list[i
         return sum((float(x) - float(y)) ** 2 for x, y in zip(query_vec, c))
 
     return sorted(range(len(centroids)), key=lambda i: (d2(centroids[i]), i))[:nprobe]
-
-
-def _live_rows(
-    spark,
-    index_dir: str,
-    codec: _Codec,
-    meta: dict,
-    *,
-    epoch: int | None = None,
-    cells: list[int] | None = None,
-) -> DataFrame:
-    """The committed live rows of an epoch: the gen filter (a crashed
-    append's rows are not in the meta's gen record and never serve),
-    then the probed ``cells`` (``cell IN (...)`` → PartitionFilters: the
-    unprobed cells are never READ), then the tombstone anti-join
-    (merge-on-read deletes; the broadcast is bounded by churn until
-    :func:`ivf_compact` folds the log)."""
-    rows = epoch_store.apply_gen_filter(
-        epoch_store.read_gen_data(spark, index_dir, codec.data, epoch), meta
-    )
-    if cells is not None:
-        rows = rows.where(F.col("cell").isin(cells))
-    tomb_dir = epoch_store.data_dir(index_dir, "tombstones", epoch)
-    if os.path.exists(tomb_dir):
-        tomb = spark.read.parquet(tomb_dir).select("vec_id").distinct()
-        rows = rows.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return rows
 
 
 def _raw_rows(
@@ -1100,7 +1056,7 @@ def _train_stage(
         epoch,
     )
     for base, payload in artifacts.items():
-        _write_index_json(_epoch_json_path(index_dir, base, epoch), payload)
+        epoch_store.atomic_write_json(_epoch_json_path(index_dir, base, epoch), payload)
     if codec is _RAW:
         # fit quality of the new layout: the baseline the drift metric
         # compares appends against (one extra agg pass)
@@ -1131,42 +1087,8 @@ def _build(embeddings: DataFrame, out_dir: str, codec: _Codec, prior: dict, **tr
         if name in (_RAW.meta, _PQ.meta) or _ARTIFACT_FILE.fullmatch(name):
             os.remove(os.path.join(out_dir, name))
     artifacts, meta = _train_stage(embeddings, out_dir, codec, 0, prior, **train)
-    _write_index_json(os.path.join(out_dir, codec.meta), meta)
+    epoch_store.write_meta(out_dir, codec.meta, meta)
     return artifacts
-
-
-def _flip(
-    index_dir: str,
-    codec: _Codec,
-    epoch: int,
-    action: str,
-    new_meta: dict | None,
-    *,
-    expect: tuple | None,
-    retention_sec: float,
-) -> None:
-    """THE commit of a compaction or retrain: one atomic epoch-pointer
-    flip (a crash anywhere before it leaves readers on the old epoch),
-    under the commit lock and guarded. ``expect`` is the gen state the
-    caller snapshotted: an append that committed since wrote rows into
-    the OLD epoch's dirs, so flipping would orphan them (and the meta
-    write would revert its gen advance) — CAS turns the lost update into
-    a loud retry. A flip that landed meanwhile refuses the same way.
-    The retired epoch is swept after the flip."""
-    with epoch_store.commit_lock(index_dir):
-        if expect is not None:
-            epoch_store.check_gen_unchanged(_read_meta(index_dir, codec), expect)
-        if epoch_store.read_epoch(index_dir) != epoch:
-            raise epoch_store.ConcurrentWriteError(
-                f"{codec.label} index {index_dir} epoch moved past {epoch} during "
-                f"{action}; re-run against the new epoch"
-            )
-        epoch_store.commit_epoch(index_dir, epoch + 1)
-        if new_meta is not None:
-            _write_index_json(os.path.join(index_dir, codec.meta), new_meta)
-    epoch_store.sweep_stale_epochs(
-        index_dir, [codec.data], epoch + 1, retention_sec=retention_sec
-    )
 
 
 def ivf_build_index(
@@ -1278,7 +1200,8 @@ def ivf_query_index(
     metadata, scan ONLY those partitions, exact-cosine re-rank inside
     them — ``(vec_id, cos_sim)``."""
     probe = _probe_cells(query_vec, _read_epoch_json(index_dir, "centroids"), nprobe)
-    cand = _live_rows(spark, index_dir, _RAW, _read_meta(index_dir, _RAW), cells=probe)
+    snap = epoch_store.snapshot(index_dir, _RAW.meta)
+    cand = epoch_store.live_rows(spark, snap, _RAW.data, _KEY, where=F.col("cell").isin(probe))
     return brute_force_topk(cand, query_vec, k=k)
 
 
@@ -1310,11 +1233,11 @@ def ivf_pq_query_index(
     """
     artifacts = _read_artifacts(index_dir, _PQ)
     centroids, codebooks = artifacts["centroids"], artifacts["pq_codebooks"]
-    meta = _read_meta(index_dir, _PQ)
     probe = _probe_cells(query_vec, centroids, nprobe)
-    codes = _live_rows(spark, index_dir, _PQ, meta, cells=probe)
+    snap = epoch_store.snapshot(index_dir, _PQ.meta)
+    codes = epoch_store.live_rows(spark, snap, _PQ.data, _KEY, where=F.col("cell").isin(probe))
     score = _adc_score_col(codebooks, query_vec, "pq_codes")
-    if meta.get("residual", False):
+    if snap.meta.get("residual", False):
         # residual ADC for dot scoring: the global code table plus a
         # per-probed-cell scalar bias dot(q, centroid_c) — still one
         # pruned scan, nprobe literal CASE arms, no per-cell tables
@@ -1387,70 +1310,45 @@ def ivf_append(
     """
     codec = _codec(index_dir)
     artifacts = _read_artifacts(index_dir, codec)
-    meta = _read_meta(index_dir, codec)
-    expect = epoch_store.gen_state(meta)
-    epoch = epoch_store.read_epoch(index_dir)
-    gen = epoch_store.next_attempt_gen(index_dir, epoch, meta.get("gen", 0))
-    if codec is _RAW:
-        # conform the batch's vector type to the stored layout (a footer
-        # read, no data scan): arithmetic upstream of an append silently
-        # promotes float arrays to double, and mixed element types in one
-        # partitioned dataset fail every subsequent read
-        stored = new_vectors.sparkSession.read.parquet(
-            epoch_store.data_dir(index_dir, codec.data)
-        ).schema["embedding"].dataType
-        rows = _raw_rows(new_vectors, artifacts["centroids"], id_col, vec_col, stored)
-    else:
-        enc = _pq_source(
-            new_vectors, artifacts["centroids"], id_col, vec_col, bool(meta.get("residual"))
-        )
-        rows = pq_encode(
-            enc, artifacts["pq_codebooks"], id_col="vec_id", vec_col="_v", keep=["cell"]
-        )
-    # cluster the batch by cell before the write: one file per touched
-    # cell per append instead of one per (shuffle partition, cell) —
-    # measured ~300 files per 500-row append without this, which is the
-    # MOR file-count amplification the maintenance_report exists to
-    # bound. The extra shuffle is batch-sized, O(batch)
-    rows = rows.repartition(F.col("cell"))
-    rows.drop("_dist").withColumn("gen", F.lit(gen).cast("bigint")).write.mode(
-        "append"
-    ).partitionBy("cell").parquet(epoch_store.data_dir(index_dir, codec.data))
-    if codec is _RAW:
-        b = rows.agg(F.avg("_dist").alias("m"), F.count(F.lit(1)).alias("n")).first()
-        bm, bn = float(b["m"] or 0.0), int(b["n"])
-        n0, m0 = meta["n_vectors"], meta["mean_dist"]
-        meta["n_vectors"] = n0 + bn
-        if meta["n_vectors"]:
-            meta["mean_dist"] = (m0 * n0 + bm * bn) / meta["n_vectors"]
-        out = {"n_appended": bn, "batch_mean_dist": round(bm, 6)}
-    else:
-        out = {"n_appended": rows.count()}
-    if stream_epoch is not None:
-        sid, eid = stream_epoch
-        meta["stream_epochs"] = {**(meta.get("stream_epochs") or {}), str(sid): int(eid)}
-    # CAS under the commit lock: a concurrent writer's committed gen
-    # must not be dropped, and the lock makes the check→replace window
-    # atomic (not merely best-effort). The epoch check closes the
-    # append∥compact/retrain race: a flip that landed mid-append
-    # rewrote the OLD epoch's cell dirs, so this append's rows are
-    # invisible in the new epoch — committing the gen anyway would
-    # record rows no reader can see
-    with epoch_store.commit_lock(index_dir):
-        live_epoch = epoch_store.read_epoch(index_dir)
-        if live_epoch != epoch:
-            # burn the gen in the new epoch's marker first: rows that
-            # landed post-flip sit in the NEW dirs, and a retry reusing
-            # this gen would double-count them (see shingle twin)
-            epoch_store.next_attempt_gen(index_dir, live_epoch, gen)
-            raise epoch_store.ConcurrentWriteError(
-                f"{codec.label} index {index_dir} epoch moved past {epoch} "
-                "during this append; retry against the new epoch"
+    with epoch_store.append(index_dir, codec.meta, codec.label) as txn:
+        meta = txn.meta
+        data = epoch_store.data_dir(index_dir, codec.data, txn.epoch)
+        if codec is _RAW:
+            # conform the batch's vector type to the stored layout (a footer
+            # read, no data scan): arithmetic upstream of an append silently
+            # promotes float arrays to double, and mixed element types in one
+            # partitioned dataset fail every subsequent read
+            stored = new_vectors.sparkSession.read.parquet(data).schema["embedding"].dataType
+            rows = _raw_rows(new_vectors, artifacts["centroids"], id_col, vec_col, stored)
+        else:
+            enc = _pq_source(
+                new_vectors, artifacts["centroids"], id_col, vec_col, bool(meta.get("residual"))
             )
-        epoch_store.check_gen_unchanged(_read_meta(index_dir, codec), expect)
-        _write_index_json(
-            os.path.join(index_dir, codec.meta), epoch_store.advance_gen(meta, gen)
-        )
+            rows = pq_encode(
+                enc, artifacts["pq_codebooks"], id_col="vec_id", vec_col="_v", keep=["cell"]
+            )
+        # cluster the batch by cell before the write: one file per touched
+        # cell per append instead of one per (shuffle partition, cell) —
+        # measured ~300 files per 500-row append without this, which is the
+        # MOR file-count amplification the maintenance_report exists to
+        # bound. The extra shuffle is batch-sized, O(batch)
+        rows = rows.repartition(F.col("cell"))
+        rows.drop("_dist").withColumn("gen", F.lit(txn.gen).cast("bigint")).write.mode(
+            "append"
+        ).partitionBy("cell").parquet(data)
+        if codec is _RAW:
+            b = rows.agg(F.avg("_dist").alias("m"), F.count(F.lit(1)).alias("n")).first()
+            bm, bn = float(b["m"] or 0.0), int(b["n"])
+            n0, m0 = meta["n_vectors"], meta["mean_dist"]
+            meta["n_vectors"] = n0 + bn
+            if meta["n_vectors"]:
+                meta["mean_dist"] = (m0 * n0 + bm * bn) / meta["n_vectors"]
+            out = {"n_appended": bn, "batch_mean_dist": round(bm, 6)}
+        else:
+            out = {"n_appended": rows.count()}
+        if stream_epoch is not None:
+            sid, eid = stream_epoch
+            meta["stream_epochs"] = {**(meta.get("stream_epochs") or {}), str(sid): int(eid)}
     if codec is _RAW:
         out.update(_drift(meta))
     return out
@@ -1460,42 +1358,45 @@ def ivf_staleness(index_dir: str) -> dict:
     """Current staleness of a persisted raw IVF index (metadata-only —
     no Spark job): drift of the running mean centroid distance over the
     build-time mean. Retrain when drift is large."""
-    stats = _read_meta(index_dir, _RAW)
+    stats = epoch_store.read_meta(index_dir, _RAW.meta)
     return {"n_vectors": stats["n_vectors"], **_drift(stats)}
 
 
 def ivf_delete(spark, index_dir: str, ids: list) -> int:
     """Right-to-be-forgotten for either codec: tombstone vector ids in
     O(|ids|) (same merge-on-read recipe as the shingle/search indexes —
-    rewriting cell partitions per deletion request would be O(corpus));
-    every read path anti-joins the tombstones and :func:`ivf_compact`
-    folds them. Raw ``stats.json`` stays at build-time values: it drives
-    the RETRAIN decision, not result correctness."""
-    id_df = local_frame(spark, [(int(i),) for i in ids], "vec_id long").distinct()
-    n = id_df.count()
-    id_df.write.mode("append").parquet(epoch_store.data_dir(index_dir, "tombstones"))
-    return n
+    rewriting cell partitions per deletion request would be O(corpus)).
+    The tombstones commit like an append (``epoch_store.tombstone``), so
+    a compaction in flight refuses instead of undoing the delete; every
+    read drops the rows they cover until :func:`ivf_compact` folds them,
+    and a later re-append of an id serves. Raw ``stats.json`` keeps its
+    drift stats: they drive the RETRAIN decision, not result
+    correctness."""
+    codec = _codec(index_dir)
+    keys = sorted({int(i) for i in ids})
+    # driver-side ids: one tombstone file per delete, not one per slot
+    frame = local_frame(spark, [(k,) for k in keys], _KEY).coalesce(1)
+    with epoch_store.append(index_dir, codec.meta, codec.label) as txn:
+        epoch_store.tombstone(txn, frame)
+    return len(keys)
 
 
 def ivf_compact(spark, index_dir: str, *, retention_sec: float = 0.0) -> None:
     """Fold tombstones, orphaned gens and the many small appended files
     into a new epoch of the cell-partitioned data, committed by one
-    guarded epoch-pointer flip (see :func:`_flip`). No tombstones is
-    still a reason to compact: folding small files bounds MOR read
-    amplification (the maintenance report's file-count signal)."""
+    guarded epoch flip (``epoch_store.flip``). No tombstones is still a
+    reason to compact: folding small files bounds MOR read amplification
+    (the maintenance report's file-count signal)."""
     codec = _codec(index_dir)
-    epoch = epoch_store.read_epoch(index_dir)
-    meta = _read_meta(index_dir, codec)
-    live = _live_rows(spark, index_dir, codec, meta, epoch=epoch)
-    _stage(live, index_dir, codec, epoch + 1)
+    snap = epoch_store.snapshot(index_dir, codec.meta)
+    _stage(epoch_store.live_rows(spark, snap, codec.data, _KEY), index_dir, codec, snap.epoch + 1)
     # orphaned gens were physically dropped by the gen filter
-    _flip(
-        index_dir,
-        codec,
-        epoch,
-        "compaction",
-        {**meta, "orphans": []} if meta.get("orphans") else None,
-        expect=epoch_store.gen_state(meta),
+    epoch_store.flip(
+        snap,
+        {**snap.meta, "orphans": []} if snap.meta.get("orphans") else None,
+        names=[codec.data],
+        label=codec.label,
+        action="compaction",
         retention_sec=retention_sec,
     )
 
@@ -1521,19 +1422,20 @@ def ivf_retrain(
     PRESERVING the streaming replay markers. Returns what the codec's
     build returns.
 
+    The flip is guarded by the gen CAS as well as the epoch check
+    (``epoch_store.flip``): an append or delete that committed after the
+    training snapshot would be dropped or undone by the new layout, so
+    the retrain refuses instead and the re-run includes it.
+
     * raw: trains on the index's OWN committed live vectors (gen filter
-      + tombstones), so the flip is guarded by the gen CAS as well as
-      the epoch CAS — an append that committed after the training
-      snapshot holds rows the flip would silently drop. (A crash between
-      flip and meta write serves the NEW epoch under the OLD stats —
-      gens there are all 0 and the gen filter keeps gen<=hi, so rows
-      still serve; only the drift baseline is stale until the write.)
+      + tombstones). (A crash between flip and meta write serves the NEW
+      epoch under the OLD stats — gens there are all 0 and the gen
+      filter keeps gen<=hi, so rows still serve; only the drift baseline
+      is stale until the write.)
     * PQ: codes are lossy, so retraining needs the ORIGINAL floats —
       ``embeddings`` (the source table) is required, and refused for
       raw. Membership stays the index's: the live code rows pick which
-      ids re-encode, via a semi-join. Only the epoch CAS guards: the
-      rebuild resets gen 0 over mid-retrain appends by the
-      rebuild-replaces contract (their rows are expected in the source).
+      ids re-encode, via a semi-join.
 
     O(corpus) by nature (every vector reassigns) — that is what retrain
     means; the drift signal exists so it is paid only when the cells
@@ -1547,31 +1449,28 @@ def ivf_retrain(
             else "raw IVF retrain trains on the index's own vectors: "
             "embeddings is not accepted"
         )
-    meta = _read_meta(index_dir, codec)
     built = _read_artifacts(index_dir, codec)
-    epoch = epoch_store.read_epoch(index_dir)
-    live = _live_rows(spark, index_dir, codec, meta, epoch=epoch)
+    snap = epoch_store.snapshot(index_dir, codec.meta)
+    live = epoch_store.live_rows(spark, snap, codec.data, _KEY)
     shape = {"n_centroids": len(built["centroids"])}
     if codec is _RAW:
         src = live.select("vec_id", "embedding")
-        expect = epoch_store.gen_state(meta)
     else:
         books = built["pq_codebooks"]
         shape.update(m=len(books), k_sub=len(books[0]), dim=len(books) * len(books[0][0]))
         src = embeddings.select(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
         ).join(live.select("vec_id").distinct(), "vec_id", "semi")
-        expect = None
     artifacts, new_meta = _train_stage(
-        src, index_dir, codec, epoch + 1, meta, iters=iters, train_mod=train_mod, **shape
+        src, index_dir, codec, snap.epoch + 1, snap.meta,
+        iters=iters, train_mod=train_mod, **shape,
     )
-    _flip(
-        index_dir,
-        codec,
-        epoch,
-        "retrain",
+    epoch_store.flip(
+        snap,
         new_meta,
-        expect=expect,
+        names=[codec.data],
+        label=codec.label,
+        action="retrain",
         retention_sec=retention_sec,
     )
     if codec is _RAW:

@@ -770,10 +770,10 @@ _CHANGES_NAME = "_changes"
 def set_table_properties(table_dir: str, props: dict) -> None:
     """Persist table properties (Delta's ``TBLPROPERTIES``). Known key:
     ``{"change_feed": True}`` — see :func:`enable_change_feed`."""
-    from ariadne_dbt_spark.operators.epoch_store import _atomic_write_json
+    from ariadne_dbt_spark.operators.epoch_store import atomic_write_json
 
     os.makedirs(table_dir, exist_ok=True)
-    _atomic_write_json(os.path.join(table_dir, _PROPS_FILE), props)
+    atomic_write_json(os.path.join(table_dir, _PROPS_FILE), props)
 
 
 def get_table_properties(table_dir: str) -> dict:
@@ -1966,10 +1966,10 @@ def set_constraints(table_dir: str, constraints: dict[str, str]) -> None:
     ``ConstraintViolation`` (old epoch intact) on any failure — NULL
     evaluations count as violations, like Delta's CHECK. Pass ``{}`` to
     drop enforcement."""
-    from ariadne_dbt_spark.operators.epoch_store import _atomic_write_json
+    from ariadne_dbt_spark.operators.epoch_store import atomic_write_json
 
     os.makedirs(table_dir, exist_ok=True)
-    _atomic_write_json(os.path.join(table_dir, _CONSTRAINTS_FILE), constraints)
+    atomic_write_json(os.path.join(table_dir, _CONSTRAINTS_FILE), constraints)
 
 
 def get_constraints(table_dir: str) -> dict[str, str]:

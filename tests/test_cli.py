@@ -177,6 +177,37 @@ def test_cli_maintain_compact_folds_when_signal_fires(tmp_path, capsys, spark):
         assert out2["compacted"] is False
 
 
+def test_cli_maintain_shingle_sees_bloom_health(tmp_path, capsys, spark):
+    """`maintain --kind shingle` prints the shingle report, bloom
+    prefilter health included: with a committed gen's bloom partial
+    gone, the prefilter is inactive and the report asks for the
+    compaction that refolds it, which `--compact` then runs."""
+    from ariadne_dbt_spark.operators.dedup import (
+        append_to_shingle_index,
+        build_shingle_index,
+    )
+
+    idx = str(tmp_path / "shingle")
+    docs = spark.createDataFrame(
+        [(i, f"alpha{i} beta{i} gamma{i} delta{i} epsilon{i}") for i in range(6)],
+        "doc_id bigint, text string",
+    )
+    build_shingle_index(docs, idx, "doc_id", "text", n=3)
+    batch = spark.createDataFrame(
+        [(10, "one two three four five six")], "doc_id bigint, text string"
+    )
+    append_to_shingle_index(batch, idx, "doc_id", "text")
+    os.remove(os.path.join(idx, "_bloom_gen1.bin"))
+
+    out = _run(capsys, "maintain", "--index", idx, "--kind", "shingle")
+    assert out["bloom"]["prefilter_active"] is False
+    assert out["should_compact"] is True and out["compacted"] is False
+
+    out = _run(capsys, "maintain", "--index", idx, "--kind", "shingle", "--compact")
+    assert out["compacted"] is True and out["epoch"] == 1
+    assert out["bloom"]["prefilter_active"] is True
+
+
 def test_cli_maintain_table_kind_reports_and_optimizes(tmp_path, capsys, spark):
     """Round 9: `maintain --kind table` prints the managed-table
     OPTIMIZE signal and `--compact` runs the epoch-flip rewrite."""

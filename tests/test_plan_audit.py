@@ -403,11 +403,16 @@ def test_faceted_counts_single_expand_pass(spark, registry):
 
 
 def test_forgotten_index_tombstone_broadcast(spark, registry):
-    """Erasure read path: the shingle-index tombstone anti-join must be
-    BROADCAST (bounded by churn), and the pruned bucket scan must still
-    carry its partition filters."""
+    """Erasure read path: the shingle-index tombstone join (newest-wins:
+    a left join on the per-id max tombstone gen, then the ``_tmax``
+    filter) must be BROADCAST on the tombstone side (bounded by churn),
+    and the pruned bucket scan must still carry its partition filters."""
     plan = _plan(spark, registry, "incremental_dedup_forgotten")
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert any(
+        "BroadcastHashJoin" in line and "LeftOuter, BuildRight" in line
+        for line in plan.splitlines()
+    )
+    assert "_tmax" in plan
     assert "PartitionFilters: [bucket" in plan.replace("#", "").replace(
         "cast(bucket", "bucket"
     ) or "bucket" in plan.split("PartitionFilters:")[1][:120]

@@ -15,7 +15,6 @@ import pytest
 
 from ariadne_dbt_spark.operators import epoch_store
 from ariadne_dbt_spark.operators.search_index import (
-    _read_meta,
     build_search_index,
     compact_search_index,
     delete_from_search_index,
@@ -24,7 +23,7 @@ from ariadne_dbt_spark.operators.search_index import (
 
 
 def _search_epoch(idx: str) -> int:
-    return int(_read_meta(idx).get("epoch", 0))
+    return int(epoch_store.read_meta(idx).get("epoch", 0))
 
 
 def _docs(spark, n=30):
@@ -68,7 +67,7 @@ def test_retention_keeps_old_epoch_readable_then_next_sweep_collects(
     stamp = os.path.join(old_postings, "_retired.json")
     assert os.path.isfile(stamp)
     # age the RETIREMENT STAMP past the window; ANY later sweep collects
-    epoch_store._atomic_write_json(stamp, {"retired_at": 1e9})  # 2001
+    epoch_store.atomic_write_json(stamp, {"retired_at": 1e9})  # 2001
     delete_from_search_index(spark, idx, ["5"])
     compact_search_index(spark, idx, retention_sec=3600.0)
     assert not os.path.isdir(old_postings), "aged-out epoch must be swept"

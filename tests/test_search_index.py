@@ -175,8 +175,6 @@ def test_compaction_crash_before_commit_leaves_old_epoch_live(
     """Compaction stages a whole new epoch and commits via one atomic
     meta replace — killing it anywhere before that leaves readers on
     the old, fully consistent version (tombstones still applied)."""
-    from ariadne_dbt_spark.operators import search_index as si
-
     idx = str(tmp_path / "idx")
     build_search_index(_docs(spark, BASE), "doc_id", FIELDS, idx)
     upsert_search_index(
@@ -185,10 +183,11 @@ def test_compaction_crash_before_commit_leaves_old_epoch_live(
     delete_from_search_index(spark, idx, [4])
     before = _ranked(spark, idx)
 
-    def _boom(index_dir, meta, **kw):
+    def _boom(*args, **kw):
         raise RuntimeError("crash before commit")
 
-    monkeypatch.setattr(si, "_write_meta", _boom)
+    # the flip's meta replace is the search index's commit point
+    monkeypatch.setattr(epoch_store, "write_meta", _boom)
     with pytest.raises(RuntimeError):
         compact_search_index(spark, idx)
     monkeypatch.undo()
@@ -207,26 +206,26 @@ def test_concurrent_commit_refused(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_search_index(_docs(spark, BASE), "doc_id", FIELDS, idx)
 
-    real_write = si._write_meta
+    real_lock = epoch_store.commit_lock
     state = {"raced": False}
 
-    def _race_once(index_dir, meta, **kw):
+    def _race_once(index_dir):
         # simulate writer B committing between A's read and A's commit
         if not state["raced"]:
             state["raced"] = True
-            other = si._read_meta(index_dir)
+            other = epoch_store.read_meta(index_dir)
             other["gen"] = 99
-            real_write(index_dir, other)
-        real_write(index_dir, meta, **kw)
+            epoch_store.write_meta(index_dir, "meta.json", other)
+        return real_lock(index_dir)
 
-    si._write_meta = _race_once
+    epoch_store.commit_lock = _race_once
     try:
         with pytest.raises(si.ConcurrentWriteError):
             upsert_search_index(
                 spark, idx, _docs(spark, [(5, "query")]), "doc_id", FIELDS
             )
     finally:
-        si._write_meta = real_write
+        epoch_store.commit_lock = real_lock
 
 
 def test_legacy_gens_meta_reads_and_migrates(spark, tmp_path):
