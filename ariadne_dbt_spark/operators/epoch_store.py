@@ -485,19 +485,47 @@ def maintenance_report(
     }
 
 
+def _footer_schema(path: str):
+    """The union of the data schemas of every parquet file under
+    ``path``, resolved on the driver from the footers alone (pyarrow): a
+    Spark-written file carries its exact schema in the footer's
+    key-value metadata, any other converts from its Arrow schema. A
+    field keeps its first-seen type and position; fields first seen in
+    later files append. None when there is no data file."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    fields: dict = {}
+    for f in sorted(_walk_parquet(path)):
+        md = pq.read_metadata(f)
+        spark_json = (md.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        schema = (
+            StructType.fromJson(json.loads(spark_json))
+            if spark_json
+            else from_arrow_schema(md.schema.to_arrow_schema())
+        )
+        for field in schema.fields:
+            fields.setdefault(field.name, field)
+    return StructType(list(fields.values())) if fields else None
+
+
 def read_gen_data(spark, index_dir: str, name: str, epoch: int | None = None):
-    """Read a gen-tagged data directory for serving, with
-    ``mergeSchema=true`` (round-7 advice): a legacy index upgraded in
-    place mixes pre-gen parquet files with gen-tagged appends, and
-    default schema resolution may sample a pre-gen footer — then
-    ``apply_gen_filter`` silently no-ops ('gen' not in columns) and a
-    crashed append's orphan rows become visible nondeterministically.
-    Merging guarantees the gen column is in the resolved schema whenever
-    ANY file carries it. Cost is one footer read per file at planning
-    time — bounded by append churn since the last compaction."""
-    return spark.read.option("mergeSchema", "true").parquet(
-        data_dir(index_dir, name, epoch)
-    )
+    """Read a gen-tagged data directory for serving through the union
+    of its files' schemas (:func:`_footer_schema`): a
+    legacy index upgraded in place mixes pre-gen parquet files with
+    gen-tagged appends, and a schema taken from one pre-gen footer would
+    make ``apply_gen_filter`` silently no-op ('gen' not in columns) and
+    a crashed append's orphan rows visible nondeterministically. The
+    union keeps ``gen`` whenever ANY file carries it. It is resolved on
+    the driver — one footer read per file, bounded by append churn since
+    the last compaction — so planning the read runs no Spark job. Hive
+    partition columns still come from the paths."""
+    path = data_dir(index_dir, name, epoch)
+    schema = _footer_schema(path) if os.path.isdir(path) else None
+    if schema is None:
+        return spark.read.parquet(path)  # Spark's own error for no data
+    return spark.read.schema(schema).parquet(path)
 
 
 def check_gen_unchanged(live_meta: dict, expect: tuple[int, list[int]]) -> None:

@@ -352,6 +352,8 @@ def refresh_agg_view(
         )
 
         cap = MERGE_PRUNE_MAX_KEYS
+        key0 = group_by[0]
+        any_null = F.greatest(*[F.col(c).isNull() for c in group_by], F.lit(False))
         # ONE bounded collect of the delta group keys (round 11): the
         # fold touches only the churn's groups, so NULL group keys are
         # gated before any view IO and the view side of the fold is
@@ -360,15 +362,15 @@ def refresh_agg_view(
         # read_table join paid. Keep the view OPTIMIZEd on the group
         # key (auto_optimize below does) and the fold tracks churn,
         # not view size. Past the cap, the old full-scan path runs
-        # unchanged — the validity stats must see every group.
-        dkeys = deltas.select(*group_by).limit(cap + 1).collect()
+        # unchanged — the validity stats must see every group. The
+        # prune reads only the leading key, so only it and one any-NULL
+        # flag per group cross to the driver.
+        dkeys = deltas.select(key0, any_null.alias("_null")).limit(cap + 1).collect()
         small = len(dkeys) <= cap
-        if small and any(any(r[c] is None for c in group_by) for r in dkeys):
+        if small and any(r["_null"] for r in dkeys):
             return rebuild("changed rows carry NULL group keys")
         if small:
-            view = read_table_for_keys(
-                spark, view_dir, group_by[0], [r[group_by[0]] for r in dkeys]
-            )
+            view = read_table_for_keys(spark, view_dir, key0, [r[key0] for r in dkeys])
         else:
             view = read_table(spark, view_dir)
         # deltas ⟕ view: affected groups only — pruned files on the
@@ -392,29 +394,23 @@ def refresh_agg_view(
         # Validate the fold and pre-compute the view merge's key probe
         # (round 11): on the small path the folded rows are the delta
         # groups joined against a handful of pruned files — collecting
-        # (group keys, _rows) yields the negative-row / dead-group
+        # (leading key, _rows) yields the negative-row / dead-group
         # checks in plain Python plus the exact distinct-key list the
-        # merge would otherwise re-derive with its own probe job.
+        # merge would otherwise re-derive with its own probe job (one
+        # folded row per group, so the row count is the group count).
         key_stats = None
         if small:
-            head = folded.select(*group_by, _ROWS_COL).collect()
+            head = folded.select(key0, _ROWS_COL).collect()
             n_null = 0  # gated on dkeys before any view IO
             n_bad = sum(1 for r in head if r[_ROWS_COL] < 0)
             n_dead = sum(1 for r in head if r[_ROWS_COL] == 0)
             key_stats = {
-                "keys0": [
-                    r[group_by[0]] for r in head if r[group_by[0]] is not None
-                ],
+                "keys0": [r[key0] for r in head if r[key0] is not None],
                 "n_rows": len(head),
             }
         else:
-            null_key = (
-                F.greatest(*[F.col(c).isNull() for c in group_by])
-                if len(group_by) > 1
-                else F.col(group_by[0]).isNull()
-            )
             stats = folded.agg(
-                F.count(F.when(null_key, 1)).alias("nulls"),
+                F.count(F.when(any_null, 1)).alias("nulls"),
                 F.count(F.when(F.col(_ROWS_COL) < 0, 1)).alias("bad"),
                 F.count(F.when(F.col(_ROWS_COL) == 0, 1)).alias("dead"),
             ).collect()[0]

@@ -63,6 +63,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ariadne_dbt_spark.operators.epoch_store import (
     commit_epoch,
@@ -388,9 +389,7 @@ def optimize_table(
     # shared attempt-staged commit: rename into t_ep<epoch+1> happens
     # under the lock AFTER the epoch re-check, so a losing concurrent
     # optimizer can never destroy a committed epoch's data
-    new_epoch = _cow_commit(
-        spark, table_dir, epoch, live, out, [], pcols, retention_sec, "optimize"
-    )
+    new_epoch = _cow_commit(table_dir, epoch, live, out, [], pcols, retention_sec, "optimize")
     return {
         **report,
         "new_epoch": new_epoch,
@@ -586,8 +585,6 @@ def _load_schema(epoch_dir: str):
     path = os.path.join(epoch_dir, _SCHEMA_FILE)
     if not os.path.exists(path):
         return None
-    from pyspark.sql.types import StructType
-
     try:
         with open(path) as f:
             return StructType.fromJson(_json.load(f))
@@ -723,24 +720,6 @@ def _counts_via_observe(spark: SparkSession) -> bool:
         return False
 
 
-def _rows_total(live: str, files: list[str], manifest: dict | None) -> int:
-    """Total row count of ``files`` from the committed manifest, falling
-    back to a footer ``num_rows`` read per manifest-missed file — driver
-    metadata only, never a Spark job. Used to derive deleted-row counts
-    for rows that (by definition) never flow into the staged write."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for f in files:
-        ent = (manifest or {}).get(os.path.relpath(f, live))
-        rows = ent.get("rows") if isinstance(ent, dict) else None
-        if isinstance(rows, int):
-            total += rows
-        else:
-            total += pq.ParquetFile(f).metadata.num_rows
-    return total
-
-
 def _manifest_bounds_fn(live: str, manifest: dict, key: str):
     """A :func:`_prune_touched` ``bounds_fn`` backed by the committed
     manifest: bounds come from one already-loaded JSON dict instead of
@@ -870,7 +849,7 @@ def table_changes_log(
             # driver metadata the commit already saved (round 11)
             saved = _load_schema(d)
             if saved is not None:
-                from pyspark.sql.types import StringType, StructField, StructType
+                from pyspark.sql.types import StringType
 
                 ch_schema = StructType(
                     list(saved.fields) + [StructField("_change_type", StringType())]
@@ -916,12 +895,30 @@ def _read_epoch_dir(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
+def _drop_empty_files(staged: str, *, keep_one: bool) -> None:
+    """Remove the 0-row data files a write staged (Spark writes one for
+    an empty result so the schema stays readable). They hold no key
+    bounds, so every later merge would count them as touched. One stays
+    when ``keep_one`` and it would be the epoch's only data file. The
+    ``_changes/`` log is not a data dir and keeps its files."""
+    import pyarrow.parquet as pq
+
+    fresh = sorted(_walk_parquet(staged))
+    empty = [f for f in fresh if pq.read_metadata(f).num_rows == 0]
+    if keep_one and len(empty) == len(fresh):
+        empty = empty[1:]
+    for f in empty:
+        os.remove(f)
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
 def _cow_commit(
-    spark: SparkSession,
     table_dir: str,
     epoch: int,
     live: str,
-    merged: DataFrame,
+    merged: DataFrame | None,
     carried: list[str],
     pcols: list[str],
     retention_sec: float,
@@ -931,7 +928,9 @@ def _cow_commit(
     """The shared copy-on-write commit tail: stage the rewritten rows
     into an ATTEMPT-UNIQUE dir, then — under ``commit_lock``, after the
     epoch re-check — rename it to ``t_ep<epoch+1>`` and flip the
-    pointer; sweep with retention. Returns the new epoch.
+    pointer; sweep with retention. Returns the new epoch. ``merged``
+    None stages no rows: the epoch is the ``carried`` files of ``live``
+    under ``live``'s persisted schema (restore).
 
     Why attempt-unique staging (round-9 review): staging straight into
     ``t_ep<epoch+1>`` let a LOSING racer rmtree that path after the
@@ -944,7 +943,6 @@ def _cow_commit(
     cleaned up here on the spot; a crashed writer's is swept by later
     commits once it is stale."""
     import shutil as _sh
-    import time as _time
     import uuid as _uuid
 
     from ariadne_dbt_spark.operators.epoch_store import ConcurrentWriteError
@@ -954,38 +952,42 @@ def _cow_commit(
     _gc_stale_attempts(table_dir)
     changes_tmp = f"{attempt}.changes" if changes is not None else None
     try:
-        writer = merged.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        if changes is None:
-            writer.parquet(attempt)
-        else:
-            # the epoch's CHANGE LOG rides inside its own dir: the
-            # rename below commits data + log atomically, and Spark's
-            # `_` listing convention keeps it out of table reads.
-            # The log and the data derive from the SAME persisted
-            # tdf/src frames, so the two writes are independent jobs —
-            # submit both at once (guide §2.6) and the log write
-            # back-fills cores the data write's tail leaves idle,
-            # instead of paying two sequential job latencies per CDF
-            # commit. The log stages into a sibling attempt-unique dir
-            # (never inside `attempt`: the data write's own overwrite
-            # would race it) and renames in after both land; the
-            # sibling carries `.attempt-` in its name so a crashed
-            # writer's leftover is swept by _gc_stale_attempts.
-            from concurrent.futures import ThreadPoolExecutor
+        if merged is not None:
+            writer = merged.write.mode("overwrite")
+            if pcols:
+                writer = writer.partitionBy(*pcols)
+            if changes is None:
+                writer.parquet(attempt)
+            else:
+                # the epoch's CHANGE LOG rides inside its own dir: the
+                # rename below commits data + log atomically, and Spark's
+                # `_` listing convention keeps it out of table reads.
+                # The log and the data derive from the SAME persisted
+                # row-action frame, so the two writes are independent jobs —
+                # submit both at once and the log write
+                # back-fills cores the data write's tail leaves idle,
+                # instead of paying two sequential job latencies per CDF
+                # commit. The log stages into a sibling attempt-unique dir
+                # (never inside `attempt`: the data write's own overwrite
+                # would race it) and renames in after both land; the
+                # sibling carries `.attempt-` in its name so a crashed
+                # writer's leftover is swept by _gc_stale_attempts.
+                from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_data = pool.submit(lambda: writer.parquet(attempt))
-                f_log = pool.submit(
-                    lambda: changes.write.mode("overwrite").parquet(changes_tmp)
-                )
-                f_data.result()
-                f_log.result()
-            os.rename(changes_tmp, os.path.join(attempt, _CHANGES_NAME))
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    f_data = pool.submit(lambda: writer.parquet(attempt))
+                    f_log = pool.submit(
+                        lambda: changes.write.mode("overwrite").parquet(changes_tmp)
+                    )
+                    f_data.result()
+                    f_log.result()
+                os.rename(changes_tmp, os.path.join(attempt, _CHANGES_NAME))
+            _drop_empty_files(attempt, keep_one=not carried)
         _carry_files(carried, live, attempt)
         _scrub_retired_stamp(attempt)
-        _save_schema(attempt, merged.schema)
+        schema = _load_schema(live) if merged is None else merged.schema
+        if schema is not None:
+            _save_schema(attempt, schema)
         _save_manifest(attempt, live)
         _save_commit_marker(attempt, op)
 
@@ -1033,6 +1035,39 @@ def _touched_by_predicate(
     return touched, carried
 
 
+def _key_bounds_fn(live: str, pcols: list[str], key0: str, sample):
+    """The :func:`_prune_touched` ``bounds_fn`` for ``key0``: a point
+    bound from the path when ``key0`` is a hive partition column (its
+    values never appear in footers; coerced to ``sample``'s python type,
+    coercion failure → touched), else the committed manifest (one JSON
+    read, zero footer IO — Iceberg's manifest economics), else None
+    (footer reads)."""
+    if key0 in pcols:
+
+        def bounds(f):
+            v = _coerce_partition_value(_path_key_value(f, live, key0), sample)
+            return None if v is None else (v, v)
+
+        return bounds
+    manifest = _load_manifest(live)
+    return None if manifest is None else _manifest_bounds_fn(live, manifest, key0)
+
+
+def _read_files(
+    spark: SparkSession, live: str, files: list[str], schema, pcols: list[str]
+) -> DataFrame:
+    """``files`` of the live epoch read through ``schema`` (an empty
+    frame when there are none). basePath keeps the path-derived
+    partition columns — without it an explicit file-list read silently
+    null-fills them."""
+    if not files:
+        return local_frame(spark, [], schema)
+    reader = spark.read.schema(schema)
+    if pcols:
+        reader = reader.option("basePath", live)
+    return reader.parquet(*files)
+
+
 def read_table_for_keys(
     spark: SparkSession, table_dir: str, key0: str, k0_vals
 ) -> DataFrame:
@@ -1053,39 +1088,130 @@ def read_table_for_keys(
     files = _walk_parquet(live)
     pcols = _partition_cols(live, files)
     src_keys = sorted({v for v in k0_vals if v is not None})
-    bounds_fn = None
-    manifest = _load_manifest(live)
-    if manifest is not None and key0 not in pcols:
-        bounds_fn = _manifest_bounds_fn(live, manifest, key0)
-    if key0 in pcols and src_keys:
-        sample = src_keys[0]
-
-        def bounds_fn(f, _s=sample):  # noqa: E306
-            raw = _path_key_value(f, live, key0)
-            v = _coerce_partition_value(raw, _s)
-            return None if v is None else (v, v)
-
+    sample = src_keys[0] if src_keys else None
     # an EMPTY key list prunes to the empty read (bisect on [] never
     # hits), with stats-less files still conservatively touched — it
     # must NOT degrade to src_keys=None, which means "range-only test"
     # and would full-scan the table for a zero-key caller
     touched, _carried = _prune_touched(
-        files,
-        key0,
-        src_keys,
-        src_keys[0] if src_keys else None,
-        src_keys[-1] if src_keys else None,
-        bounds_fn,
+        files, key0, src_keys, sample, src_keys[-1] if src_keys else None,
+        _key_bounds_fn(live, pcols, key0, sample),
     )
     schema = _load_schema(live)
     if schema is None:
         schema = _read_epoch_dir(spark, live).schema
-    if not touched:
-        return local_frame(spark, [], schema)
-    reader = spark.read.schema(schema)
-    if pcols:
-        reader = reader.option("basePath", live)
-    return reader.parquet(*touched)
+    return _read_files(spark, live, touched, schema, pcols)
+
+
+# ---------------------------------------------------------------------------
+# The row-action plan every DML compiles to. A DML builds ONE frame over
+# its rewrite set: the post-image columns, a ``_tag`` per row — ``k``
+# keep, ``u`` update, ``d`` delete, ``i`` insert — and, for ``u`` rows,
+# the pre-image struct ``_pre``. :func:`_commit_actions` derives the
+# staged write, the report counts, the change log and the constraint
+# check from that one frame (the shared-intermediate pattern of
+# operator fusion: build once, let every consumer read it).
+# ---------------------------------------------------------------------------
+
+_TAG = "_tag"
+_PRE = "_pre"
+
+
+def _commit_actions(
+    spark: SparkSession,
+    table_dir: str,
+    epoch: int,
+    live: str,
+    frame: DataFrame,
+    carried: list[str],
+    pcols: list[str],
+    retention_sec: float,
+    op: str,
+    *,
+    check: bool,
+) -> tuple[int, dict]:
+    """Commit a row-action frame; returns ``(new_epoch, counts)`` with
+    counts ``{"u": updated, "d": deleted, "i": inserted}``.
+
+    * staged write: the post-images of every row not tagged ``d``;
+    * counts: one ``observe`` over the tags BEFORE the ``d`` rows drop
+      out, riding the staged write (zero extra jobs) — or, with
+      ``spark.speculation`` on (duplicate task attempts can double-land
+      CollectMetrics updates, :func:`_counts_via_observe`), one
+      aggregate job over the same expressions;
+    * change log (change feed on): pre-images of ``u``/``d`` rows,
+      post-images of ``u``/``i`` rows, one pass over the frame;
+    * CHECK constraints (``check``) on the staged rows — the rewrite
+      set only: carried files committed under them already.
+
+    The frame is persisted for the commit: the constraint check, the
+    count fallback and the two concurrent writes all read it, so the
+    joins and broadcasts behind it run once. Persisting also keeps the
+    metric node in the write's plan: over a cached relation the
+    optimizer cannot fold the ``_tag != 'd'`` filter to false when every
+    row is a delete (which would prune the CollectMetrics node and leave
+    ``Observation.get`` waiting forever)."""
+    from pyspark.sql import Observation
+
+    cdf_on = _change_feed_enabled(table_dir)
+    if not cdf_on and _PRE in frame.columns:
+        frame = frame.drop(_PRE)
+    cols = [c for c in frame.columns if c not in (_TAG, _PRE)]
+    tag = F.col(_TAG)
+    counts = [F.count(F.when(tag == t, True)).alias(t) for t in "udi"]
+    frame = frame.persist()
+    try:
+        obs = Observation() if _counts_via_observe(spark) else None
+        staged = (frame if obs is None else frame.observe(obs, *counts)).where(tag != "d")
+        staged = staged.select(*cols)
+        changes = None
+        if cdf_on:
+            post = F.struct(*cols)
+            row_type = StructType(
+                [StructField(c, frame.schema[c].dataType, True) for c in cols]
+            )
+
+            def image(row, change_type):
+                return F.struct(row.cast(row_type).alias("r"), F.lit(change_type).alias("c"))
+
+            images = F.when(tag == "d", F.array(image(post, "delete"))).otherwise(
+                F.array(image(post, "insert"))
+            )
+            if _PRE in frame.columns:
+                images = F.when(
+                    tag == "u",
+                    F.array(
+                        image(F.col(_PRE), "update_preimage"),
+                        image(post, "update_postimage"),
+                    ),
+                ).otherwise(images)
+            changes = (
+                frame.where(tag != "k")
+                .select(F.explode(images).alias("e"))
+                .select("e.r.*", F.col("e.c").alias("_change_type"))
+            )
+        if check:
+            _check_constraints(staged, table_dir, scope=op)
+        n = None if obs is not None else frame.agg(*counts).collect()[0].asDict()
+        new_epoch = _cow_commit(
+            table_dir, epoch, live, staged, carried, pcols, retention_sec, op, changes=changes
+        )
+        if n is None:
+            # filled by the staged write (or the constraint agg, whichever
+            # ran first — the same rows either way): no job of its own
+            n = obs.get
+    finally:
+        frame.unpersist()
+    return new_epoch, {t: int(n[t]) for t in "udi"}
+
+
+def _fits_broadcast(spark: SparkSession, df: DataFrame, n_rows: int) -> bool:
+    """Whether ``n_rows`` rows of ``df`` fit under Spark's own
+    ``spark.sql.autoBroadcastJoinThreshold``, each row sized the way the
+    planner sizes one without statistics: 8 bytes of row overhead plus
+    the schema's default column widths."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return n_rows * (8 + df._jdf.schema().defaultSize()) <= limit
 
 
 def merge_table(
@@ -1155,10 +1281,14 @@ def merge_table(
     missing/incomparable stats mark the file touched — so results never
     depend on footer quality, only cost does.
 
-    The matched/not-matched split never needs the carried files: a
-    carried file provably contains no source key, so every match lives
-    in the touched set. Joins against the (typically batch-sized)
-    source are left to AQE to broadcast.
+    The clauses compile to ONE row-action frame (:func:`_commit_actions`):
+    the touched target rows left-join the source once and each row is
+    tagged keep / update / delete from the clauses; the insert arm is
+    the source anti-joined on the touched target keys. A carried file
+    provably contains no source key, so every match lives in the
+    touched set. The staged write, the change log and the report counts
+    all derive from that frame — the counts are the tags, so a merge
+    that deletes counts its deleted rows without a job of its own.
 
     Commit protocol is :func:`optimize_table`'s: staged rewrite into
     ``t_ep<k+1>`` (a crashed attempt's leftovers are removed on retry),
@@ -1171,12 +1301,15 @@ def merge_table(
     cast/reordered to the target schema) and ``keys`` must be unique in
     the source — two source rows for one key is ambiguous (which one
     wins?), so it raises, exactly like Delta's
-    ``MultipleMatchesException``. The TARGET may hold several rows for
-    one key: like Delta, EVERY matched target row is acted on — an
-    update rewrites each of the N rows with the source row's values
-    (row count preserved, never collapsed to one; round-9 advice), a
-    delete removes all N. The source is persisted for the duration (it
-    is traversed several times) and unpersisted before returning.
+    ``MultipleMatchesException``. A merge that writes no source value
+    (no update, no insert clause — :func:`delete_keys` is one) needs
+    only the key columns plus whatever ``when_matched_condition``
+    reads. The TARGET may hold several rows for one key: like Delta,
+    EVERY matched target row is acted on — an update rewrites each of
+    the N rows with the source row's values (row count preserved,
+    never collapsed to one), a delete removes all N.
+    The source is persisted for the duration and unpersisted before
+    returning.
 
     ``source_key_stats`` lets a caller that already holds the source's
     distinct keys driver-side (e.g. the incremental-view refresh, which
@@ -1228,7 +1361,12 @@ def merge_table(
         raise FileNotFoundError(f"no table data at {live}")
     files = _walk_parquet(live)
     target_schema = _read_epoch_dir(spark, live).schema
-    missing = [f.name for f in target_schema.fields if f.name not in source.columns]
+    writes_source = when_matched == "update" or when_not_matched == "insert"
+    missing = [
+        f.name
+        for f in target_schema.fields
+        if f.name not in source.columns and (writes_source or f.name in keys)
+    ]
     if missing:
         raise ValueError(f"source is missing target columns: {missing}")
     target_names = {f.name for f in target_schema.fields}
@@ -1239,355 +1377,125 @@ def merge_table(
             f"merge_schema=True to evolve the table schema (metadata-"
             f"only: carried files are null-filled on read)"
         )
-    sel = [F.col(f.name).cast(f.dataType).alias(f.name) for f in target_schema.fields]
-    if merge_schema:
-        sel += [F.col(c) for c in extra]
-    src = source.select(sel).persist()
+    sel = [
+        F.col(f.name).cast(f.dataType).alias(f.name)
+        for f in target_schema.fields
+        if f.name in source.columns
+    ]
+    src = source.select(sel + [F.col(c) for c in extra]).persist()
     # the (possibly widened) schema this merge writes; reading touched
     # files through it null-fills columns they predate
-    target_schema = src.schema
-    cleanup = [src]
+    if extra:
+        target_schema = StructType(
+            target_schema.fields + [src.schema[c] for c in extra]
+        )
+    cols = target_schema.fieldNames()
     try:
         key0 = keys[0]
-        kdf = src.select(*keys).distinct()
+        # ONE bounded action for source stats + prune keys:
+        # the per-key grouped counts LIMITed to the prune cap yield the
+        # distinct keys, the uniqueness check, the row count and the key0
+        # range together. Only a source beyond ``prune_max_keys`` pays a
+        # second (stats-only) aggregate and skips per-key pruning. A
+        # caller-supplied ``source_key_stats`` skips the probe;
+        # its contract is the probe's, so only callers that derived the
+        # list from the source itself may pass it.
         if source_key_stats is not None:
-            # caller-supplied probe result (round 11): a caller that
-            # already holds the source's distinct keys driver-side —
-            # the incremental-view refresh collects its per-group
-            # delta rows anyway to validate the fold — passes
-            # ``{"keys0": [non-null key0 values], "n_rows": int}``
-            # and this commit skips its own probe job entirely. The
-            # CONTRACT is the probe's: keys0 covers every distinct
-            # non-NULL key0 in the source and (keys) are unique per
-            # source row; a wrong hint mis-prunes, so only callers
-            # that derived the list from the source itself may pass it.
             n_src = int(source_key_stats["n_rows"])
-            n_keys = n_src
-            k0_vals = list(source_key_stats["keys0"])
-            src_keys = sorted(set(k0_vals))
-            src_lo = min(k0_vals) if k0_vals else None
-            src_hi = max(k0_vals) if k0_vals else None
-        # ONE bounded action for source stats + prune keys (round 10):
-        # collect the per-key grouped counts LIMITed to the prune cap —
-        # when the source fits (the incremental-batch contract), that
-        # single job yields the distinct keys, the uniqueness check
-        # (every group count must be 1), the row count and the key0
-        # range together; the old shape paid one agg job plus one
-        # distinct-collect job per commit. Driver memory stays bounded
-        # by the LIMIT whatever the source size; only a source beyond
-        # ``prune_max_keys`` pays a second (stats-only) aggregate and
-        # skips per-key pruning, exactly as before.
-        krows = (
-            None
-            if source_key_stats is not None
-            else src.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .limit(prune_max_keys + 1)
-            .collect()
-        )
-        if krows is None:
-            pass  # probe supplied by the caller above
-        elif len(krows) <= prune_max_keys:
-            n_keys = len(krows)
-            n_src = sum(r["_c"] for r in krows)
-            if any(r["_c"] > 1 for r in krows):
-                raise ValueError(
-                    f"source keys are not unique: {n_src} rows, {n_keys} distinct "
-                    f"{keys} — pre-aggregate the source (last-wins etc.) first"
-                )
-            k0_vals = [r[key0] for r in krows if r[key0] is not None]
-            src_keys = sorted(set(k0_vals))
-            src_lo = min(k0_vals) if k0_vals else None
-            src_hi = max(k0_vals) if k0_vals else None
+            src_keys = sorted(set(source_key_stats["keys0"]))
         else:
-            stats = src.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.struct(*keys)).alias("k"),
-                F.min(key0).alias("lo"),
-                F.max(key0).alias("hi"),
-            ).collect()[0]
-            n_src, n_keys = stats["n"], stats["k"]
-            src_lo, src_hi = stats["lo"], stats["hi"]
+            krows = (
+                src.groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("_c"))
+                .limit(prune_max_keys + 1)
+                .collect()
+            )
+            if len(krows) <= prune_max_keys:
+                n_src, n_keys = sum(r["_c"] for r in krows), len(krows)
+                src_keys = sorted({r[key0] for r in krows if r[key0] is not None})
+            else:
+                stats = src.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_distinct(F.struct(*keys)).alias("k"),
+                    F.min(key0).alias("lo"),
+                    F.max(key0).alias("hi"),
+                ).collect()[0]
+                n_src, n_keys = stats["n"], stats["k"]
+                src_keys, src_lo, src_hi = None, stats["lo"], stats["hi"]
             if n_keys != n_src:
                 raise ValueError(
                     f"source keys are not unique: {n_src} rows, {n_keys} distinct "
                     f"{keys} — pre-aggregate the source (last-wins etc.) first"
                 )
-            src_keys = None
+        if src_keys is not None:
+            src_lo, src_hi = (src_keys[0], src_keys[-1]) if src_keys else (None, None)
         pcols = _partition_cols(live, files)
-        bounds_fn = None
-        manifest = _load_manifest(live)
-        if manifest is not None and key0 not in pcols:
-            # committed file-stats manifest: the whole prune costs one
-            # JSON read, zero footer IO (Iceberg's manifest economics)
-            bounds_fn = _manifest_bounds_fn(live, manifest, key0)
-        if key0 in pcols:
-            # partition-column merge key: the value lives in the PATH,
-            # not the footers — a point bound per file, coerced to the
-            # source key's python type (coercion failure → touched)
-            sample = src_keys[0] if src_keys else src_lo
-
-            def bounds_fn(f, _s=sample):  # noqa: E306
-                raw = _path_key_value(f, live, key0)
-                v = _coerce_partition_value(raw, _s)
-                return None if v is None else (v, v)
-
         if when_not_matched_by_source is not None:
             # every target row must be checked against the source —
             # pruning is structurally impossible for this clause
             touched, carried = list(files), []
         else:
             touched, carried = _prune_touched(
-                files, key0, src_keys, src_lo, src_hi, bounds_fn
+                files, key0, src_keys, src_lo, src_hi,
+                _key_bounds_fn(live, pcols, key0, src_lo),
             )
+        tdf = _read_files(spark, live, touched, target_schema, pcols)
 
-        # deliberate join strategy (guide §3.1, round 11): when the
-        # probe proved the source small (≤ prune_max_keys distinct
-        # keys — the incremental-batch contract), every join that
-        # builds on the SOURCE side gets an explicit broadcast hint.
-        # The target side can be arbitrarily large at 100 TB, so AQE
-        # would reach the same join only after materializing a shuffle
-        # exchange per side per join — for a micro-batch commit that
-        # is most of the commit's jobs. Joins that would build on the
-        # TARGET side (source left-anti target for inserts) are left
-        # to the planner: tdf's size is unbounded.
-        bc = F.broadcast if src_keys is not None else (lambda df: df)
-
-        if touched:
-            reader = spark.read.schema(target_schema)
-            if pcols:
-                # basePath keeps the path-derived partition columns —
-                # without it an explicit file-list read silently drops
-                # (here: null-fills) them
-                reader = reader.option("basePath", live)
-            tdf = reader.parquet(*touched)
-        else:
-            tdf = local_frame(spark, [], target_schema)
-        # persisted like src: the touched read feeds the match count,
-        # the keep/winner joins, the constraint agg, and the staged
-        # write — without it each action re-reads the parquet
-        tdf = tdf.persist()
-        cleanup.append(tdf)
-        tkeys = tdf.select(*keys)
-        # row counts for the report ride ON the staged write itself
-        # (round 10, guide §1/§2: don't run jobs you can observe for
-        # free): every row flowing into the new epoch carries a hidden
-        # clause tag and a CollectMetrics (DataFrame.observe) node sums
-        # the tags during the write — zero extra actions. Counts of
-        # rows that DON'T flow (deleted targets) are derived as
-        # touched_rows_total − kept, with touched_rows_total read from
-        # the committed manifest / footers driver-side (no job). The
-        # one combination that can't be derived this way
-        # (matched-delete + by-source-delete: nothing flows at all)
-        # keeps the old tagged-union counting job.
-        _tag = lambda df, t: df.select(F.lit(t).alias("_t"))  # noqa: E731
-        _mtag = lambda df, t: df.withColumn("_mtag", F.lit(t))  # noqa: E731
-        count_job_needed = (
-            when_matched == "delete" and when_not_matched_by_source is not None
+        s = src
+        if source_delete_condition is not None:
+            sdc = source_delete_condition
+            sdc = F.expr(sdc) if isinstance(sdc, str) else sdc
+            s = s.withColumn("_sdel", F.coalesce(sdc, F.lit(False)))
+        # deliberate join strategy: the target side can be
+        # arbitrarily large, so the one full-width source join builds on
+        # the source when the probe proved it small — by key count (the
+        # incremental-batch contract) AND by estimated bytes against
+        # Spark's own broadcast threshold. A key-only source (delete_keys)
+        # is as narrow as the probe's own rows and always qualifies.
+        small = src_keys is not None and (
+            set(src.columns) <= set(keys) or _fits_broadcast(spark, s, n_src)
         )
-        cnt_parts = [_tag(src.join(tkeys, keys, "left_semi"), "matched")]
-
-        if when_matched_condition is not None and when_matched is not None:
-            # conditional matched clause: evaluate per (target, source)
-            # pair; the action applies only where the condition holds,
-            # a false/NULL pair keeps the target row
-            cond = (
-                F.expr(when_matched_condition)
-                if isinstance(when_matched_condition, str)
-                else when_matched_condition
-            )
-            on = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
-            pairs = tdf.alias("t").join(bc(src).alias("s"), on, "inner")
-            won = F.coalesce(cond, F.lit(False))
-            unmatched_tgt = tdf.join(bc(kdf), keys, "left_anti")
-            t_keep = pairs.where(~won).select("t.*")
-            if when_not_matched_by_source is None:
-                t_keep = unmatched_tgt.unionByName(t_keep)
-            if count_job_needed:
-                cnt_parts.append(_tag(pairs.where(won), "applied"))
-            s_upd = (
-                pairs.where(won).select("s.*") if when_matched == "update" else None
-            )
-            s_ins = (
-                src.join(tkeys, keys, "left_anti")
-                if when_not_matched == "insert"
-                else None
+        j = tdf.alias("t").join(
+            (F.broadcast(s) if small else s).alias("s"),
+            [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
+            "left",
+        )
+        # the equi-join never matches a NULL key, so a non-NULL source
+        # key marks a matched pair
+        matched = F.col(f"s.{key0}").isNotNull()
+        act = F.lit("k")
+        if when_matched is not None:
+            act = F.lit("u" if when_matched == "update" else "d")
+            if when_matched_condition is not None:
+                cond = when_matched_condition
+                cond = F.expr(cond) if isinstance(cond, str) else cond
+                act = F.when(F.coalesce(cond, F.lit(False)), act).otherwise("k")
+        if source_delete_condition is not None:
+            act = F.when(F.col("s._sdel"), "d").otherwise(act)
+        tag = F.when(matched, act).otherwise(
+            "d" if when_not_matched_by_source is not None else "k"
+        )
+        t_row = [F.col(f"t.{c}") for c in cols]
+        if when_matched == "update":
+            frame = j.select(
+                *[F.when(tag == "u", F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+                  for c in cols],
+                tag.alias(_TAG),
+                F.when(tag == "u", F.struct(*t_row)).alias(_PRE),
             )
         else:
-            # Delta counts TARGET rows acted on, and a target holding N
-            # rows for one matched key has all N updated/deleted — never
-            # collapsed to one (round-9 advice)
-            if count_job_needed and when_matched is not None:
-                cnt_parts.append(_tag(tdf.join(bc(kdf), keys, "left_semi"), "applied"))
-            if when_not_matched_by_source is None:
-                t_keep = tdf if when_matched is None else tdf.join(bc(kdf), keys, "left_anti")
-            else:
-                # unmatched-by-source target rows are deleted; what
-                # survives of the MATCHED rows depends on when_matched
-                t_keep = (
-                    tdf.join(bc(kdf), keys, "left_semi")
-                    if when_matched is None
-                    else tdf.limit(0)
-                )
-            # join source VALUES onto each matched target row: every
-            # matched target row becomes the source row's values,
-            # preserving target-side row count like Delta's UPDATE.
-            # With source_delete_condition (Delta's WHEN MATCHED AND
-            # cond THEN DELETE fused with the update/insert clauses —
-            # round 10, one epoch flip where upsert + delete_keys paid
-            # two), delete-flagged source rows contribute no update and
-            # no insert: their matched targets simply never re-enter
-            # the new epoch.
-            s_src = src
+            frame = j.select(*t_row, tag.alias(_TAG))
+        if when_not_matched == "insert":
             if source_delete_condition is not None:
-                _dc = (
-                    F.expr(source_delete_condition)
-                    if isinstance(source_delete_condition, str)
-                    else source_delete_condition
-                )
-                s_src = src.where(~F.coalesce(_dc, F.lit(False)))
-            s_upd = (
-                tdf.select(*keys).join(bc(s_src), keys, "inner")
-                if when_matched == "update"
-                else None
-            )
-            s_ins = (
-                s_src.join(tkeys, keys, "left_anti")
-                if when_not_matched == "insert"
-                else None
-            )
-        parts_m = [_mtag(t_keep, "k")]
-        if s_upd is not None:
-            parts_m.append(_mtag(s_upd, "u"))
-        if s_ins is not None:
-            parts_m.append(_mtag(s_ins, "i"))
-        merged = parts_m[0]
-        for pt in parts_m[1:]:
-            merged = merged.unionByName(pt)
-        # deleted rows never flow into the new epoch: their count is
-        # touched_rows_total − kept − updated, with the total read from
-        # the committed manifest (fallback: footer num_rows) — driver
-        # metadata, no job. Only needed when the merge can delete.
-        need_total = (
-            when_matched == "delete"
-            or when_not_matched_by_source is not None
-            or source_delete_condition is not None
+                s = s.where(~F.col("_sdel"))
+            ins = s.join(tdf.select(*keys), keys, "left_anti").select(*cols, F.lit("i").alias(_TAG))
+            if _PRE in frame.columns:
+                ins = ins.withColumn(_PRE, F.lit(None).cast(frame.schema[_PRE].dataType))
+            frame = frame.unionByName(ins)
+        new_epoch, n = _commit_actions(
+            spark, table_dir, epoch, live, frame, carried, pcols, retention_sec,
+            "merge", check=True,
         )
-        touched_total = (
-            _rows_total(live, touched, manifest)
-            if (need_total and not count_job_needed)
-            else None
-        )
-        obs = None
-        if count_job_needed:
-            cnt_parts.append(_tag(tdf, "target"))
-            cnt_parts.append(_tag(tdf.join(bc(kdf), keys, "left_semi"), "tmatched"))
-            allc = cnt_parts[0]
-            for pt in cnt_parts[1:]:
-                allc = allc.unionAll(pt)
-            counts = {
-                r["_t"]: r["n"]
-                for r in allc.groupBy("_t").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            n_matched = counts.get("matched", 0)
-            n_applied = counts.get("applied", 0) if when_matched is not None else 0
-            n_reaped = counts.get("target", 0) - counts.get("tmatched", 0)
-            n_updated = n_applied if when_matched == "update" else 0
-            n_deleted = (n_applied if when_matched == "delete" else 0) + n_reaped
-            n_inserted = (n_src - n_matched) if when_not_matched == "insert" else 0
-            merged = merged.drop("_mtag")
-        elif not _counts_via_observe(spark):
-            # speculation on: duplicate successful task attempts can
-            # double-land CollectMetrics updates, so pay one dedicated
-            # job over the SAME clause tags the observation would sum —
-            # bit-identical semantics, exactly-once by Spark's action
-            # guarantee
-            tagc = {
-                r["_mtag"]: r["n"]
-                for r in merged.groupBy("_mtag")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            n_updated = tagc.get("u", 0) if when_matched == "update" else 0
-            n_inserted = tagc.get("i", 0)
-            n_deleted = (
-                touched_total - tagc.get("k", 0) - tagc.get("u", 0)
-                if touched_total is not None
-                else 0
-            )
-            merged = merged.drop("_mtag")
-        else:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            _c = lambda t: F.coalesce(  # noqa: E731
-                F.sum(F.when(F.col("_mtag") == t, 1).otherwise(0)), F.lit(0)
-            ).alias(t)
-            merged = merged.observe(obs, _c("k"), _c("u"), _c("i")).drop("_mtag")
-
-        changes = None
-        if _change_feed_enabled(table_dir):
-            # the exact change rows this commit performs, derived from
-            # the same persisted tdf/src the merge itself uses — an
-            # O(batch) log written atomically with the epoch (Delta's
-            # CDF change files). Updates log BOTH images so the feed is
-            # algebraic downstream (incremental_view.py).
-            tag = lambda df, t: df.withColumn("_change_type", F.lit(t))  # noqa: E731
-            parts = []
-            if when_matched_condition is not None and when_matched is not None:
-                won_pairs = pairs.where(won)
-                if when_matched == "update":
-                    parts.append(tag(won_pairs.select("t.*"), "update_preimage"))
-                    parts.append(tag(won_pairs.select("s.*"), "update_postimage"))
-                else:
-                    parts.append(tag(won_pairs.select("t.*"), "delete"))
-            elif when_matched == "update" and source_delete_condition is not None:
-                # fused conditional delete: matched targets of
-                # delete-flagged source rows log a delete; the rest log
-                # the usual update pair
-                live_k = s_src.select(*keys).distinct()
-                dead_k = kdf.exceptAll(live_k)
-                parts.append(tag(tdf.join(bc(live_k), keys, "left_semi"), "update_preimage"))
-                parts.append(
-                    tag(tdf.select(*keys).join(bc(s_src), keys, "inner"), "update_postimage")
-                )
-                parts.append(tag(tdf.join(bc(dead_k), keys, "left_semi"), "delete"))
-            elif when_matched == "update":
-                parts.append(tag(tdf.join(bc(kdf), keys, "left_semi"), "update_preimage"))
-                parts.append(
-                    tag(tdf.select(*keys).join(bc(src), keys, "inner"), "update_postimage")
-                )
-            elif when_matched == "delete":
-                parts.append(tag(tdf.join(bc(kdf), keys, "left_semi"), "delete"))
-            if when_not_matched == "insert":
-                src_ins = src if source_delete_condition is None else s_src
-                parts.append(tag(src_ins.join(tkeys, keys, "left_anti"), "insert"))
-            if when_not_matched_by_source is not None:
-                parts.append(tag(tdf.join(bc(kdf), keys, "left_anti"), "delete"))
-            changes = parts[0] if parts else tag(tdf, "x").limit(0)
-            for pt in parts[1:]:
-                changes = changes.unionByName(pt)
-
-        # CHECK constraints on the rewrite set only (carried files
-        # committed under them already; adding a constraint does not
-        # retro-validate existing data — disclosed)
-        _check_constraints(merged, table_dir, scope="merge")
-        new_epoch = _cow_commit(
-            spark, table_dir, epoch, live, merged, carried, pcols, retention_sec,
-            "merge", changes=changes,
-        )
-        if obs is not None:
-            # the staged write (or the constraint agg, whichever ran
-            # first — same rows either way) filled the observation; no
-            # extra job ran for these numbers
-            m = obs.get
-            n_updated = int(m["u"]) if when_matched == "update" else 0
-            n_inserted = int(m["i"])
-            n_deleted = (
-                touched_total - int(m["k"]) - int(m["u"])
-                if touched_total is not None
-                else 0
-            )
         return {
             "epoch": epoch,
             "new_epoch": new_epoch,
@@ -1595,14 +1503,13 @@ def merge_table(
             "n_files_touched": len(touched),
             "n_files_carried": len(carried),
             "rows_source": n_src,
-            "rows_updated": n_updated,
-            "rows_deleted": n_deleted,
-            "rows_inserted": n_inserted,
+            "rows_updated": n["u"],
+            "rows_deleted": n["d"],
+            "rows_inserted": n["i"],
             "schema_evolved": extra if merge_schema else [],
         }
     finally:
-        for df_ in cleanup:
-            df_.unpersist()
+        src.unpersist()
 
 
 def delete_keys(
@@ -1622,13 +1529,11 @@ def delete_keys(
     return merge_table(
         spark,
         table_dir,
-        # merge casts the source to the full target schema: pad the
-        # key-only frame with NULLs for the non-key columns (they are
-        # never written — every source row is a delete). distinct():
-        # a forget feed naturally repeats ids, and delete-by-key is
-        # idempotent per key, so duplicates should not trip merge's
-        # uniqueness refusal (round-9 review)
-        _pad_to_table_schema(spark, table_dir, keys_df.select(*keys).distinct(), keys),
+        # a delete-only merge writes no source value, so the key frame
+        # goes in as it is. distinct(): a forget feed naturally repeats
+        # ids, and delete-by-key is idempotent per key, so duplicates
+        # should not trip merge's uniqueness refusal
+        keys_df.select(*keys).distinct(),
         keys,
         when_matched="delete",
         when_not_matched=None,
@@ -1651,9 +1556,7 @@ def delete_where(
     files with no matching row are hard-linked into the new epoch
     untouched. NULL predicate rows are kept (SQL semantics: only rows
     where the predicate IS TRUE are deleted)."""
-    return _rewrite_where(
-        spark, table_dir, predicate, None, retention_sec=retention_sec, op="delete_where"
-    )
+    return _rewrite_where(spark, table_dir, predicate, None, retention_sec)
 
 
 def update_where(
@@ -1672,25 +1575,16 @@ def update_where(
     ``merge_table(merge_schema=True)`` to add columns)."""
     if not set_exprs:
         raise ValueError("update_where needs at least one SET column")
-    return _rewrite_where(
-        spark,
-        table_dir,
-        predicate,
-        set_exprs,
-        retention_sec=retention_sec,
-        op="update_where",
-    )
+    return _rewrite_where(spark, table_dir, predicate, set_exprs, retention_sec)
 
 
 def _rewrite_where(
-    spark: SparkSession,
-    table_dir: str,
-    predicate,
-    set_exprs: dict | None,
-    *,
-    retention_sec: float,
-    op: str,
+    spark: SparkSession, table_dir: str, predicate, set_exprs: dict | None, retention_sec: float
 ) -> dict:
+    """The predicate DMLs' row-action frame: the touched rows tagged by
+    the predicate (``d`` for a delete, ``u`` with the SET post-image for
+    an update, ``k`` where it is false or NULL), committed through
+    :func:`_commit_actions`."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     epoch = read_epoch(table_dir)
     live = data_dir(table_dir, DATA_NAME, epoch)
@@ -1699,104 +1593,40 @@ def _rewrite_where(
     files = _walk_parquet(live)
     pcols = _partition_cols(live, files)
     touched, carried = _touched_by_predicate(spark, live, files, pred)
-
-    schema = _read_epoch_dir(spark, live).schema
-    if touched:
-        reader = spark.read.schema(schema)
-        if pcols:
-            reader = reader.option("basePath", live)
-        tdf = reader.parquet(*touched)
+    tdf = _read_files(spark, live, touched, _read_epoch_dir(spark, live).schema, pcols)
+    hit = F.coalesce(pred, F.lit(False))
+    if set_exprs is None:
+        frame = tdf.withColumn(_TAG, F.when(hit, "d").otherwise("k"))
     else:
-        tdf = local_frame(spark, [], schema)
-    # persisted: the touched read feeds the hit count, the rewrite, the
-    # constraint agg, and the staged write
-    tdf = tdf.persist()
-    try:
-        from pyspark.sql import Observation
-
-        hit = F.coalesce(pred, F.lit(False))
-        # the hit count rides ON the staged write via a CollectMetrics
-        # node over the pre-rewrite rows (round 10): a dedicated
-        # .count() action paid a full job per DML commit for a number
-        # the write's own row flow already knows. With speculation on,
-        # CollectMetrics can double-count duplicate attempts — pay the
-        # old dedicated job instead (_counts_via_observe).
-        obs = None
-        tdf_obs = tdf
-        if _counts_via_observe(spark):
-            obs = Observation()
-            tdf_obs = tdf.observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.when(hit, 1).otherwise(0)), F.lit(0)
-                ).alias("n_hit"),
-            )
-        tag = lambda df, t: df.withColumn("_change_type", F.lit(t))  # noqa: E731
-        cdf_on = _change_feed_enabled(table_dir)
-        changes = None
-        if set_exprs is None:
-            merged = tdf_obs.where(~hit)
-            if cdf_on:
-                changes = tag(tdf.where(hit), "delete")
-        else:
-            unknown = [c for c in set_exprs if c not in tdf.columns]
-            if unknown:
-                raise ValueError(f"SET columns not in the table: {unknown}")
-            exprs = {
-                c: F.expr(e) if isinstance(e, str) else e for c, e in set_exprs.items()
-            }
-            apply_set = lambda df: df.select(  # noqa: E731
-                *[
-                    (
-                        F.when(hit, exprs[c]).otherwise(F.col(c)).alias(c)
-                        if c in exprs
-                        else F.col(c)
-                    )
-                    for c in df.columns
-                ]
-            )
-            merged = apply_set(tdf_obs)
-            if cdf_on:
-                # filter BEFORE transforming: the predicate must see the
-                # original values (post-SET rows may no longer match it)
-                changes = tag(tdf.where(hit), "update_preimage").unionByName(
-                    tag(apply_set(tdf.where(hit)), "update_postimage")
-                )
-            # deletes only remove rows; updates can introduce violations
-            _check_constraints(merged, table_dir, scope="update_where")
-        new_epoch = _cow_commit(
-            spark, table_dir, epoch, live, merged, carried, pcols, retention_sec,
-            op, changes=changes,
+        unknown = [c for c in set_exprs if c not in tdf.columns]
+        if unknown:
+            raise ValueError(f"SET columns not in the table: {unknown}")
+        exprs = {c: F.expr(e) if isinstance(e, str) else e for c, e in set_exprs.items()}
+        # one projection: the predicate and the SET expressions all see
+        # the ORIGINAL values (post-SET rows may no longer match it)
+        frame = tdf.select(
+            *[
+                F.when(hit, exprs[c]).otherwise(F.col(c)).alias(c) if c in exprs else F.col(c)
+                for c in tdf.columns
+            ],
+            F.when(hit, "u").otherwise("k").alias(_TAG),
+            F.when(hit, F.struct(*tdf.columns)).alias(_PRE),
         )
-        n_hit = (
-            int(obs.get["n_hit"])
-            if obs is not None
-            else tdf.where(hit).count()
-        )
-    finally:
-        tdf.unpersist()
+    op = "delete_where" if set_exprs is None else "update_where"
+    # deletes only remove rows; updates can introduce violations
+    new_epoch, n = _commit_actions(
+        spark, table_dir, epoch, live, frame, carried, pcols, retention_sec,
+        op, check=set_exprs is not None,
+    )
     return {
         "epoch": epoch,
         "new_epoch": new_epoch,
         "n_files": len(files),
         "n_files_touched": len(touched),
         "n_files_carried": len(carried),
-        "rows_deleted": n_hit if set_exprs is None else 0,
-        "rows_updated": 0 if set_exprs is None else n_hit,
+        "rows_deleted": n["d"],
+        "rows_updated": n["u"],
     }
-
-
-def _pad_to_table_schema(
-    spark: SparkSession, table_dir: str, keys_df: DataFrame, keys: list[str]
-) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    schema = _read_epoch_dir(spark, _resolve(table_dir)).schema
-    cols = [
-        F.col(f.name) if f.name in keys else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in schema.fields
-    ]
-    return keys_df.select(cols)
 
 
 def clone_table(table_dir: str, dest_dir: str, *, epoch: int | None = None) -> dict:
@@ -1855,11 +1685,6 @@ def restore_table(table_dir: str, epoch: int, *, retention_sec: float = 0.0) -> 
     disk (``table_history``); a swept epoch cannot be restored —
     retention is what makes restore possible, and :func:`vacuum_table`
     is what takes it away."""
-    import shutil as _sh
-    import uuid as _uuid
-
-    from ariadne_dbt_spark.operators.epoch_store import ConcurrentWriteError
-
     current = read_epoch(table_dir)
     src = data_dir(table_dir, DATA_NAME, epoch)
     if epoch > current or not os.path.isdir(src):
@@ -1869,34 +1694,11 @@ def restore_table(table_dir: str, epoch: int, *, retention_sec: float = 0.0) -> 
         )
     if epoch == current:
         return {"epoch": current, "new_epoch": current, "n_files_linked": 0}
-    staged = data_dir(table_dir, DATA_NAME, current + 1)
-    attempt = f"{staged}.attempt-{_uuid.uuid4().hex[:12]}"
-    try:
-        files = _walk_parquet(src)
-        _carry_files(files, src, attempt)
-        # the restored epoch keeps the schema it was committed under
-        sch = _load_schema(src)
-        if sch is not None:
-            _save_schema(attempt, sch)
-        _save_manifest(attempt, src)
-        _save_commit_marker(attempt, "restore")
-        _scrub_retired_stamp(attempt)
-        with commit_lock(table_dir):
-            now = read_epoch(table_dir)
-            if now != current:
-                raise ConcurrentWriteError(
-                    f"table {table_dir} moved to epoch {now} during restore "
-                    f"(started at {current})"
-                )
-            if os.path.isdir(staged):
-                _sh.rmtree(staged)
-            os.rename(attempt, staged)
-            commit_epoch(table_dir, current + 1)
-    except BaseException:
-        _sh.rmtree(attempt, ignore_errors=True)
-        raise
-    sweep_stale_epochs(table_dir, [DATA_NAME], current + 1, retention_sec=retention_sec)
-    return {"epoch": current, "new_epoch": current + 1, "n_files_linked": len(files)}
+    # every file of the restored epoch is carried (hard-linked) and it
+    # keeps the schema it was committed under
+    files = _walk_parquet(src)
+    new_epoch = _cow_commit(table_dir, current, src, None, files, [], retention_sec, "restore")
+    return {"epoch": current, "new_epoch": new_epoch, "n_files_linked": len(files)}
 
 
 def vacuum_table(
@@ -1921,11 +1723,7 @@ def vacuum_table(
             if h["is_current"]:
                 continue
             ra = h.get("retired_at")
-            would_delete = (
-                retention_sec <= 0
-                if ra is None
-                else (now - ra) >= retention_sec or retention_sec <= 0
-            )
+            would_delete = retention_sec <= 0 or (ra is not None and now - ra >= retention_sec)
             report.append(
                 {
                     "epoch": h["epoch"],

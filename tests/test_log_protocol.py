@@ -236,3 +236,34 @@ def test_index_modules_commit_only_through_the_protocol():
     once skipped the commit entirely)."""
     offenders = protocol_bypasses(os.path.join(REPO, "ariadne_dbt_spark", "operators"))
     assert offenders == [], "go through epoch_store's protocol: " + ", ".join(offenders)
+
+
+def test_planning_a_live_rows_read_runs_no_job(spark, tmp_path):
+    """The data log's schema (the union of its files' footers, ``gen``
+    kept whenever any file has it) resolves on the driver: building a
+    ``live_rows`` plan runs no Spark job."""
+    import time
+
+    idx = str(tmp_path / "raw")
+    _build(spark, "raw", idx)
+    _delete(spark, "raw", idx, [5])
+    snap = epoch_store.snapshot(idx, "stats.json")
+
+    sc = spark.sparkContext
+    group = f"live-rows-plan-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = epoch_store.live_rows(spark, snap, "vectors", "vec_id long")
+        spark.range(1).collect()  # a closing job marks the group's end
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        jobs = tracker.getJobIdsForGroup(group)
+        if jobs:
+            break
+        time.sleep(0.05)
+    assert len(jobs) == 1, f"planning ran {len(jobs) - 1} job(s)"
+    assert "gen" in rows.columns and "cell" in rows.columns
+    assert 5 not in {r["vec_id"] for r in rows.collect()}
