@@ -22,17 +22,25 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ariadne_dbt_spark import schemas
 from ariadne_dbt_spark.config import EngineConfig
 from ariadne_dbt_spark.ingest import manifest as mf
 from ariadne_dbt_spark.functions.text import truncate_sql
 from ariadne_dbt_spark.operators.search import build_postings
-from ariadne_dbt_spark.session import local_frame
+from ariadne_dbt_spark.session import local_frame, verify_rows
 
-#: schemas of the two search tables (the parse tables' are in schemas.py)
-POSTINGS_DDL = "unique_id string, field string, term string, tf long"
-DOCSTATS_DDL = "unique_id string, field string, dl long"
+
+#: schemas of the two search tables (the parse tables' are in schemas.py),
+#: built in Python: parsing a DDL string is a JVM round trip
+POSTINGS_DDL = (
+    T.StructType().add("unique_id", "string").add("field", "string")
+    .add("term", "string").add("tf", "long")
+)
+DOCSTATS_DDL = T.StructType().add("unique_id", "string").add("field", "string").add("dl", "long")
+#: a list of doc ids (the refresh's dropped docs, ``_build_postings``' subset)
+IDS_SCHEMA = T.StructType().add("unique_id", "string")
 
 
 def _derive_degrees_local(model_rows: list[dict], edge_rows: list[dict]) -> None:
@@ -178,26 +186,62 @@ def _build_postings_local(
     return postings, docstats
 
 
-TABLES = (*PARSE_SCHEMAS, "postings", "docstats")
+#: schema of every index table
+SCHEMAS = {**PARSE_SCHEMAS, "postings": POSTINGS_DDL, "docstats": DOCSTATS_DDL}
+TABLES = tuple(SCHEMAS)
+
+
+def _verified(rows: dict[str, list]) -> dict[str, list]:
+    """``rows`` after checking each table's rows against its schema, with
+    the verifier ``local_frame`` applies: a malformed row fails here, not
+    when a frame is first read."""
+    for t, r in rows.items():
+        verify_rows(r, SCHEMAS[t])
+    return rows
+
+
+class _Table:
+    """An index table attribute. An index over driver rows (``_rows``)
+    makes the table's ``local_frame`` when it is first read and keeps it;
+    an assigned DataFrame is returned as it is."""
+
+    def __set_name__(self, owner, name: str) -> None:
+        self.name = name
+
+    def __get__(self, idx, owner=None) -> DataFrame:
+        if idx is None:
+            raise AttributeError(self.name)  # no default: a required field
+        df = idx.__dict__.get(self.name)
+        if df is None:
+            df = local_frame(idx.spark, idx._rows[self.name], SCHEMAS[self.name])
+            idx.__dict__[self.name] = df
+        return df
+
+    def __set__(self, idx, df: DataFrame | None) -> None:
+        idx.__dict__[self.name] = df
 
 
 @dataclass
 class AriadneIndex:
-    """The in-memory engine index: one DataFrame per table, all cached
-    (they are small — ≤10k models — while surface-B data scales)."""
+    """The engine index: one DataFrame per table (they are small — ≤10k
+    models — while surface-B data scales). A driver-side build or refresh
+    holds each table as driver rows (``_rows``), which serve the snapshot
+    (``local``) and become the table's JVM ``LocalRelation`` on its first
+    DataFrame read; the distributed, enriched and loaded paths hold the
+    frames themselves, checkpointed where their plans are deep."""
 
     spark: SparkSession
-    models: DataFrame
-    columns: DataFrame
-    sources: DataFrame
-    source_columns: DataFrame
-    tests: DataFrame
-    macros: DataFrame
-    exposures: DataFrame
-    edges: DataFrame
-    index_metadata: DataFrame
-    postings: DataFrame
-    docstats: DataFrame
+    models: DataFrame = _Table()
+    columns: DataFrame = _Table()
+    sources: DataFrame = _Table()
+    source_columns: DataFrame = _Table()
+    tests: DataFrame = _Table()
+    macros: DataFrame = _Table()
+    exposures: DataFrame = _Table()
+    edges: DataFrame = _Table()
+    index_metadata: DataFrame = _Table()
+    postings: DataFrame = _Table()
+    docstats: DataFrame = _Table()
     config: EngineConfig = field(default_factory=EngineConfig)
     #: row count of ``models`` (BM25's corpus size): the parsed row count
     #: at build/refresh, counted once on first use otherwise
@@ -221,43 +265,33 @@ class AriadneIndex:
         local_build = len(model_rows) <= config.local_build_max_models
         if local_build:
             # metadata-scale manifest: derive degrees/PK-FK/postings in
-            # pure Python over the parsed rows BEFORE creating any
-            # DataFrame — every index table is a JVM LocalRelation
-            # (local_frame) and the build runs zero Spark jobs. The
-            # distributed derivations below handle larger manifests with
-            # identical semantics (parity pinned in tests/test_indexer.py).
+            # pure Python over the parsed rows — the index holds them as
+            # driver rows, each table becomes a JVM LocalRelation
+            # (local_frame) on first use, and the build runs zero Spark
+            # jobs. The distributed derivations below handle larger
+            # manifests with identical semantics (parity pinned in
+            # tests/test_indexer.py).
             _derive_degrees_local(model_rows, rows["edges"])
             _derive_pk_fk_local(rows["columns"], rows["tests"])
-            posting_rows, docstat_rows = _build_postings_local(
+            rows["postings"], rows["docstats"] = _build_postings_local(
                 model_rows, rows["columns"], config
             )
-        else:
-            posting_rows, docstat_rows = [], []
-
-        idx = cls(
-            spark=spark,
-            **{t: local_frame(spark, r, PARSE_SCHEMAS[t]) for t, r in rows.items()},
-            postings=local_frame(spark, posting_rows, POSTINGS_DDL),
-            docstats=local_frame(spark, docstat_rows, DOCSTATS_DDL),
-            config=config,
-            n_models=len(model_rows),
-        )
-        if local_build:
+            idx = cls._of_rows(spark, config, _verified(rows))
             if catalog_path:
                 idx.enrich_from_catalog(catalog_path)
             if run_results_path:
                 idx.enrich_from_run_results(run_results_path)
-            if not (catalog_path or run_results_path):
-                # the serving snapshot is these same rows (see ``local``)
-                idx._local_rows = (rows, posting_rows, docstat_rows)
             return idx
         # distributed path: the index tables are bigger, but shuffles on
         # them are still metadata-scale; a small partition count keeps
         # task scheduling off the critical path (surface-B data queries
         # are untouched — this is scoped to the build and restored after)
+        rows["postings"] = rows["docstats"] = []
+        idx = cls._of_rows(spark, config, rows)
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         try:
+            idx._drop_rows()  # local_frame checks every row
             idx._compute_degrees()
             idx._compute_pk_fk()
             idx._build_postings()
@@ -276,19 +310,45 @@ class AriadneIndex:
         return idx
 
     _local = None
-    #: ``LocalIndexCache.from_rows`` arguments of a driver-side build,
-    #: held until the snapshot is first asked for
-    _local_rows: tuple | None = None
+    #: table name → driver rows of every table in ``TABLES`` (parse tables
+    #: as dicts, postings/docstats as tuples) on a driver-side index
+    _rows = None
     _patterns = None
     #: delta of the last ``refresh()``: {"changed": n, "reused": n, "removed": n}
     last_refresh_stats: dict | None = None
+
+    @classmethod
+    def _of_rows(cls, spark: SparkSession, config: EngineConfig, rows: dict) -> "AriadneIndex":
+        """The index over ``rows`` (held, not copied): no frame is made
+        until a table is first read."""
+        idx = cls(spark=spark, **dict.fromkeys(TABLES), config=config,
+                  n_models=len(rows["models"]))
+        idx._rows = rows
+        return idx
+
+    def _drop_rows(self) -> None:
+        """Make every table's frame now and forget the rows and the
+        snapshot, before a frame is replaced (enrichment, the
+        distributed derivations) and they go stale."""
+        for t in TABLES:
+            getattr(self, t)
+        self._rows = self._local = None
+
+    def _search_rows(self) -> tuple[list, list]:
+        """Postings and docstats rows: held, else collected."""
+        if self._rows is not None:
+            return self._rows["postings"], self._rows["docstats"]
+        return tuple(
+            [tuple(r) for r in getattr(self, t).select(*SCHEMAS[t].names).collect()]
+            for t in ("postings", "docstats")
+        )
 
     def doc_signatures(self) -> dict[str, str]:
         """Per-model search-doc content hashes for the CURRENT index
         state (what the existing postings encode), computed from the
         snapshot's rows when the index holds one; otherwise a
         metadata-scale collect of models and columns."""
-        if self._local is not None or self._local_rows is not None:
+        if self._local is not None or self._rows is not None:
             snap = self.local()
             return _doc_signatures(
                 snap.models.values(),
@@ -346,28 +406,21 @@ class AriadneIndex:
         anywhere can shift, and they cost a handful of metadata-scale
         shuffles.
 
-        A driver-side refresh also hands the new index its serving
-        snapshot (``local``): the parse tables are the rows just parsed,
-        and postings/docstats are the old snapshot's less the changed and
-        removed docs plus the re-tokenized rows — nothing is collected
-        back from the JVM. An enriched refresh leaves the snapshot to a
-        collect on first use.
+        A driver-side refresh does that anti-join and union on driver
+        rows, held like a build's (``_rows``), and builds its serving
+        snapshot (``local``) from them: no py4j call, one flat
+        LocalRelation per table on first DataFrame use, and no reference
+        to the old index. An enriched refresh makes its frames at once
+        and leaves the snapshot to a collect on first use.
 
         Equality with a from-scratch ``build()`` on the new manifest is
         pinned by tests/test_incremental.py (modify / add / remove /
-        no-op cases); the patched snapshot's equality with a collected
+        no-op cases); the refreshed snapshot's equality with a collected
         one by tests/test_served_snapshot.py."""
-        from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
-
         spark, config = self.spark, self.config
         rows = _parse_tables(mf.load_manifest(manifest_path))
         model_rows, column_rows = rows["models"], rows["columns"]
         local_build = len(model_rows) <= config.local_build_max_models
-        # an unenriched driver-side refresh patches the old snapshot;
-        # taking it first also gives the old signatures without a JVM
-        # round trip
-        patch = local_build and not (catalog_path or run_results_path)
-        base = self.local() if patch else None
 
         new_sigs = _doc_signatures(model_rows, column_rows, config)
         old_sigs = self.doc_signatures()
@@ -381,39 +434,24 @@ class AriadneIndex:
         if local_build:
             _derive_degrees_local(model_rows, rows["edges"])
             _derive_pk_fk_local(column_rows, rows["tests"])
-            posting_rows, docstat_rows = _build_postings_local(
+            rows["postings"], rows["docstats"] = _build_postings_local(
                 [m for m in model_rows if m["unique_id"] in changed],
                 [c for c in column_rows if c["model_id"] in changed],
                 config,
             )
-
-        drop_df = local_frame(spark, [(u,) for u in sorted(dropped)], "unique_id string")
-        kept_postings = self.postings.join(F.broadcast(drop_df), "unique_id", "left_anti")
-        kept_docstats = self.docstats.join(F.broadcast(drop_df), "unique_id", "left_anti")
-
-        idx = AriadneIndex(
-            spark=spark,
-            **{t: local_frame(spark, r, PARSE_SCHEMAS[t]) for t, r in rows.items()},
-            postings=kept_postings,
-            docstats=kept_docstats,
-            config=config,
-            n_models=len(model_rows),
-        )
-        if local_build:
-            idx.postings = kept_postings.unionByName(
-                local_frame(spark, posting_rows, POSTINGS_DDL)
-            )
-            idx.docstats = kept_docstats.unionByName(
-                local_frame(spark, docstat_rows, DOCSTATS_DDL)
-            )
-            if patch:
-                # the same union on the snapshot; an enriched refresh
-                # collects its snapshot when one is asked for
-                idx._local = LocalIndexCache.from_rows(
-                    config, rows, posting_rows, docstat_rows
-                )
-                idx._local.patch_search(base, dropped)
+            _verified(rows)  # the kept rows passed when they were made
+            for t, old in zip(("postings", "docstats"), self._search_rows()):
+                rows[t] = [r for r in old if r[0] not in dropped] + rows[t]
+            idx = AriadneIndex._of_rows(spark, config, rows)
+            if not (catalog_path or run_results_path):
+                idx.local()  # the served search after a refresh reads it
         else:
+            drop_df = local_frame(spark, [(u,) for u in sorted(dropped)], IDS_SCHEMA)
+            kept_postings = self.postings.join(F.broadcast(drop_df), "unique_id", "left_anti")
+            kept_docstats = self.docstats.join(F.broadcast(drop_df), "unique_id", "left_anti")
+            idx = AriadneIndex._of_rows(spark, config, {**rows, "postings": [], "docstats": []})
+            idx._drop_rows()
+            idx.postings, idx.docstats = kept_postings, kept_docstats
             old_parts = spark.conf.get("spark.sql.shuffle.partitions")
             spark.conf.set("spark.sql.shuffle.partitions", "4")
             try:
@@ -454,9 +492,8 @@ class AriadneIndex:
         if self._local is None:
             from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
 
-            if self._local_rows is not None:
-                self._local = LocalIndexCache.from_rows(self.config, *self._local_rows)
-                self._local_rows = None
+            if self._rows is not None:
+                self._local = LocalIndexCache.from_rows(self.config, self._rows)
             else:
                 self._local = LocalIndexCache.from_index(self)
         return self._local
@@ -559,7 +596,7 @@ class AriadneIndex:
         refresh — the caller merges the reused rows back)."""
         models = self.models
         if only_ids is not None:
-            ids_df = local_frame(self.spark, [(u,) for u in only_ids], "unique_id string")
+            ids_df = local_frame(self.spark, [(u,) for u in only_ids], IDS_SCHEMA)
             models = models.join(F.broadcast(ids_df), "unique_id", "left_semi")
         col_names = self.columns.groupBy(F.col("model_id").alias("unique_id")).agg(
             F.concat_ws(" ", F.collect_list("name")).alias("column_names")
@@ -609,6 +646,8 @@ class AriadneIndex:
         """S2: join catalog stats (row_count/bytes/last_modified) into
         models and column data_types (case-insensitive) into columns."""
         import json
+
+        self._drop_rows()
 
         with open(catalog_path) as f:
             cat = json.load(f)
@@ -672,6 +711,8 @@ class AriadneIndex:
         """S3: test status + Σ(timing deltas) + failures, tests only."""
         import json
         from datetime import datetime
+
+        self._drop_rows()
 
         with open(path) as f:
             rr = json.load(f)

@@ -9,13 +9,11 @@ pipeline's semantics exactly (pinned by tests), and the DataFrame path
 remains the source of truth for batch/scale use.
 
 Build cost: no JVM round trip on a driver-side index. ``from_rows``
-takes the rows ``AriadneIndex.build`` has just parsed and derived;
-``AriadneIndex.refresh`` hands it the new parse tables plus the
-re-tokenized docs' postings, then ``patch_search`` adds the old
-snapshot's postings/docstats less the changed and removed docs — the
-DataFrame refresh's anti-join and union, done on the snapshot.
-``from_index`` (one collect per table) covers everything else: a
-loaded index, the distributed build path and an enriched refresh.
+takes the rows a driver-side ``AriadneIndex.build`` or ``refresh`` holds
+(the refresh's postings/docstats are the old rows less the changed and
+removed docs plus the re-tokenized ones). ``from_index`` (one collect per
+table) covers everything else: a loaded index, the distributed build
+path and an enriched one.
 """
 
 from __future__ import annotations
@@ -50,17 +48,11 @@ class LocalIndexCache:
     config: EngineConfig = field(default_factory=EngineConfig)
 
     @classmethod
-    def from_rows(
-        cls,
-        config: EngineConfig,
-        tables: Mapping[str, list[dict]],
-        postings: Iterable[tuple],
-        docstats: Iterable[tuple],
-    ) -> "LocalIndexCache":
+    def from_rows(cls, config: EngineConfig, tables: Mapping[str, Iterable]) -> "LocalIndexCache":
         """The snapshot over driver-side rows: ``tables`` maps each name
         in ``SNAPSHOT_TABLES`` to its rows as dicts keyed by column name
-        (held, not copied); ``postings`` are ``(unique_id, field, term,
-        tf)`` and ``docstats`` ``(unique_id, field, dl)`` tuples."""
+        (held, not copied), ``postings`` to ``(unique_id, field, term,
+        tf)`` and ``docstats`` to ``(unique_id, field, dl)`` tuples."""
         c = cls(config=config)
         c.models = {m["unique_id"]: m for m in tables["models"]}
         for r in tables["columns"]:
@@ -75,36 +67,20 @@ class LocalIndexCache:
         for r in tables["edges"]:
             c.children.setdefault(r["parent_id"], []).append(r["child_id"])
             c.parents.setdefault(r["child_id"], []).append(r["parent_id"])
-        for uid, fld, term, tf in postings:
+        for uid, fld, term, tf in tables["postings"]:
             c.postings.setdefault(fld, {}).setdefault(term, {})[uid] = tf
-        for uid, fld, dl in docstats:
+        for uid, fld, dl in tables["docstats"]:
             c.docstats.setdefault(fld, {})[uid] = dl
         return c
 
     @classmethod
     def from_index(cls, index) -> "LocalIndexCache":
         """Collect every table of ``index`` and build the snapshot on it."""
-        return cls.from_rows(
-            index.config,
-            {t: [r.asDict() for r in getattr(index, t).collect()] for t in SNAPSHOT_TABLES},
-            index.postings.select("unique_id", "field", "term", "tf").collect(),
-            index.docstats.select("unique_id", "field", "dl").collect(),
-        )
-
-    def patch_search(self, base: "LocalIndexCache", dropped: set[str]) -> None:
-        """Add ``base``'s postings and docstats, less the ``dropped`` docs'
-        rows, to this snapshot's own, which hold only the re-tokenized
-        docs. ``base`` is left as it is."""
-        for fld, terms in base.postings.items():
-            for term, docs in terms.items():
-                kept = {u: tf for u, tf in docs.items() if u not in dropped}
-                if kept:
-                    mine = self.postings.setdefault(fld, {})
-                    mine[term] = {**kept, **mine.get(term, {})}
-        for fld, stats in base.docstats.items():
-            kept = {u: dl for u, dl in stats.items() if u not in dropped}
-            if kept:
-                self.docstats[fld] = {**kept, **self.docstats.get(fld, {})}
+        return cls.from_rows(index.config, {
+            **{t: [r.asDict() for r in getattr(index, t).collect()] for t in SNAPSHOT_TABLES},
+            "postings": index.postings.select("unique_id", "field", "term", "tf").collect(),
+            "docstats": index.docstats.select("unique_id", "field", "dl").collect(),
+        })
 
     # -- graph (pure-python BFS; same semantics as operators.graph.bfs) ------
     def bfs(self, starts: list[str], direction: str, max_depth: int,

@@ -846,7 +846,10 @@ def table_changes_log(
             # read through the epoch's persisted schema + _change_type
             # (the exact shape _cow_commit wrote): schema inference
             # paid one footer-listing job PER EPOCH in the range —
-            # driver metadata the commit already saved (round 11)
+            # driver metadata the commit already saved (round 11). The
+            # log's part files are named one by one: Spark ignores a
+            # path whose last segment starts with `_` and warns on it.
+            parts = sorted(_walk_parquet(cdir))
             saved = _load_schema(d)
             if saved is not None:
                 from pyspark.sql.types import StringType
@@ -854,9 +857,9 @@ def table_changes_log(
                 ch_schema = StructType(
                     list(saved.fields) + [StructField("_change_type", StringType())]
                 )
-                rd = spark.read.schema(ch_schema).parquet(cdir)
+                rd = spark.read.schema(ch_schema).parquet(*parts)
             else:
-                rd = spark.read.parquet(cdir)
+                rd = spark.read.parquet(*parts)
             frames.append(rd.withColumn("_commit_epoch", F.lit(ep).cast("int")))
             continue
         op = _read_commit_marker(d)
@@ -971,14 +974,18 @@ def _cow_commit(
                 # (never inside `attempt`: the data write's own overwrite
                 # would race it) and renames in after both land; the
                 # sibling carries `.attempt-` in its name so a crashed
-                # writer's leftover is swept by _gc_stale_attempts.
+                # writer's leftover is swept by _gc_stale_attempts. Both
+                # jobs carry the caller's job group and description.
                 from concurrent.futures import ThreadPoolExecutor
 
+                from pyspark import inheritable_thread_target
+
+                inherit = inheritable_thread_target(merged.sparkSession)
                 with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_data = pool.submit(lambda: writer.parquet(attempt))
-                    f_log = pool.submit(
+                    f_data = pool.submit(inherit(lambda: writer.parquet(attempt)))
+                    f_log = pool.submit(inherit(
                         lambda: changes.write.mode("overwrite").parquet(changes_tmp)
-                    )
+                    ))
                     f_data.result()
                     f_log.result()
                 os.rename(changes_tmp, os.path.join(attempt, _CHANGES_NAME))

@@ -12,8 +12,10 @@ Tools (names mirror the reference):
 
 ``search_models`` answers from the index's driver-local snapshot
 (``AriadneIndex.local()``, operators/local_cache.py) and runs no Spark
-job; ``refresh_index`` hands the refreshed index a patched snapshot, so
-the search after it runs none either. ``get_project_patterns`` is
+job. On a driver-side index ``refresh_index`` keeps the refreshed tables
+as driver rows and builds the snapshot from them, so neither it nor the
+search after it makes a py4j call; the tables' JVM frames are made when
+a DataFrame tool first reads them. ``get_project_patterns`` is
 computed once per index (``AriadneIndex.patterns()``). The other tools
 run the DataFrame operators.
 

@@ -103,6 +103,17 @@ def get_spark(app_name: str = "ariadne-dbt-spark") -> SparkSession:
     return spark
 
 
+def verify_rows(rows, schema: T.StructType) -> None:
+    """Raise ``TypeError`` or ``ValueError`` on the first of ``rows`` that
+    ``local_frame(spark, rows, schema)`` would refuse, without building
+    the frame: the type verifier ``createDataFrame`` applies."""
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+
+
 def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
     """A DataFrame over driver-side ``rows``, held in the JVM as a
     ``LocalRelation``.
@@ -116,31 +127,26 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
     the JVM, and collected without a job when nothing above it shuffles.
 
     ``rows`` are tuples, Rows or dicts (matched by field name); ``schema``
-    is a StructType or a DDL string. Each row passes the same type
-    verifier and converter the list path applies, so a wrong Python type,
-    a float in an integral column or a None in a non-nullable field still
-    raise rather than being coerced by Arrow. Converted rows are in
-    Spark's internal form (timestamps as UTC micros, dates as days, maps
-    as dicts, structs as tuples), which Arrow takes without a cast.
+    is a StructType or a DDL string (parsing one is a JVM round trip).
+    Each row passes the same type verifier and converter the list path
+    applies (:func:`verify_rows`), so a wrong Python type, a float in an
+    integral column or a None in a non-nullable field still raise rather
+    than being coerced by Arrow. Converted rows are in Spark's internal
+    form (timestamps as UTC micros, dates as days, maps as dicts, structs
+    as tuples), which Arrow takes without a cast.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import (
-        _create_converter,
-        _make_type_verifier,
-        _parse_datatype_string,
-    )
+    from pyspark.sql.types import _create_converter, _parse_datatype_string
 
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     if not isinstance(schema, T.StructType):
         raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
-    verify = _make_type_verifier(schema)
+    rows = list(rows)
+    verify_rows(rows, schema)
     convert = _create_converter(schema)
-    internal = []
-    for row in rows:
-        verify(row)
-        internal.append(schema.toInternal(convert(row)))
+    internal = [schema.toInternal(convert(row)) for row in rows]
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*internal)) if internal else [()] * len(arrow_schema)
     table = pa.Table.from_arrays(

@@ -144,11 +144,15 @@ def build_bm25_index(spark: SparkSession, sf_dir: str, *, force: bool = False) -
 
     # the two stats jobs are independent reads of the written postings:
     # submit them concurrently so the second back-fills the first's
-    # straggler tail (guide §2.6); job descriptions are thread-local
+    # straggler tail (guide §2.6); job groups and descriptions are
+    # thread-local, so each job is handed the caller's
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_write_docstats), pool.submit(_write_lexicon)]
+        futs = [pool.submit(inherit(f)) for f in (_write_docstats, _write_lexicon)]
         for fut in futs:
             fut.result()
     if obs is not None:

@@ -110,6 +110,72 @@ def test_changes_log_matches_version_diff(spark, tmp_path):
     assert len(got) > 0
 
 
+def test_log_reader_names_no_hidden_path(spark, tmp_path, monkeypatch):
+    """Spark ignores a read path whose last segment starts with ``_`` (and
+    warns ``All paths were ignored``): the log reader names the part
+    files of each epoch's ``_changes/`` dir instead."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    tdir = _base(spark, tmp_path, name="paths")
+    e0 = read_epoch(tdir)
+    _mutate(spark, tdir)
+    want = table_changes(spark, tdir, ["id"], from_epoch=e0, with_preimages=True).count()
+    read, paths = DataFrameReader.parquet, []
+
+    def spy(self, *args, **kwargs):
+        paths.extend(args)
+        return read(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    log = table_changes_log(spark, tdir, from_epoch=e0)
+    assert paths
+    assert not [p for p in paths if os.path.basename(p.rstrip("/")).startswith("_")]
+    assert log.count() == want > 0
+
+
+def test_change_feed_merge_keeps_the_callers_job_group(spark, tmp_path):
+    """A change-feed commit writes its data and its log on two pool
+    threads; both jobs must carry the caller's job group, or a group
+    cancel and per-group job accounting miss them."""
+    import time
+
+    tdir = _base(spark, tmp_path, name="group")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"g-{os.urandom(4).hex()}"
+
+    def in_group(name, fn):
+        sc.setJobGroup(name, name)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def ungrouped() -> set:
+        # a closing job: once it is listed, every earlier job is too
+        # (listener events arrive in order)
+        tag = f"close-{os.urandom(4).hex()}"
+        in_group(tag, lambda: spark.range(1).collect())
+        for _ in range(200):
+            if tracker.getJobIdsForGroup(tag):
+                break
+            time.sleep(0.05)
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = ungrouped()
+    in_group(group, lambda: merge_table(
+        spark, tdir,
+        spark.range(390, 410).select(
+            "id", (F.col("id") % 5).cast("int").alias("grp"),
+            F.lit(1).cast("decimal(18,2)").alias("amt"),
+        ),
+        ["id"],
+    ))
+    assert ungrouped() - before == set()
+    assert len(tracker.getJobIdsForGroup(group)) >= 2
+
+
 def test_log_reader_refuses_unlogged_epochs(spark, tmp_path):
     tdir = _base(spark, tmp_path, name="nolog", feed=False)
     e0 = read_epoch(tdir)

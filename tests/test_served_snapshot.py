@@ -1,7 +1,8 @@
 """The served search path: ``ToolServer.search_models`` answers from the
-index's driver-local snapshot, and ``AriadneIndex.refresh`` patches that
-snapshot instead of collecting the refreshed tables back from the JVM.
-Pinned here: neither call runs a Spark job, the patched snapshot equals
+index's driver-local snapshot, and ``AriadneIndex.refresh`` builds that
+snapshot from its rows instead of collecting the refreshed tables back
+from the JVM.
+Pinned here: neither call runs a Spark job, the refreshed snapshot equals
 a collected one table by table, and the served hits equal the DataFrame
 ``search_models`` (the batch path) on the refreshed index."""
 
@@ -148,7 +149,7 @@ def test_project_patterns_are_computed_once_per_index(spark):
     assert second["result"] == first["result"]
 
 
-# -- (b) the patched snapshot equals a collected one -------------------------
+# -- (b) the refreshed snapshot equals a collected one -----------------------
 @pytest.mark.parametrize("edit", [_modified, _added, _removed, lambda m: m],
                          ids=["modified", "added", "removed", "noop"])
 def test_refreshed_snapshot_equals_collected(spark, index, tmp_path, edit):
@@ -156,7 +157,7 @@ def test_refreshed_snapshot_equals_collected(spark, index, tmp_path, edit):
     new = index.refresh(path)
     assert new._local is not None  # handed over by the refresh, not collected
     _assert_same_snapshot(new.local(), LocalIndexCache.from_index(new))
-    # a second refresh patches the patched snapshot
+    # a second refresh builds on the refreshed rows
     back = new.refresh(MANIFEST)
     _assert_same_snapshot(back.local(), LocalIndexCache.from_index(back))
     _assert_same_snapshot(back.local(), index.local())
@@ -168,21 +169,21 @@ def test_enriched_refresh_snapshot_equals_collected(spark, index, tmp_path):
     snap = new.local()
     _assert_same_snapshot(snap, LocalIndexCache.from_index(new))
     assert any(m["row_count"] is not None for m in snap.models.values())
-    # and the refresh after it, back to an unenriched index, patches it
+    # and the refresh after it, back to an unenriched index, builds on a collect
     back = new.refresh(MANIFEST)
     _assert_same_snapshot(back.local(), LocalIndexCache.from_index(back))
 
 
 def test_build_snapshot_equals_collected(spark, index):
     fresh = AriadneIndex.build(spark, MANIFEST)
-    assert fresh._local is None and fresh._local_rows is not None
+    assert fresh._local is None and fresh._rows is not None
     _assert_same_snapshot(fresh.local(), LocalIndexCache.from_index(fresh))
 
 
 def test_signatures_from_snapshot_equal_collected(spark, tmp_path):
     fresh = AriadneIndex.build(spark, MANIFEST)
     from_snapshot = fresh.doc_signatures()
-    fresh._local = fresh._local_rows = None
+    fresh._drop_rows()  # frames only: the signatures come from a collect
     assert from_snapshot == fresh.doc_signatures()
     path = _write(tmp_path, _modified(_fixture()))
     assert AriadneIndex.build(spark, MANIFEST).manifest_delta(path)["changed"] == [
