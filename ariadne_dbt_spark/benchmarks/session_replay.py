@@ -287,7 +287,7 @@ def ab_discover(
     capsule's budget drops them)."""
     cache = _serving(index)
     names = {m["name"] for m in cache.models.values()}
-    max_pivots = 3  # CapsuleConfig.max_pivots (config.py:65)
+    max_pivots = cache.config.max_pivots
     rows = []
     for path in sorted(Path(sessions_dir).glob("*.jsonl")):
         session = parse_session(path)

@@ -29,9 +29,12 @@ Commands mirror the reference's tool surface:
               count / checkpoint / cleanup / zero-copy export + import
     serve     JSON-lines tool server (MCP via fastmcp when installed)
 
-Every command loads (or builds) the index, runs DataFrame queries, and
-prints JSON — the same request/response shapes an MCP server would
-expose; serving transport is intentionally thin.
+Every command loads (or builds) the index and prints JSON — the same
+request/response shapes an MCP server would expose; serving transport is
+intentionally thin. ``search``, ``capsule``, ``discover``, ``lineage`` and
+``impact`` answer from the index's driver-local snapshot
+(``AriadneIndex.local()``), like the tool server; the other commands run
+DataFrame queries.
 """
 
 from __future__ import annotations
@@ -181,41 +184,32 @@ def cmd_diff(args):
 
 
 def cmd_search(args):
-    from ariadne_dbt_spark.operators.model_search import search_models
-
-    idx = _index(args)
+    snap = _index(args).local()
     t0 = time.perf_counter()
-    hits = search_models(
-        idx, args.query, intent=args.intent, limit=args.limit, layer=args.layer
-    ).collect()
+    hits = snap.search(args.query, intent=args.intent, limit=args.limit, layer=args.layer)
     _emit(
         {
             "query": args.query,
             "took_ms": round((time.perf_counter() - t0) * 1000, 1),
-            "results": [r.asDict() for r in hits],
+            "results": hits,
         }
     )
 
 
 def cmd_capsule(args):
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
-
-    idx = _index(args)
-    cap = CapsuleBuilder(idx).build(
-        args.task,
-        focus_model=args.focus_model,
-        entry_models=args.entry_models,
-        token_budget=args.token_budget,
+    _emit(
+        _index(args).local().capsule(
+            args.task,
+            focus_model=args.focus_model,
+            entry_models=args.entry_models,
+            token_budget=args.token_budget,
+        )
     )
-    _emit(cap.to_dict())
 
 
 def cmd_discover(args):
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
-
-    idx = _index(args)
     _emit(
-        CapsuleBuilder(idx).discover(
+        _index(args).local().discover(
             args.task,
             focus_model=args.focus_model,
             entry_models=args.entry_models,
@@ -224,31 +218,29 @@ def cmd_discover(args):
     )
 
 
-def cmd_lineage(args):
-    from ariadne_dbt_spark.operators.lineage import get_lineage
-    from ariadne_dbt_spark.operators.model_search import get_model_by_name
+def _model_id(snap, name: str) -> str | None:
+    """The first model named ``name``; emits the not-found error."""
+    ids = snap.by_name(name)
+    if not ids:
+        _emit({"error": f"model not found: {name}"})
+        return None
+    return ids[0]
 
-    idx = _index(args)
-    row = get_model_by_name(idx, args.model).first()
-    if not row:
-        _emit({"error": f"model not found: {args.model}"})
+
+def cmd_lineage(args):
+    snap = _index(args).local()
+    uid = _model_id(snap, args.model)
+    if uid is None:
         return 1
-    lin = get_lineage(idx, row.unique_id, depth=args.depth, direction=args.direction)
-    _emit([r.asDict() for r in lin.collect()])
+    _emit(snap.lineage(uid, depth=args.depth, direction=args.direction))
 
 
 def cmd_impact(args):
-    from ariadne_dbt_spark.operators.lineage import get_impact_analysis
-    from ariadne_dbt_spark.operators.model_search import get_model_by_name
-
-    idx = _index(args)
-    row = get_model_by_name(idx, args.model).first()
-    if not row:
-        _emit({"error": f"model not found: {args.model}"})
+    snap = _index(args).local()
+    uid = _model_id(snap, args.model)
+    if uid is None:
         return 1
-    imp = get_impact_analysis(idx, row.unique_id, depth=args.depth)
-    imp.pop("affected", None)
-    _emit(imp)
+    _emit(snap.impact(uid, depth=args.depth))
 
 
 def cmd_patterns(args):

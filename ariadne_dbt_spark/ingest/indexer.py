@@ -29,7 +29,7 @@ from ariadne_dbt_spark.config import EngineConfig
 from ariadne_dbt_spark.ingest import manifest as mf
 from ariadne_dbt_spark.functions.text import truncate_sql
 from ariadne_dbt_spark.operators.search import build_postings
-from ariadne_dbt_spark.session import local_frame, verify_rows
+from ariadne_dbt_spark.session import local_frame, verified_frame, verify_rows
 
 
 #: schemas of the two search tables (the parse tables' are in schemas.py),
@@ -201,9 +201,9 @@ def _verified(rows: dict[str, list]) -> dict[str, list]:
 
 
 class _Table:
-    """An index table attribute. An index over driver rows (``_rows``)
-    makes the table's ``local_frame`` when it is first read and keeps it;
-    an assigned DataFrame is returned as it is."""
+    """An index table attribute. An index over driver rows (``_rows``,
+    verified when they were made) makes the table's frame when it is
+    first read and keeps it; an assigned DataFrame is returned as it is."""
 
     def __set_name__(self, owner, name: str) -> None:
         self.name = name
@@ -213,7 +213,7 @@ class _Table:
             raise AttributeError(self.name)  # no default: a required field
         df = idx.__dict__.get(self.name)
         if df is None:
-            df = local_frame(idx.spark, idx._rows[self.name], SCHEMAS[self.name])
+            df = verified_frame(idx.spark, idx._rows[self.name], SCHEMAS[self.name])
             idx.__dict__[self.name] = df
         return df
 
@@ -287,11 +287,11 @@ class AriadneIndex:
         # task scheduling off the critical path (surface-B data queries
         # are untouched — this is scoped to the build and restored after)
         rows["postings"] = rows["docstats"] = []
-        idx = cls._of_rows(spark, config, rows)
+        idx = cls._of_rows(spark, config, _verified(rows))
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         try:
-            idx._drop_rows()  # local_frame checks every row
+            idx._drop_rows()
             idx._compute_degrees()
             idx._compute_pk_fk()
             idx._build_postings()
@@ -319,8 +319,8 @@ class AriadneIndex:
 
     @classmethod
     def _of_rows(cls, spark: SparkSession, config: EngineConfig, rows: dict) -> "AriadneIndex":
-        """The index over ``rows`` (held, not copied): no frame is made
-        until a table is first read."""
+        """The index over ``rows`` (held, not copied, already verified by
+        the caller): no frame is made until a table is first read."""
         idx = cls(spark=spark, **dict.fromkeys(TABLES), config=config,
                   n_models=len(rows["models"]))
         idx._rows = rows
@@ -449,7 +449,9 @@ class AriadneIndex:
             drop_df = local_frame(spark, [(u,) for u in sorted(dropped)], IDS_SCHEMA)
             kept_postings = self.postings.join(F.broadcast(drop_df), "unique_id", "left_anti")
             kept_docstats = self.docstats.join(F.broadcast(drop_df), "unique_id", "left_anti")
-            idx = AriadneIndex._of_rows(spark, config, {**rows, "postings": [], "docstats": []})
+            idx = AriadneIndex._of_rows(
+                spark, config, _verified({**rows, "postings": [], "docstats": []})
+            )
             idx._drop_rows()
             idx.postings, idx.docstats = kept_postings, kept_docstats
             old_parts = spark.conf.get("spark.sql.shuffle.partitions")

@@ -2,7 +2,9 @@
 generic BFS (operators.graph) to the engine index, with enrichment joins
 replacing the reference's per-id point-lookup loops (J7: one join of the
 id set against models/sources instead of N queries —
-reference: server.py:209-219, graph.py:89-94)."""
+reference: server.py:209-219, graph.py:89-94). The served lineage and
+impact tools answer from the driver-local snapshot instead
+(``LocalIndexCache.lineage`` / ``impact``, operators/local_cache.py)."""
 
 from __future__ import annotations
 
@@ -53,40 +55,6 @@ def get_lineage(
     for p in parts[1:]:
         out = out.unionByName(p)
     return _enrich(index, out).orderBy("relationship", "distance", "unique_id")
-
-
-def get_impact_analysis(index: AriadneIndex, model_id: str, *, depth: int = 5) -> dict:
-    """Blast radius + risk heuristic (reference: graph.py:79-132):
-    downstream BFS → split by kind → affected tests via semi-join (J5) →
-    high if exposures>0 or (mart-hit and models>5); medium if models>3 or
-    mart-hit; else low."""
-    affected = bfs(index.edges, [model_id], DOWNSTREAM, max_depth=depth).cache()
-    enriched = _enrich(index, affected)
-    models_hit = enriched.where(F.col("kind") == "model")
-    exposures_hit = enriched.where(F.col("kind") == "exposure")
-    n_models = models_hit.count()
-    n_exposures = exposures_hit.count()
-    mart_hit = models_hit.where(F.col("layer") == "marts").count() > 0
-
-    affected_tests = (
-        index.tests.join(
-            affected.select(F.col("unique_id").alias("model_id")), "model_id", "left_semi"
-        )
-        .select("unique_id", "name", "test_type", "model_id")
-    )
-    if n_exposures > 0 or (mart_hit and n_models > 5):
-        risk = "high"
-    elif n_models > 3 or mart_hit:
-        risk = "medium"
-    else:
-        risk = "low"
-    return {
-        "node": model_id,
-        "affected_models": sorted(r.unique_id for r in models_hit.collect()),
-        "affected_exposures": sorted(r.unique_id for r in exposures_hit.collect()),
-        "affected_tests": sorted(r.unique_id for r in affected_tests.collect()),
-        "risk": risk,
-    }
 
 
 def source_dependencies(index: AriadneIndex, model_id: str, *, depth: int = 10) -> DataFrame:

@@ -1,12 +1,18 @@
-"""Driver-local snapshot of the index for latency-critical serving.
+"""Driver-local snapshot of the index: the serving implementation.
 
 The index tables are metadata-scale (≤10k models — reference scale
 envelope, README.md:13); the reference serves them from an in-process
 SQLite. A Spark job per lookup costs 50-300ms of scheduling alone, so
-interactive tools (search → capsule → lineage) run against this
-snapshot instead — pure-Python scoring reproduces the DataFrame
-pipeline's semantics exactly (pinned by tests), and the DataFrame path
-remains the source of truth for batch/scale use.
+the interactive tools — search, capsule, discover, lineage, impact and
+the model-details lookups — are implemented once, here, in pure Python
+over the held rows, and the ToolServer and the CLI answer from this
+snapshot without a Spark job. Search keeps the DataFrame
+``model_search.search_models`` semantics exactly (pinned by tests), as
+lineage keeps ``lineage.get_lineage``'s and ``patterns`` keeps
+``patterns.extract_patterns``'s; those DataFrame twins stay as the
+batch path and as the references the tests compare against. The served
+answers on the fixture project are pinned by
+tests/fixtures/serving_golden.json.
 
 Build cost: no JVM round trip on a driver-side index. ``from_rows``
 takes the rows a driver-side ``AriadneIndex.build`` or ``refresh`` holds
@@ -22,8 +28,17 @@ import math
 from dataclasses import dataclass, field
 from typing import Iterable, Mapping
 
-from ariadne_dbt_spark.config import HYBRID_WEIGHTS, LAYER_BOOSTS, EngineConfig
+from ariadne_dbt_spark.config import BUDGET_FRACTIONS, HYBRID_WEIGHTS, LAYER_BOOSTS, EngineConfig
 from ariadne_dbt_spark.functions.text import tokenize_query
+from ariadne_dbt_spark.operators.capsule import (
+    confidence,
+    detect_intent,
+    estimate_tokens,
+    full_context,
+    greedy_fill,
+    minimal_context,
+    skeleton_context,
+)
 from ariadne_dbt_spark.operators.search import B, DEFAULT_FIELD_WEIGHTS, K1, rounded_score
 
 #: the index tables a snapshot holds besides postings/docstats
@@ -196,14 +211,15 @@ class LocalIndexCache:
         return out[:limit]
 
     # -- lookups ---------------------------------------------------------------
-    def by_name(self, name: str) -> dict | None:
+    def by_name(self, name: str) -> list[str]:
+        """The unique_ids of the models named ``name`` (case-insensitive,
+        P4), in table order."""
         low = name.lower()
-        for m in self.models.values():
-            if (m["name"] or "").lower() == low:
-                return m
-        return None
+        return [uid for uid, m in self.models.items() if (m["name"] or "").lower() == low]
 
     def resolve_paths(self, paths: list[str]) -> list[str]:
+        """P6: exact file-path OR basename(-'.sql') resolution; .yml/.yaml
+        skipped; dedup preserving input order (reference: search.py:148-186)."""
         out, seen = [], set()
         for p in paths:
             if p.endswith((".yml", ".yaml")):
@@ -218,6 +234,8 @@ class LocalIndexCache:
         return out
 
     def columns_with_tests(self, model_id: str) -> list[dict]:
+        """J2: the model's columns, name-ordered, each with the sorted test
+        types on it."""
         tests_by_col: dict[str, set] = {}
         for t in self.tests.get(model_id, ()):
             if t["column_name"]:
@@ -228,6 +246,7 @@ class LocalIndexCache:
         ]
 
     def macros_used(self, model_id: str) -> list[dict]:
+        """J6: a macro is used iff its name appears in the model SQL."""
         m = self.models.get(model_id)
         if not m:
             return []
@@ -239,6 +258,7 @@ class LocalIndexCache:
         ]
 
     def direct_sources(self, model_id: str) -> list[dict]:
+        """J4: the model's direct upstream sources."""
         out = []
         for pid in self.parents.get(model_id, ()):
             s = self.sources.get(pid)
@@ -254,29 +274,81 @@ class LocalIndexCache:
                 )
         return sorted(out, key=lambda r: r["unique_id"])
 
-    # -- serving surfaces (latency path; semantics pinned to the
-    # DataFrame operators by tests/test_local_serving.py) -------------------
+    def coverage(self, model_id: str) -> dict:
+        """A6: tested/total column ratio for one model."""
+        total = len(self.columns.get(model_id, ()))
+        tested = len({t["column_name"] for t in self.tests.get(model_id, ()) if t["column_name"]})
+        pct = round(100.0 * tested / total, 1) if total else 0.0
+        return {"total_columns": total, "tested_columns": tested, "coverage_pct": pct}
+
+    def neighbor_names(self, model_id: str) -> tuple[list[str], list[str]]:
+        """Sorted names of the models one hop upstream and downstream."""
+        return tuple(
+            sorted(self.models[u]["name"] for u in adj.get(model_id, ()) if u in self.models)
+            for adj in (self.parents, self.children)
+        )
+
+    def _name_layer(self, uid: str) -> tuple[str | None, str | None]:
+        """A node's name and layer; a source's layer is ``source``, an
+        exposure's ``exposure``."""
+        if uid in self.models:
+            return self.models[uid]["name"], self.models[uid]["layer"]
+        for nodes, layer in ((self.sources, "source"), (self.exposures, "exposure")):
+            if uid in nodes:
+                return nodes[uid]["name"], layer
+        return None, None
+
+    # -- serving surfaces ------------------------------------------------------
     def lineage(self, model_id: str, *, depth: int = 3, direction: str = "both") -> list[dict]:
-        """Enriched lineage rows — local twin of lineage.get_lineage."""
+        """``(unique_id, distance, relationship, name, layer, kind)`` rows
+        sorted (relationship, distance, unique_id) — reference:
+        server.py:240-307."""
+        if direction not in ("both", "upstream", "downstream"):
+            raise ValueError(f"direction must be both/upstream/downstream, got {direction!r}")
         out = []
         dirs = ("upstream", "downstream") if direction == "both" else (direction,)
         for rel in dirs:
             for uid, dist in self.bfs([model_id], rel, depth):
-                m = self.models.get(uid)
-                s = self.sources.get(uid)
+                name, layer = self._name_layer(uid)
                 out.append({
                     "unique_id": uid,
                     "distance": dist,
                     "relationship": rel,
-                    "name": (m or s or {}).get("name"),
-                    "layer": m["layer"] if m else ("source" if s else None),
+                    "name": name,
+                    "layer": layer,
                     "kind": uid.split(".", 1)[0],
                 })
         out.sort(key=lambda r: (r["relationship"], r["distance"], r["unique_id"]))
         return out
 
+    def impact(self, model_id: str, *, depth: int = 5) -> dict:
+        """Blast radius + risk heuristic (reference: graph.py:79-132):
+        downstream BFS → split by kind → tests on any affected node →
+        high if exposures>0 or (mart-hit and models>5); medium if
+        models>3 or mart-hit; else low."""
+        affected = [u for u, _ in self.bfs([model_id], "downstream", depth)]
+        models = sorted(u for u in affected if u.split(".", 1)[0] == "model")
+        exposures = sorted(u for u in affected if u.split(".", 1)[0] == "exposure")
+        mart_hit = any(self._name_layer(u)[1] == "marts" for u in models)
+        if exposures or (mart_hit and len(models) > 5):
+            risk = "high"
+        elif len(models) > 3 or mart_hit:
+            risk = "medium"
+        else:
+            risk = "low"
+        return {
+            "node": model_id,
+            "affected_models": models,
+            "affected_exposures": exposures,
+            "affected_tests": sorted(
+                t["unique_id"] for u in affected for t in self.tests.get(u, ())
+            ),
+            "risk": risk,
+        }
+
     def patterns(self) -> dict:
-        """Pattern bundle — local twin of operators.patterns.extract_patterns."""
+        """Pattern bundle — local twin of operators.patterns.extract_patterns
+        (which ``get_project_patterns`` serves, once per index)."""
         from collections import Counter, defaultdict
 
         models = list(self.models.values())
@@ -298,7 +370,6 @@ class LocalIndexCache:
             for layer, c in prefixes.items() if c
         }
         # example per layer: argmax (column count, description length, name)
-        examples = {}
         best: dict[str, tuple] = {}
         for m in models:
             key = (
@@ -347,6 +418,11 @@ class LocalIndexCache:
                 "macros": len(self.macros),
                 "exposures": len(self.exposures),
                 "columns": sum(len(v) for v in self.columns.values()),
+                "tested_columns": len({
+                    (t["model_id"], t["column_name"])
+                    for ts in self.tests.values() for t in ts if t["column_name"]
+                }),
+                "source_schemas": len({s["source_name"] for s in self.sources.values()}),
             },
             "models_per_layer": dict(per_layer),
             "materializations": materializations,
@@ -356,6 +432,33 @@ class LocalIndexCache:
             "top_tags": top_tags,
         }
 
+    def select_pivots(
+        self,
+        task: str,
+        intent: str,
+        *,
+        focus_model: str | None = None,
+        entry_models: list[str] | None = None,
+        entry_paths: list[str] | None = None,
+        max_pivots: int,
+    ) -> tuple[list[str], list[float], bool]:
+        """Pivots (C5, reference: capsule.py:209-270): the models named by
+        ``focus_model`` and ``entry_models`` and resolved from
+        ``entry_paths``, then a hybrid-search fill up to ``max_pivots``.
+        Returns the pivots, the fill search's scores (it asks for 2 more
+        hits than it keeps) and whether any anchor resolved."""
+        names = ([focus_model] if focus_model else []) + list(entry_models or [])
+        anchors = [u for n in names for u in self.by_name(n)]
+        anchors += self.resolve_paths(entry_paths or [])
+        pivots = list(dict.fromkeys(anchors))[:max_pivots]
+        scores: list[float] = []
+        remaining = max_pivots - len(pivots)
+        if remaining > 0:
+            hits = self.search(task, intent=intent, limit=remaining + 2, exclude_ids=pivots)
+            scores = [h["score"] for h in hits]
+            pivots += [h["unique_id"] for h in hits[:remaining]]
+        return pivots, scores, bool(anchors)
+
     def capsule(
         self,
         task: str,
@@ -363,83 +466,57 @@ class LocalIndexCache:
         focus_model: str | None = None,
         entry_models: list[str] | None = None,
         entry_paths: list[str] | None = None,
-        token_budget: int = 10_000,
-        max_pivots: int = 3,
+        token_budget: int | None = None,
     ) -> dict:
-        """Token-budgeted capsule — local twin of CapsuleBuilder.build
-        (same tier templates, budget fractions, break-vs-skip fill)."""
-        from ariadne_dbt_spark.config import BUDGET_FRACTIONS, INTENT_DEPTHS
-        from ariadne_dbt_spark.operators.capsule import (
-            CapsuleBuilder,
-            detect_intent,
-            estimate_tokens,
-            full_context,
-            minimal_context,
-            skeleton_context,
-        )
-
+        """Token-budgeted capsule (reference: capsule.py:136-205): the
+        budget, pivot cap and intent depths come from the index config,
+        ``token_budget`` overriding the configured budget."""
+        cfg = self.config
+        budget = token_budget or cfg.token_budget
         intent = detect_intent(task)
-        up_depth, down_depth = INTENT_DEPTHS.get(intent, (1, 1))
-
-        pivots: list[str] = []
-        explicit = False
-        for name in ([focus_model] if focus_model else []) + list(entry_models or []):
-            m = self.by_name(name)
-            if m and m["unique_id"] not in pivots and len(pivots) < max_pivots:
-                pivots.append(m["unique_id"])
-                explicit = True
-        for uid in self.resolve_paths(entry_paths or []):
-            if uid not in pivots and len(pivots) < max_pivots:
-                pivots.append(uid)
-                explicit = True
-        scores: list[float] = []
-        if len(pivots) < max_pivots:
-            hits = self.search(
-                task, intent=intent, limit=max_pivots - len(pivots) + 2,
-                exclude_ids=pivots,
-            )
-            scores = [h["score"] for h in hits]
-            for h in hits[: max_pivots - len(pivots)]:
-                if h["unique_id"] not in pivots:
-                    pivots.append(h["unique_id"])
-        confidence = CapsuleBuilder._confidence(explicit, scores)
-
+        up_depth, down_depth = cfg.depths_for(intent)
+        pivots, scores, explicit = self.select_pivots(
+            task, intent, focus_model=focus_model, entry_models=entry_models,
+            entry_paths=entry_paths, max_pivots=cfg.max_pivots,
+        )
         cap = {
-            "task": task, "intent": intent, "confidence": confidence,
+            "task": task, "intent": intent, "confidence": confidence(explicit, scores),
             "pivots": [], "upstream": [], "downstream": [], "tests": [],
             "macros": [], "sources": [], "similar_models": [], "patterns": {},
+            # session memory (reference models.py:184 reserves it and
+            # always emits {}; the ToolServer fills it from its event log)
             "session_context": {},
-            "token_estimate": 0, "token_budget": token_budget,
+            "token_estimate": 0, "token_budget": budget,
         }
         if not pivots:
             cap["patterns"] = self.patterns()
             cap["token_estimate"] = estimate_tokens(cap)
             return cap
 
-        up_ids = self.bfs(pivots, "upstream", up_depth) if up_depth else []
-        up_ids = [(u, d) for u, d in up_ids if u.startswith("model.")]
-        down_ids = self.bfs(pivots, "downstream", down_depth) if down_depth else []
-        down_ids = [(u, d) for u, d in down_ids if u.startswith("model.")]
-
-        alloc = {k: int(token_budget * v) for k, v in BUDGET_FRACTIONS.items()}
-        fill = CapsuleBuilder._greedy_fill
+        # multi-pivot BFS with min-distance union (G6/E2), models only
+        up_ids, down_ids = (
+            [(u, d) for u, d in self.bfs(pivots, direction, depth) if u.startswith("model.")]
+            for direction, depth in (("upstream", up_depth), ("downstream", down_depth))
+        )
+        alloc = {k: int(budget * v) for k, v in BUDGET_FRACTIONS.items()}
 
         pivot_items = [
             full_context(self.models[p], self.columns_with_tests(p))
             for p in pivots if p in self.models
         ]
-        cap["pivots"] = fill(pivot_items, alloc["pivot"], break_on_overflow=False)
+        cap["pivots"] = greedy_fill(pivot_items, alloc["pivot"], break_on_overflow=False)
         up_items = [
             skeleton_context(self.models[u], self.columns_with_tests(u), d)
-            for u, d in sorted(up_ids, key=lambda x: (x[1], x[0])) if u in self.models
+            for u, d in up_ids if u in self.models
         ]
-        cap["upstream"] = fill(up_items, alloc["upstream"], break_on_overflow=True)
+        cap["upstream"] = greedy_fill(up_items, alloc["upstream"], break_on_overflow=True)
         down_items = [
             minimal_context(self.models[u], self.columns_with_tests(u), d)
-            for u, d in sorted(down_ids, key=lambda x: (x[1], x[0])) if u in self.models
+            for u, d in down_ids if u in self.models
         ]
-        cap["downstream"] = fill(down_items, alloc["downstream"], break_on_overflow=True)
+        cap["downstream"] = greedy_fill(down_items, alloc["downstream"], break_on_overflow=True)
 
+        # related context (tests J5, macros J6, sources J4) per pivot
         test_items, macro_items, source_items = [], [], []
         for p in pivots:
             test_items += [
@@ -449,14 +526,13 @@ class LocalIndexCache:
             ]
             macro_items += self.macros_used(p)
             source_items += self.direct_sources(p)
-        half = alloc["tests_macros"] // 2
-        cap["tests"] = fill(test_items, half, break_on_overflow=False)
-        cap["macros"] = fill(macro_items, alloc["tests_macros"] - half, break_on_overflow=False)
-        seen: set[str] = set()
-        cap["sources"] = [
-            s for s in source_items
-            if not (s["unique_id"] in seen or seen.add(s["unique_id"]))
-        ]
+        half = alloc["tests_macros"] // 2  # tests capped at half (capsule.py:388)
+        cap["tests"] = greedy_fill(test_items, half, break_on_overflow=False)
+        cap["macros"] = greedy_fill(
+            macro_items, alloc["tests_macros"] - half, break_on_overflow=False
+        )
+        cap["sources"] = list({s["unique_id"]: s for s in source_items}.values())  # first-seen (E3)
+        # similar models: re-search excluding pivot∪up∪down, take 5 (C7)
         wanted = set(pivots) | {u for u, _ in up_ids} | {u for u, _ in down_ids}
         sim = self.search(task, intent=intent, limit=5, exclude_ids=list(wanted))
         cap["similar_models"] = [r["name"] for r in sim]
@@ -474,27 +550,16 @@ class LocalIndexCache:
         entry_paths: list[str] | None = None,
         limit: int = 40,
     ) -> list[dict]:
-        """Names-only orientation list — local twin of
-        CapsuleBuilder.discover (same pivot seeding, depth-4 DAG labels,
-        search fill labeled ``search``; reference: capsule.py:432-501)."""
-        from ariadne_dbt_spark.operators.capsule import detect_intent
-
+        """Names-only orientation list (C8, reference: capsule.py:432-501):
+        pivots (cap 5, seeded by the capsule's anchors) + depth-4 DAG
+        labels + search fill labeled ``search``, at most ``limit`` rows
+        (capped by the config's ``discover_limit``), ~12 tokens/row."""
         limit = max(1, min(int(limit), self.config.discover_limit))
         intent = detect_intent(task)
-
-        pivots: list[str] = []
-        for name in ([focus_model] if focus_model else []) + list(entry_models or []):
-            m = self.by_name(name)
-            if m and m["unique_id"] not in pivots and len(pivots) < 5:
-                pivots.append(m["unique_id"])
-        for uid in self.resolve_paths(entry_paths or []):
-            if uid not in pivots and len(pivots) < 5:
-                pivots.append(uid)
-        if len(pivots) < 5:
-            for h in self.search(task, intent=intent, limit=5 - len(pivots), exclude_ids=pivots):
-                if h["unique_id"] not in pivots:
-                    pivots.append(h["unique_id"])
-
+        pivots, _, _ = self.select_pivots(
+            task, intent, focus_model=focus_model, entry_models=entry_models,
+            entry_paths=entry_paths, max_pivots=5,
+        )
         out: list[dict] = []
         seen: set[str] = set()
 
@@ -507,8 +572,8 @@ class LocalIndexCache:
                 {
                     "unique_id": uid,
                     "name": m["name"],
-                    "layer": m.get("layer") or "other",
-                    "file_path": m.get("file_path") or "",
+                    "layer": m["layer"] or "other",
+                    "file_path": m["file_path"] or "",
                     "relationship": rel,
                     "distance": dist,
                 }
@@ -516,13 +581,12 @@ class LocalIndexCache:
 
         for p in pivots:
             add(p, "pivot", 0)
-        for direction, rel in (("upstream", "upstream"), ("downstream", "downstream")):
+        for direction in ("upstream", "downstream"):
             if len(out) >= limit:
                 break
-            hits = sorted(self.bfs(pivots, direction, 4), key=lambda x: (x[1], x[0]))
-            for uid, dist in hits:
+            for uid, dist in self.bfs(pivots, direction, 4):
                 if uid.startswith("model."):
-                    add(uid, rel, dist)
+                    add(uid, direction, dist)
         if len(out) < limit:
             for h in self.search(task, intent=intent, limit=limit - len(out), exclude_ids=list(seen)):
                 add(h["unique_id"], "search", -1)

@@ -1,4 +1,7 @@
-"""Hybrid model search + point lookups over the index (SURVEY §2.7, §3.3).
+"""Hybrid model search and the column/path finders over the index
+(SURVEY §2.7, §3.3): the DataFrame (batch) path. Served tools answer
+from the driver-local snapshot (operators/local_cache.py), which keeps
+the same search semantics.
 
 Pipeline parity with the reference (src/ariadne_dbt/search.py:54-104):
 
@@ -99,35 +102,6 @@ def search_models(
     ).limit(limit)
 
 
-def get_model_by_name(index: AriadneIndex, name: str) -> DataFrame:
-    """P4: case-insensitive point lookup."""
-    return index.models.where(F.lower(F.col("name")) == name.lower())
-
-
-def get_model_by_id(index: AriadneIndex, unique_id: str) -> DataFrame:
-    return index.models.where(F.col("unique_id") == unique_id)
-
-
-def resolve_paths(index: AriadneIndex, paths: list[str]) -> list[str]:
-    """P6: exact file-path OR basename(-'.sql') resolution; .yml/.yaml
-    skipped; dedup preserving input order (reference: search.py:148-186)."""
-    out: list[str] = []
-    seen: set[str] = set()
-    for p in paths:
-        if p.endswith((".yml", ".yaml")):
-            continue
-        stem = p.rsplit("/", 1)[-1]
-        stem = stem[:-4] if stem.endswith(".sql") else stem
-        rows = index.models.where(
-            (F.col("file_path") == p) | (F.lower(F.col("name")) == stem.lower())
-        ).select("unique_id").collect()
-        for r in rows:
-            if r.unique_id not in seen:
-                seen.add(r.unique_id)
-                out.append(r.unique_id)
-    return out
-
-
 def find_by_column(index: AriadneIndex, column_name: str, *, limit: int = 20) -> DataFrame:
     """T8: partial column-name match across models, centrality-ranked.
     LIKE special chars are escaped literally (reference: search.py:188-204)."""
@@ -187,42 +161,3 @@ def columns_with_tests_all(
         )
         .orderBy("model_id", "name")
     )
-
-
-def columns_with_tests(index: AriadneIndex, model_id: str) -> DataFrame:
-    """J2: columns ⟕ tests with aggregated test types per column."""
-    return columns_with_tests_all(index, [model_id]).orderBy("name")
-
-
-def macros_used(index: AriadneIndex, model_id: str) -> DataFrame:
-    """J6: macro used iff its name appears in the model SQL — broadcast
-    nested-loop containment join (reference: search.py:265-280)."""
-    m = index.models.where(F.col("unique_id") == model_id).select(
-        "unique_id", F.coalesce(F.nullif("compiled_code", F.lit("")), F.col("raw_code")).alias("sql")
-    )
-    return (
-        m.crossJoin(F.broadcast(index.macros.select(F.col("name").alias("macro_name"), F.col("unique_id").alias("macro_id"))))
-        .where(F.expr("contains(sql, macro_name)"))
-        .select("macro_id", "macro_name")
-    )
-
-
-def direct_sources(index: AriadneIndex, model_id: str) -> DataFrame:
-    """J4: direct upstream sources of a model."""
-    e = index.edges.where(F.col("child_id") == model_id)
-    return e.join(
-        index.sources, e.parent_id == index.sources.unique_id
-    ).select("unique_id", "name", "source_name", "schema_name", "description")
-
-
-def coverage_stats(index: AriadneIndex, model_id: str) -> dict:
-    """A6: tested/total column ratio for one model."""
-    total = index.columns.where(F.col("model_id") == model_id).count()
-    tested = (
-        index.tests.where((F.col("model_id") == model_id) & (F.col("column_name") != ""))
-        .select("column_name")
-        .distinct()
-        .count()
-    )
-    pct = round(100.0 * tested / total, 1) if total else 0.0
-    return {"total_columns": total, "tested_columns": tested, "coverage_pct": pct}

@@ -10,14 +10,17 @@ Tools (names mirror the reference):
     refresh_index, usage_stats, find_models_by_column,
     find_models_by_path, rate_capsule, detect_antipatterns
 
-``search_models`` answers from the index's driver-local snapshot
-(``AriadneIndex.local()``, operators/local_cache.py) and runs no Spark
-job. On a driver-side index ``refresh_index`` keeps the refreshed tables
-as driver rows and builds the snapshot from them, so neither it nor the
-search after it makes a py4j call; the tables' JVM frames are made when
-a DataFrame tool first reads them. ``get_project_patterns`` is
-computed once per index (``AriadneIndex.patterns()``). The other tools
-run the DataFrame operators.
+``search_models``, ``get_model_details``, ``get_lineage``,
+``get_impact_analysis``, ``discover_models`` and ``get_context_capsule``
+answer from the index's driver-local snapshot (``AriadneIndex.local()``,
+operators/local_cache.py) and run no Spark job. On a driver-side index
+``refresh_index`` keeps the refreshed tables as driver rows and builds
+the snapshot from them, so neither it nor the calls after it make a
+py4j call; the tables' JVM frames are made when a DataFrame tool first
+reads them. ``get_project_patterns`` is computed once per index
+(``AriadneIndex.patterns()``). ``find_models_by_column``,
+``find_models_by_path`` and ``detect_antipatterns`` run the DataFrame
+operators, which also serve the oracle-gated workloads.
 
 Every call is usage-logged (S8) with duration, like the reference.
 """
@@ -28,21 +31,17 @@ import json
 import sys
 import time
 
-from pyspark.sql import functions as F
-
+from ariadne_dbt_spark.config import BUDGET_FRACTIONS
 from ariadne_dbt_spark.ingest.indexer import AriadneIndex
-from ariadne_dbt_spark.operators.capsule import CapsuleBuilder, detect_intent
-from ariadne_dbt_spark.operators.lineage import get_impact_analysis, get_lineage
-from ariadne_dbt_spark.operators.model_search import (
-    columns_with_tests,
-    coverage_stats,
-    direct_sources,
-    find_by_column,
-    find_by_path,
-    get_model_by_name,
-    macros_used,
-)
+from ariadne_dbt_spark.operators.capsule import detect_intent, estimate_tokens, greedy_fill
+from ariadne_dbt_spark.operators.model_search import find_by_column, find_by_path
 from ariadne_dbt_spark.operators.usage import SessionEventLog, UsageLog
+
+#: the column fields of a ``get_model_details`` answer
+DETAIL_COLUMNS = (
+    "model_id", "name", "data_type", "description", "is_primary_key",
+    "is_foreign_key", "test_types",
+)
 
 
 class ToolServer:
@@ -54,7 +53,6 @@ class ToolServer:
             if usage_dir
             else None
         )
-        self.builder = CapsuleBuilder(index)
         #: log id of the most recent get_context_capsule call — the target
         #: of rate_capsule (reference: server.py:21,111,513)
         self._last_capsule_log_id: int | None = None
@@ -68,66 +66,53 @@ class ToolServer:
         hits = self.index.local().search(query, intent=intent, limit=limit, layer=layer)
         return {"results": hits}
 
+    def _model_id(self, model_name: str) -> str | None:
+        """The first model named ``model_name`` (case-insensitive)."""
+        ids = self.index.local().by_name(model_name)
+        return ids[0] if ids else None
+
     def get_model_details(self, model_name: str) -> dict:
         # name OR unique_id lookup (reference: server.py:196); error text
         # points at search_models like the reference's hint
-        row = get_model_by_name(self.index, model_name).first()
-        if row is None:
-            from ariadne_dbt_spark.operators.model_search import get_model_by_id
-
-            row = get_model_by_id(self.index, model_name).first()
-        if row is None:
+        snap = self.index.local()
+        uid = self._model_id(model_name) or (model_name if model_name in snap.models else None)
+        if uid is None:
             return {
                 "error": f"model not found: {model_name}. "
                 "Use search_models to find similar names."
             }
-        uid = row.unique_id
-        from ariadne_dbt_spark.operators.graph import neighbors
-
-        names = {
-            r["unique_id"]: r["name"]
-            for r in self.index.models.select("unique_id", "name").collect()
-        }
-        nbrs = neighbors(self.index.edges, uid).collect()
+        m = snap.models[uid]
+        upstream, downstream = snap.neighbor_names(uid)
         return {
-            "model": {k: row[k] for k in (
+            "model": {k: m[k] for k in (
                 "unique_id", "name", "layer", "materialization", "description",
                 "file_path", "upstream_count", "downstream_count", "centrality")},
             # reference returns the executable definition too (server.py:226)
-            "compiled_sql": row["compiled_code"] or row["raw_code"] or "",
-            "columns": [r.asDict() for r in columns_with_tests(self.index, uid).collect()],
+            "compiled_sql": m["compiled_code"] or m["raw_code"] or "",
+            "columns": [{k: c[k] for k in DETAIL_COLUMNS} for c in snap.columns_with_tests(uid)],
             "tests": [
                 {k: t[k] for k in ("unique_id", "name", "test_type", "column_name")}
-                for t in self.index.tests.where(F.col("model_id") == uid).collect()
+                for t in snap.tests.get(uid, ())
             ],
-            "upstream": sorted(
-                names[r["unique_id"]] for r in nbrs
-                if r["relationship"] == "upstream" and r["unique_id"] in names
-            ),
-            "downstream": sorted(
-                names[r["unique_id"]] for r in nbrs
-                if r["relationship"] == "downstream" and r["unique_id"] in names
-            ),
-            "coverage": coverage_stats(self.index, uid),
-            "macros": [r.asDict() for r in macros_used(self.index, uid).collect()],
-            "sources": [r.asDict() for r in direct_sources(self.index, uid).collect()],
+            "upstream": upstream,
+            "downstream": downstream,
+            "coverage": snap.coverage(uid),
+            "macros": snap.macros_used(uid),
+            "sources": snap.direct_sources(uid),
         }
 
     def get_lineage(self, model_name: str, depth: int = 3, direction: str = "both") -> dict:
         depth = max(1, min(int(depth), 10))  # O7 clamp
-        row = get_model_by_name(self.index, model_name).first()
-        if row is None:
+        uid = self._model_id(model_name)
+        if uid is None:
             return {"error": f"model not found: {model_name}"}
-        lin = get_lineage(self.index, row.unique_id, depth=depth, direction=direction)
-        return {"lineage": [r.asDict() for r in lin.collect()]}
+        return {"lineage": self.index.local().lineage(uid, depth=depth, direction=direction)}
 
     def get_impact_analysis(self, model_name: str, depth: int = 5) -> dict:
-        row = get_model_by_name(self.index, model_name).first()
-        if row is None:
+        uid = self._model_id(model_name)
+        if uid is None:
             return {"error": f"model not found: {model_name}"}
-        imp = get_impact_analysis(self.index, row.unique_id, depth=min(int(depth), 10))
-        imp.pop("affected", None)
-        return imp
+        return self.index.local().impact(uid, depth=min(int(depth), 10))
 
     def discover_models(
         self,
@@ -140,7 +125,7 @@ class ToolServer:
         # reference: server.py:117-146 — discover accepts the same
         # focus/entry anchors as get_context_capsule
         return {
-            "models": self.builder.discover(
+            "models": self.index.local().discover(
                 task,
                 focus_model=focus_model,
                 entry_models=entry_models,
@@ -153,19 +138,15 @@ class ToolServer:
                             entry_models: list[str] | None = None,
                             entry_paths: list[str] | None = None,
                             token_budget: int | None = None) -> dict:
-        cap = self.builder.build(
+        out = self.index.local().capsule(
             task, focus_model=focus_model, entry_models=entry_models,
             entry_paths=entry_paths, token_budget=token_budget,
         )
-        out = cap.to_dict()
         # session memory (reference reserves session_context and its 5%
         # budget fraction but always emits {}; roadmap v1.0 "session
         # memory"): prior events of THIS server session, newest first,
         # greedy-filled into the session allocation
         if self.events is not None:
-            from ariadne_dbt_spark.config import BUDGET_FRACTIONS
-            from ariadne_dbt_spark.operators.capsule import estimate_tokens
-
             alloc = int(out["token_budget"] * BUDGET_FRACTIONS["session"])
             recent = self.events.for_session(self._session_id)[-10:]
             items = [
@@ -178,9 +159,7 @@ class ToolServer:
                 for e in reversed(recent)
             ]
             out["session_context"] = {
-                "recent_events": CapsuleBuilder._greedy_fill(
-                    items, alloc, break_on_overflow=False
-                )
+                "recent_events": greedy_fill(items, alloc, break_on_overflow=False)
             }
             out["token_estimate"] = estimate_tokens(out)
             self.events.record(
@@ -243,7 +222,6 @@ class ToolServer:
             manifest_path,
             catalog_path=catalog_path, run_results_path=run_results_path,
         )
-        self.builder = CapsuleBuilder(self.index)
         return {
             "status": "ok",
             "models": self.index.model_count(),

@@ -131,13 +131,9 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
     Each row passes the same type verifier and converter the list path
     applies (:func:`verify_rows`), so a wrong Python type, a float in an
     integral column or a None in a non-nullable field still raise rather
-    than being coerced by Arrow. Converted rows are in Spark's internal
-    form (timestamps as UTC micros, dates as days, maps as dicts, structs
-    as tuples), which Arrow takes without a cast.
+    than being coerced by Arrow. The conversion is :func:`verified_frame`.
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _create_converter, _parse_datatype_string
+    from pyspark.sql.types import _parse_datatype_string
 
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
@@ -145,6 +141,20 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
         raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
     rows = list(rows)
     verify_rows(rows, schema)
+    return verified_frame(spark, rows, schema)
+
+
+def verified_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """:func:`local_frame` over ``rows`` that already passed
+    :func:`verify_rows` against ``schema``: only the conversion. Converted
+    rows are in Spark's internal form (timestamps as UTC micros, dates as
+    days, maps as dicts, structs as tuples), which Arrow takes without a
+    cast; they go to the JVM as one Arrow table typed by
+    ``to_arrow_schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter
+
     convert = _create_converter(schema)
     internal = [schema.toInternal(convert(row)) for row in rows]
     arrow_schema = to_arrow_schema(schema)

@@ -1,12 +1,14 @@
 """Capsule-assembly workloads (SURVEY §2.9 C1-C8 + G7) over the
-synthetic metadata corpus — each runs the REAL CapsuleBuilder machinery
-(operators/capsule.py) and is verified against a plain-SQL oracle that
-re-derives the same result from the corpus CTEs.
+synthetic metadata corpus — each runs the serving implementation (the
+index's driver-local snapshot, ``LocalIndexCache`` in
+operators/local_cache.py, and the capsule pieces in operators/capsule.py)
+and is verified against a plain-SQL oracle that re-derives the same
+result from the corpus CTEs.
 
 Capsule assembly is driver-side by design (the token budget bounds every
-collection to KBs — reference: capsule.py:136-205 and SURVEY §3.2), so
-these workloads collect bounded sets, run the real driver logic, and
-re-emit a DataFrame for the hash compare.
+result to KBs — reference: capsule.py:136-205 and SURVEY §3.2), so these
+workloads run the serving code on the index's snapshot and re-emit a
+DataFrame for the hash compare.
 """
 
 from __future__ import annotations
@@ -107,11 +109,11 @@ _FILL_ALLOC = 900  # tokens; = int(4500 * BUDGET_FRACTIONS["upstream"])
     ORDER BY strategy, unique_id
     """,
     survey="C2,C3,C1,O5",
-    doc="Greedy fill through the real _greedy_fill: break keeps a strict "
+    doc="Greedy fill through the real greedy_fill: break keeps a strict "
     "prefix, skip hops overflowing items (reference: capsule.py:345-363).",
 )
 def meta_budget_fill_break_vs_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
+    from ariadne_dbt_spark.operators.capsule import greedy_fill
 
     idx = synthetic_index(spark, sf_dir)
     ids = [f"model.shop.m_{k}" for k in range(60)]
@@ -130,7 +132,7 @@ def meta_budget_fill_break_vs_skip(spark: SparkSession, sf_dir: str) -> DataFram
     ]
     out = []
     for strategy, brk in (("break", True), ("skip", False)):
-        kept = CapsuleBuilder._greedy_fill(items, _FILL_ALLOC, break_on_overflow=brk)
+        kept = greedy_fill(items, _FILL_ALLOC, break_on_overflow=brk)
         out += [(strategy, it["unique_id"]) for it in kept]
     return spark.createDataFrame(
         sorted(out), "strategy string, unique_id string"
@@ -139,7 +141,7 @@ def meta_budget_fill_break_vs_skip(spark: SparkSession, sf_dir: str) -> DataFram
 
 # --------------------------------------------------------------------------
 # C4: 3-tier skeletonization — pivot=full, adjacent=schema-only,
-# distant=minimal (name + count + key columns) — real builder methods
+# distant=minimal (name + count + key columns) — the real tier renderers
 # (reference: capsule.py:61-117) flattened to a comparable frame.
 # --------------------------------------------------------------------------
 _TIER_PIVOT = "model.shop.m_31"
@@ -177,45 +179,35 @@ _TIER_PIVOT = "model.shop.m_31"
     """,
     survey="C4,G6",
     doc="Tiered contexts around m_31 (up 1 = skeleton, down ≤2 = minimal) "
-    "via the real _full/_skeleton/_minimal context builders.",
+    "via the real full/skeleton/minimal context renderers.",
 )
 def meta_skeleton_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
-    from ariadne_dbt_spark.operators.graph import DOWNSTREAM, UPSTREAM, bfs
-    from ariadne_dbt_spark.operators.model_search import columns_with_tests_all
+    from ariadne_dbt_spark.operators.capsule import (
+        full_context,
+        minimal_context,
+        skeleton_context,
+    )
 
-    idx = synthetic_index(spark, sf_dir)
-    b = CapsuleBuilder(idx)
-    up = [
-        (r.unique_id, r.distance)
-        for r in bfs(idx.edges, [_TIER_PIVOT], UPSTREAM, max_depth=1)
-        .where(F.col("unique_id").startswith("model."))
-        .collect()
-    ]
-    down = [
-        (r.unique_id, r.distance)
-        for r in bfs(idx.edges, [_TIER_PIVOT], DOWNSTREAM, max_depth=2)
-        .where(F.col("unique_id").startswith("model."))
-        .collect()
-    ]
-    wanted = [_TIER_PIVOT] + [u for u, _ in up] + [u for u, _ in down]
-    rows = {
-        r["unique_id"]: r.asDict()
-        for r in idx.models.where(F.col("unique_id").isin(wanted)).collect()
-    }
-    cols: dict[str, list[dict]] = {u: [] for u in wanted}
-    for r in columns_with_tests_all(idx, wanted).collect():
-        cols[r["model_id"]].append(r.asDict())
+    snap = synthetic_index(spark, sf_dir).local()
+
+    def tier(direction: str, depth: int) -> list[tuple[str, int]]:
+        return [
+            (u, d) for u, d in snap.bfs([_TIER_PIVOT], direction, depth)
+            if u.startswith("model.")
+        ]
+
+    def ctx(render, uid: str, *dist):
+        return render(snap.models[uid], snap.columns_with_tests(uid), *dist)
 
     out = []
-    full = b._full_context(rows[_TIER_PIVOT], cols[_TIER_PIVOT])
+    full = ctx(full_context, _TIER_PIVOT)
     keys = ",".join(c["name"] for c in full["columns"] if c["pk"] or c["fk"])
     out.append(("full", _TIER_PIVOT, 0, len(full["columns"]), keys))
-    for u, d in up:
-        sk = b._skeleton_context(rows[u], cols[u], d)
+    for u, d in tier("upstream", 1):
+        sk = ctx(skeleton_context, u, d)
         out.append(("skeleton", u, d, len(sk["columns"]), ""))
-    for u, d in down:
-        mn = b._minimal_context(rows[u], cols[u], d)
+    for u, d in tier("downstream", 2):
+        mn = ctx(minimal_context, u, d)
         out.append(("minimal", u, d, mn["column_count"], ",".join(mn["key_columns"])))
     return spark.createDataFrame(
         sorted(out), "tier string, unique_id string, distance long, n_cols long, key_cols string"
@@ -264,21 +256,19 @@ def meta_skeleton_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "confidence from the score distribution.",
 )
 def meta_pivot_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
+    from ariadne_dbt_spark.operators.capsule import confidence
 
-    idx = synthetic_index(spark, sf_dir)
-    b = CapsuleBuilder(idx)
+    snap = synthetic_index(spark, sf_dir).local()
     out = []
-    pv, scores, explicit = b._select_pivots(
-        "zzz unfindable", "explore", None, ["m_5", "m_8"], None, 3
-    )
-    conf = b._confidence(explicit, scores)
-    out += [("explicit", i + 1, u, conf) for i, u in enumerate(pv)]
-    pv2, scores2, explicit2 = b._select_pivots(
-        "red widget", "explore", None, None, None, 3
-    )
-    conf2 = b._confidence(explicit2, scores2)
-    out += [("search", i + 1, u, conf2) for i, u in enumerate(pv2)]
+    for mode, task, entry in (
+        ("explicit", "zzz unfindable", ["m_5", "m_8"]),
+        ("search", "red widget", None),
+    ):
+        pv, scores, explicit = snap.select_pivots(
+            task, "explore", entry_models=entry, max_pivots=3
+        )
+        conf = confidence(explicit, scores)
+        out += [(mode, i + 1, u, conf) for i, u in enumerate(pv)]
     return spark.createDataFrame(
         sorted(out), "mode string, ord long, unique_id string, confidence string"
     )
@@ -286,8 +276,8 @@ def meta_pivot_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # C7: similar-models awareness — re-search excluding pivots∪up∪down,
-# take 5 (reference: capsule.py:174-177) — through the REAL
-# CapsuleBuilder.build (the capsule's own C7 step).
+# take 5 (reference: capsule.py:174-177) — through the real capsule
+# build (the capsule's own C7 step).
 # --------------------------------------------------------------------------
 @query(
     "meta_similar_models",
@@ -329,11 +319,8 @@ def meta_pivot_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the capsule's own neighborhood, top 5 names.",
 )
 def meta_similar_models(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
-
-    idx = synthetic_index(spark, sf_dir)
-    cap = CapsuleBuilder(idx).build("red widget")
-    rows = [(i + 1, n) for i, n in enumerate(cap.similar_models)]
+    cap = synthetic_index(spark, sf_dir).local().capsule("red widget")
+    rows = [(i + 1, n) for i, n in enumerate(cap["similar_models"])]
     return spark.createDataFrame(rows, "ord long, name string")
 
 
@@ -435,13 +422,10 @@ _DISC_LIMIT = 30
     survey="C8,G7,E3",
     doc="Discover: 5 search pivots + depth-4 up/down DAG labels + search "
     "fill to limit 30, first-seen dedup, through the real "
-    "CapsuleBuilder.discover.",
+    "LocalIndexCache.discover.",
 )
 def meta_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
-
-    idx = synthetic_index(spark, sf_dir)
-    out = CapsuleBuilder(idx).discover("red widget", limit=_DISC_LIMIT)
+    out = synthetic_index(spark, sf_dir).local().discover("red widget", limit=_DISC_LIMIT)
     rows = [
         (i + 1, r["unique_id"], r["name"], r["relationship"], r["distance"])
         for i, r in enumerate(out)

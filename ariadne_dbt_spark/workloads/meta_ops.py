@@ -218,10 +218,7 @@ _PATHS = [
     "(reference: search.py:148-186).",
 )
 def meta_path_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.model_search import resolve_paths
-
-    idx = synthetic_index(spark, sf_dir)
-    uids = resolve_paths(idx, _PATHS)
+    uids = synthetic_index(spark, sf_dir).local().resolve_paths(_PATHS)
     rows = [(i + 1, u) for i, u in enumerate(uids)]
     return spark.createDataFrame(rows, "ord long, unique_id string")
 

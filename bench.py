@@ -113,9 +113,8 @@ def latency_section(spark) -> dict:
     """P50/P95 of the interactive serving path on a 500-model synthetic
     manifest — mirrors the reference harness (reference:
     benchmarks/run.py:200-240: 10 rounds per op, search/capsule/lineage/
-    patterns + index build). ``search`` goes through ``ToolServer.handle``,
-    the path the CLI and the MCP adapter serve; the other ops time the
-    index's driver-local snapshot (LocalIndexCache)."""
+    patterns + index build). Every op goes through ``ToolServer.handle``,
+    the path the CLI and the MCP adapter serve."""
     import importlib.util
 
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -152,20 +151,25 @@ def latency_section(spark) -> dict:
     central = max(
         cache.models.values(),
         key=lambda m: (m["centrality"] or 0.0, m["unique_id"]),
-    )["unique_id"]
+    )["name"]
+    requests = {
+        "search": ("search_models", {"query": "revenue customer order", "limit": 10}),
+        "capsule": (
+            "get_context_capsule",
+            {"task": "debug failing test on revenue model", "token_budget": 8000},
+        ),
+        "lineage": ("get_lineage", {"model_name": central, "depth": 3}),
+        "patterns": ("get_project_patterns", {}),
+    }
     ops = {
-        "search": lambda: server.handle(
-            {"tool": "search_models", "args": {"query": "revenue customer order", "limit": 10}}
-        ),
-        "capsule": lambda: cache.capsule(
-            "debug failing test on revenue model", token_budget=8000
-        ),
-        "lineage": lambda: cache.lineage(central, depth=3),
-        "patterns": lambda: cache.patterns(),
+        name: (lambda tool=tool, args=args: server.handle({"tool": tool, "args": args}))
+        for name, (tool, args) in requests.items()
     }
     out = {}
     for name, fn in ops.items():
-        fn()  # warm
+        warm = fn()
+        if warm["status"] != "ok":
+            raise RuntimeError(f"latency op {name} failed: {warm['result']}")
         times = []
         for _ in range(LATENCY_ROUNDS):
             t0 = time.perf_counter()

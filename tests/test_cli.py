@@ -59,6 +59,22 @@ def test_cli_search_and_discover(capsys):
 
 
 @pytest.mark.usefixtures("spark")
+def test_cli_capsule_lineage_impact_answer_like_the_server(capsys):
+    """The CLI answers from the same snapshot as the tool server: its
+    capsule, lineage and impact equal the recorded server answers."""
+    with open(os.path.join(os.path.dirname(MANIFEST), "serving_golden.json")) as f:
+        golden = {k: v["result"] for k, v in json.load(f).items()}
+    cap = _run(capsys, "capsule", "--manifest", MANIFEST, "debug failing test on orders")
+    assert cap == golden["capsule_search"]
+    lin = _run(capsys, "lineage", "--manifest", MANIFEST, "stg_orders", "--depth", "3")
+    assert lin == golden["lineage_both"]["lineage"]
+    imp = _run(capsys, "impact", "--manifest", MANIFEST, "stg_orders")
+    assert imp == golden["impact_stg_orders"]
+    assert main(["impact", "--manifest", MANIFEST, "no_such_model"]) == 1
+    assert "model not found" in json.loads(capsys.readouterr().out)["error"]
+
+
+@pytest.mark.usefixtures("spark")
 def test_cli_stats_project_shape(capsys):
     out = _run(capsys, "stats", "--manifest", MANIFEST)
     assert out["models"] == 5 and out["sources"] == 3 and out["tests"] == 5

@@ -6,8 +6,9 @@ DataFrame consumer first reads it. Pinned here: repeated refreshes keep
 every search table one flat ``LocalRelation`` and drop the old index; a
 warm build, refresh and served search send no py4j command; every table
 read lazily holds the rows of an eagerly built index (also across
-``save``/``load`` and ``cache``); and a malformed row still fails the
-build or refresh call itself.
+``save``/``load`` and ``cache``); a malformed row still fails the
+build or refresh call itself, and a table's first read verifies no row
+again.
 """
 
 from __future__ import annotations
@@ -117,6 +118,28 @@ def test_every_table_reads_the_rows_of_an_eager_build(spark, tmp_path):
     for t in TABLES:
         assert _rows(getattr(twice, t)) == want[t], ("cached", t)
     _assert_same_snapshot(twice.local(), LocalIndexCache.from_index(twice))
+
+
+def test_first_frame_reads_verify_no_row_again(spark, tmp_path, monkeypatch):
+    """``build`` and ``refresh`` verify their rows; a table's first
+    DataFrame read only converts the rows it holds."""
+    from ariadne_dbt_spark import session
+    from ariadne_dbt_spark.ingest import indexer
+
+    built = AriadneIndex.build(spark, MANIFEST)
+    refreshed = built.refresh(_write(tmp_path, _modified(_fixture())))
+    real, calls = session.verify_rows, []
+
+    def spy(rows, schema):
+        calls.append(schema)
+        return real(rows, schema)
+
+    monkeypatch.setattr(session, "verify_rows", spy)
+    monkeypatch.setattr(indexer, "verify_rows", spy)
+    for idx in (built, refreshed):
+        for t in TABLES:
+            getattr(idx, t)
+    assert calls == []
 
 
 @pytest.mark.parametrize("call", ["build", "refresh"])

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from ariadne_dbt_spark.operators.graph import DOWNSTREAM, UPSTREAM, bfs, neighbors
 from ariadne_dbt_spark.operators.lineage import (
-    get_impact_analysis,
     get_lineage,
     high_centrality_models,
     source_dependencies,
@@ -64,17 +63,17 @@ def test_lineage_enrichment(index):
 
 
 def test_impact_analysis(index):
-    imp = get_impact_analysis(index, STG_O, depth=5)
+    imp = index.local().impact(STG_O, depth=5)
     assert FCT in imp["affected_models"]
     assert DIM in imp["affected_models"]
     assert "exposure.webshop.orders_dashboard" in imp["affected_exposures"]
     assert imp["risk"] == "high"  # exposure in blast radius
-    # tests on affected models are picked up via the semi-join
+    # tests on affected models are picked up
     assert any("unique_fct_orders" in t for t in imp["affected_tests"])
 
 
 def test_impact_low_risk(index):
-    imp = get_impact_analysis(index, DIM, depth=5)
+    imp = index.local().impact(DIM, depth=5)
     assert imp["affected_models"] == []
     assert imp["risk"] == "high"  # still hits the dashboard exposure
 

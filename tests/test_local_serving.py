@@ -1,21 +1,44 @@
-"""The driver-local serving path (LocalIndexCache) must reproduce the
-DataFrame operators' results exactly — it is the latency mitigation for
-the reference's interactive P95 targets (BASELINE.md), so its semantics
-are pinned here against the Spark path on the fixture index."""
+"""The driver-local snapshot (LocalIndexCache) is the one serving
+implementation: the ToolServer and the CLI answer search, capsule,
+discover, lineage, impact and model details from it. Pinned here on the
+fixture index: search, lineage and patterns equal their DataFrame twins
+(kept as the batch path and as these references), and every served
+answer equals the
+recorded ``ToolServer.handle`` results in fixtures/serving_golden.json
+(recorded while the DataFrame implementations served those tools)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
-from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
+from ariadne_dbt_spark.config import EngineConfig
 from ariadne_dbt_spark.operators.lineage import get_lineage
 from ariadne_dbt_spark.operators.model_search import search_models
 from ariadne_dbt_spark.operators.patterns import extract_patterns
+from ariadne_dbt_spark.server import ToolServer
+
+from conftest import FIXTURES, MANIFEST
+
+with open(os.path.join(FIXTURES, "serving_golden.json")) as _f:
+    #: case name → {tool, args, status, result} of one ToolServer.handle call
+    GOLDEN = json.load(_f)
 
 
 @pytest.fixture(scope="module")
 def cache(index):
     return index.local()
+
+
+def _golden(tool: str) -> list[dict]:
+    return [c for c in GOLDEN.values() if c["tool"] == tool]
+
+
+def _plain(obj):
+    """``obj`` as the JSON the server writes (tuples become lists)."""
+    return json.loads(json.dumps(obj, default=str))
 
 
 def test_local_search_matches_spark(index, cache):
@@ -32,47 +55,27 @@ def test_local_search_matches_spark(index, cache):
 
 
 def test_local_lineage_matches_spark(index, cache):
+    """All six columns; the start reaches the exposure at distance 2,
+    which is named and layered like the DataFrame enrichment does."""
     mid = "model.webshop.stg_orders"
-    spark_rows = [
-        (r.unique_id, r.distance, r.relationship)
-        for r in get_lineage(index, mid, depth=3).collect()
-    ]
-    local_rows = [
-        (r["unique_id"], r["distance"], r["relationship"])
-        for r in cache.lineage(mid, depth=3)
-    ]
-    assert spark_rows == local_rows
+    for direction in ("both", "upstream", "downstream"):
+        lin = get_lineage(index, mid, depth=3, direction=direction)
+        spark_rows = [r.asDict() for r in lin.collect()]
+        local_rows = cache.lineage(mid, depth=3, direction=direction)
+        assert spark_rows == local_rows, direction
+    (exposure,) = [r for r in local_rows if r["kind"] == "exposure"]
+    assert (exposure["name"], exposure["layer"]) == ("orders_dashboard", "exposure")
 
 
 def test_local_patterns_match_spark(index, cache):
-    sp = extract_patterns(index)
-    lo = cache.patterns()
-    for key in (
-        "models_per_layer", "materializations", "examples", "naming",
-        "coverage", "top_tags", "best_tested",
-    ):
-        assert lo[key] == sp[key], key
-    assert lo["stats"] == {
-        k: sp["stats"][k]
-        for k in ("models", "sources", "tests", "macros", "exposures", "columns")
-    }
+    assert cache.patterns() == extract_patterns(index)
 
 
-def test_local_capsule_matches_spark(index, cache):
-    task = "debug failing test on orders"
-    sp = CapsuleBuilder(index).build(task, token_budget=8000).to_dict()
-    lo = cache.capsule(task, token_budget=8000)
-    assert lo["intent"] == sp["intent"]
-    assert lo["confidence"] == sp["confidence"]
-    for section in ("pivots", "upstream", "downstream"):
-        assert [x["unique_id"] for x in lo[section]] == [
-            x["unique_id"] for x in sp[section]
-        ], section
-    assert [t["unique_id"] for t in lo["tests"]] == [t["unique_id"] for t in sp["tests"]]
-    assert lo["similar_models"] == sp["similar_models"]
-    assert [s["unique_id"] for s in lo["sources"]] == [
-        s["unique_id"] for s in sp["sources"]
-    ]
+def test_local_capsule_matches_spark(cache):
+    cases = _golden("get_context_capsule")
+    assert len(cases) >= 4
+    for case in cases:
+        assert _plain(cache.capsule(**case["args"])) == case["result"], case["args"]
 
 
 def test_local_capsule_respects_budget(cache):
@@ -80,16 +83,41 @@ def test_local_capsule_respects_budget(cache):
     assert cap["token_estimate"] <= 1.2 * 2000  # reference invariant
 
 
-def test_local_discover_matches_spark(index, cache):
-    for kwargs in (
-        {"task": "debug revenue order totals"},
-        {"task": "add a column", "focus_model": "fct_orders"},
-        {"task": "explore payments", "entry_models": ["stg_payments"], "limit": 10},
-    ):
-        task = kwargs.pop("task")
-        spark_rows = CapsuleBuilder(index).discover(task, **kwargs)
-        local_rows = cache.discover(task, **kwargs)
-        assert local_rows == spark_rows
+def test_local_discover_matches_spark(cache):
+    cases = _golden("discover_models")
+    assert len(cases) >= 4
+    for case in cases:
+        assert cache.discover(**case["args"]) == case["result"]["models"], case["args"]
+
+
+def test_served_tools_match_golden(index):
+    """Every recorded case returns exactly its recorded result through
+    ``ToolServer.handle``. An unknown lineage direction is still an
+    error; its text now names the bad direction."""
+    srv = ToolServer(index)
+    for name, case in GOLDEN.items():
+        resp = srv.handle({"tool": case["tool"], "args": case["args"]})
+        assert resp["status"] == case["status"], name
+        if case["status"] == "ok":
+            assert _plain(resp["result"]) == case["result"], name
+    bad = srv.handle({"tool": "get_lineage", "args": GOLDEN["lineage_bad_direction"]["args"]})
+    assert "sideways" in bad["result"]["error"]
+
+
+def test_local_capsule_follows_the_index_config(spark):
+    """The snapshot's capsule and discover take the pivot cap, the token
+    budget, the intent depths and the discover cap from the index
+    config, as the DataFrame capsule did."""
+    from ariadne_dbt_spark.ingest.indexer import AriadneIndex
+
+    cfg = EngineConfig(max_pivots=1, token_budget=3000, discover_limit=3,
+                       intent_depths={"debug": (0, 0)})
+    snap = AriadneIndex.build(spark, MANIFEST, config=cfg).local()
+    cap = snap.capsule("debug failing test on orders")
+    assert len(cap["pivots"]) == 1 and cap["token_budget"] == 3000
+    assert cap["upstream"] == [] and cap["downstream"] == []
+    assert snap.capsule("debug orders", token_budget=500)["token_budget"] == 500
+    assert len(snap.discover("debug revenue order totals", limit=40)) == 3
 
 
 def _tie_manifest(n_tied: int = 60, n_strong: int = 5) -> dict:

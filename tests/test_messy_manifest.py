@@ -136,7 +136,6 @@ def test_messy_edges_all_ref_shapes(messy_index):
 
 def test_messy_serving_surface(messy_index):
     """search → lineage → capsule all run over the messy index."""
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
     from ariadne_dbt_spark.operators.lineage import get_lineage
     from ariadne_dbt_spark.operators.model_search import search_models
 
@@ -146,9 +145,8 @@ def test_messy_serving_surface(messy_index):
         messy_index, "model.proj.m_299", direction="upstream", depth=5
     ).collect()
     assert lin  # chain resolves through mixed ref shapes
-    cap = CapsuleBuilder(messy_index).build("debug m_100", token_budget=4000)
-    d = cap.to_dict()
-    assert d["pivots"] and d["token_estimate"] <= 4000
+    cap = messy_index.local().capsule("debug m_100", token_budget=4000)
+    assert cap["pivots"] and cap["token_estimate"] <= 4000
 
 
 def test_messy_refresh_noop_delta(messy_index, spark, tmp_path_factory):

@@ -1,18 +1,10 @@
 """Hybrid search contracts (SURVEY §5 / reference tests/test_search.py):
-relevance, limits, exclusion, path/column resolution, detail joins."""
+relevance, limits, exclusion, path/column resolution, and the detail
+lookups the served tools make on the driver-local snapshot."""
 
 from __future__ import annotations
 
-from ariadne_dbt_spark.operators.model_search import (
-    columns_with_tests,
-    coverage_stats,
-    direct_sources,
-    find_by_column,
-    get_model_by_name,
-    macros_used,
-    resolve_paths,
-    search_models,
-)
+from ariadne_dbt_spark.operators.model_search import find_by_column, search_models
 
 FCT = "model.webshop.fct_orders"
 
@@ -52,12 +44,11 @@ def test_like_fallback(index):
 
 
 def test_point_lookup_case_insensitive(index):
-    assert get_model_by_name(index, "FCT_ORDERS").count() == 1
+    assert index.local().by_name("FCT_ORDERS") == [FCT]
 
 
 def test_resolve_paths(index):
-    uids = resolve_paths(
-        index,
+    uids = index.local().resolve_paths(
         ["models/marts/fct_orders.sql", "models/schema.yml", "stg_orders"],
     )
     assert uids == [FCT, "model.webshop.stg_orders"]
@@ -70,7 +61,7 @@ def test_find_by_column(index):
 
 
 def test_columns_with_tests(index):
-    cols = {r.name: list(r.test_types) for r in columns_with_tests(index, FCT).collect()}
+    cols = {c["name"]: c["test_types"] for c in index.local().columns_with_tests(FCT)}
     assert sorted(cols["order_id"]) == ["not_null", "unique"]
     assert cols["status"] == ["accepted_values"]
     assert cols["paid_amount"] == []
@@ -78,16 +69,16 @@ def test_columns_with_tests(index):
 
 def test_macro_containment_join(index, spark):
     # no model uses the macro in the fixture → empty
-    assert macros_used(index, FCT).count() == 0
+    assert index.local().macros_used(FCT) == []
 
 
 def test_direct_sources(index):
-    src = {r.source_name for r in direct_sources(index, "model.webshop.stg_orders").collect()}
+    src = {s["source_name"] for s in index.local().direct_sources("model.webshop.stg_orders")}
     assert src == {"raw"}
 
 
 def test_coverage_ratio(index):
-    cov = coverage_stats(index, FCT)
+    cov = index.local().coverage(FCT)
     assert cov["total_columns"] == 6
     assert cov["tested_columns"] == 3  # order_id, status, customer_id
     assert cov["coverage_pct"] == 50.0

@@ -1,8 +1,8 @@
-"""The served search path: ``ToolServer.search_models`` answers from the
-index's driver-local snapshot, and ``AriadneIndex.refresh`` builds that
-snapshot from its rows instead of collecting the refreshed tables back
-from the JVM.
-Pinned here: neither call runs a Spark job, the refreshed snapshot equals
+"""The served path: ``ToolServer`` answers search, capsule, discover,
+lineage, impact and model details from the index's driver-local
+snapshot, and ``AriadneIndex.refresh`` builds that snapshot from its rows
+instead of collecting the refreshed tables back from the JVM.
+Pinned here: none of these calls runs a Spark job, the refreshed snapshot equals
 a collected one table by table, and the served hits equal the DataFrame
 ``search_models`` (the batch path) on the refreshed index."""
 
@@ -139,6 +139,21 @@ def test_served_search_and_refresh_run_no_spark_job(spark, tmp_path):
         assert resp["status"] == "ok", resp
         assert jobs == 0, req
     assert resp["result"]["results"]
+    task = "debug failing test on orders"
+    for tool, args in (
+        ("get_context_capsule", {"task": task}),
+        ("get_context_capsule", {"task": task, "focus_model": "fct_orders"}),
+        ("discover_models", {"task": task, "entry_paths": ["models/marts/fct_orders.sql"]}),
+        ("get_lineage", {"model_name": "stg_orders", "depth": 3}),
+        ("get_impact_analysis", {"model_name": "stg_orders"}),
+        ("get_model_details", {"model_name": "fct_orders"}),
+        ("get_model_details", {"model_name": "no_such_model"}),
+    ):
+        req = {"tool": tool, "args": args}
+        resp, jobs = _count_jobs(spark, lambda req=req: srv.handle(req))
+        assert resp["status"] == "ok", resp
+        assert jobs == 0, req
+    assert "error" in resp["result"]
 
 
 def test_project_patterns_are_computed_once_per_index(spark):
